@@ -22,9 +22,6 @@ import graft.operators._
   */
 object Pipeline {
 
-  /** Reference provider dims (`load_skill_vectors_pg.py:10-13`). */
-  val ProviderDims: Map[String, Int] = Map("openai" -> 1536, "gemini" -> 768)
-
   case class Config(
       dim: Int = 1536,
       k: Int = 10,               // MAX_SKILLS (skills_for_jobs.py:23)

@@ -40,12 +40,10 @@ object TextFunctions {
   def bpeTokenCount(text: Column): Column =
     size(regexp_extract_all(lower(text), lit(BpeTokenPattern), lit(0))).cast("long")
 
-  /** Mean token length, 0.0 for token-less text (ANSI-safe guard).
-    * Prefer the FromTokens form over a materialized token column in
-    * multi-feature projections — every `tokens(text)` reference re-runs the
-    * regex tokenizer (no CSE around higher-order functions). */
-  def avgTokenLen(text: Column): Column = avgTokenLenFromTokens(tokens(text))
-
+  /** Mean token length over a materialized token array, 0.0 for token-less
+    * text (ANSI-safe guard). Takes tokens, not text: every `tokens(text)`
+    * reference re-runs the regex tokenizer (no CSE around higher-order
+    * functions), so multi-feature projections tokenize once. */
   def avgTokenLenFromTokens(toks: Column): Column = {
     val n = size(toks)
     when(n === 0, lit(0.0d)).otherwise(
@@ -60,9 +58,6 @@ object TextFunctions {
   }
 
   /** Share of tokens found in `words`. */
-  def stopwordRatio(text: Column, words: Seq[String]): Column =
-    stopwordRatioFromTokens(tokens(text), words)
-
   def stopwordRatioFromTokens(toks: Column, words: Seq[String]): Column = {
     val n = size(toks)
     when(n === 0, lit(0.0d)).otherwise(

@@ -80,7 +80,7 @@ object BinaryQuant {
     val qw = packWords(col(queryVecCol), dim)
     val q = broadcast(queries.select(
       col(queryIdCol) +: qw.zipWithIndex.map { case (c, i) => c.as(s"__q$i") }: _*))
-    val (keyCol, isString) = KnnJoin.keyColumn(corpus, idCol)
+    val keyCol = KnnJoin.keyColumn(corpus, idCol)
     val cw = packWords(col(vecCol), dim)
     val c = corpus.select(
       keyCol +: cw.zipWithIndex.map { case (cc, i) => cc.as(s"__c$i") }: _*)
@@ -88,7 +88,7 @@ object BinaryQuant {
       (0 until nw).map(i => col(s"__q$i")),
       (0 until nw).map(i => col(s"__c$i"))).cast("double")
     val cands = q.join(c).select(col(queryIdCol), dist.as("dist"), col("__cid"))
-    KnnJoin.topkOfCandidates(cands, queryIdCol, idCol, k, isString)
+    KnnJoin.topkOfCandidates(cands, queryIdCol, idCol, k)
   }
 
   /** DuckDB twin of [[packWord]] — same value via Σ bit_i·2^i (`<<` takes a
@@ -115,7 +115,7 @@ object BinaryQuant {
     val shortlist = hammingTopK(queries, queryIdCol, queryVecCol,
       corpus, idCol, vecCol, dim, k * overfetch)
       .select(col(queryIdCol), col(idCol))
-    val (keyCol, _) = KnnJoin.keyColumn(corpus, idCol)
+    val keyCol = KnnJoin.keyColumn(corpus, idCol)
     val vecs = corpus.select(keyCol.as(idCol), col(vecCol).as("__cvec"))
     val qv = queries.select(col(queryIdCol), col(queryVecCol).as("__qvec"))
     val w = org.apache.spark.sql.expressions.Window

@@ -29,7 +29,7 @@ object Bucketed {
     * layout (partitionBy + bucketBy compose): point probes then prune to
     * the touched directories — a static `IN` on the partition column
     * reaches the scan's PartitionFilters, so per-batch maintenance reads
-    * touched buckets instead of the table (the [[graft.operators.CcStar]]
+    * touched buckets instead of the table (the [[graft.operators.CcLabels]]
     * label store's read-side bound), while the bucketed layout inside
     * each directory keeps full-table aggregations on the keys
     * exchange-free (Spark coalesces same-bucket files across partition

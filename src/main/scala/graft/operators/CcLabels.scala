@@ -3,89 +3,24 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Connected components by alternating large-star / small-star rewiring
-  * (Kiveris et al., "Connected Components in MapReduce and Beyond",
-  * SoCC'14) — the edge-SKEW-robust alternative to [[Dedup
-  * .connectedComponents]]'s label propagation.
+/** Connected-component labels as a MAINTAINED artifact: the O(affected)
+  * ingest merge ([[incrementalComponents]]) and the versioned label store
+  * it persists into ([[initLabelStore]], [[applyBatch]], [[readLabels]],
+  * [[compactLabelStore]], [[ingestStream]]). The clustering itself is
+  * [[Dedup.connectedComponents]] everywhere: the merge re-resolves only
+  * the affected subgraph through it.
   *
-  * Why a second algorithm: min-label propagation (even with pointer
-  * doubling) keeps the full edge list live every round and funnels each
-  * hub's traffic through one reducer per round for as many rounds as it
-  * runs. Star rewiring instead REWRITES the graph: each round hangs every
-  * node's neighbors off the locally-smallest node, so a 10⁹-leaf star
-  * collapses toward its root in O(log n) rounds while the edge list
-  * physically shrinks toward one edge per non-root node — the property
-  * that makes it the published choice for adversarially-skewed pair
-  * graphs. Both algorithms are kept: propagation is cheaper on the
-  * shallow, sparse graphs real near-dup pipelines produce (measured — no
-  * per-round reorientation), star rewiring is the insurance for graphs
-  * with hub structure. `dedup_clusters_star` pins, via the SAME oracle as
-  * `dedup_clusters`, that they agree on the corpus.
-  *
-  * Per round: large-star connects every neighbor LARGER than u to u's
-  * minimum-so-far (cuts chains under hubs without losing connectivity);
-  * small-star re-hangs the smaller-or-equal neighbors onto that minimum.
-  * Each is one groupBy-min plus one keyed join — two shuffles keyed on
-  * node id, no all-pairs anywhere; every frame is `localCheckpoint`ed so
-  * the iteration never re-plans its own history (the [[Dedup
-  * .connectedComponents]] lineage lesson). Convergence when a full
-  * large+small cycle leaves the edge set unchanged: an order-independent
-  * (count, bit_xor of edge hashes) signature — one tiny aggregate per
-  * round, the driver never sees an edge — acts as the cheap detector, and
-  * the round it first matches is CONFIRMED by an exact set-equality job
-  * (distinct union count), so a signature collision between different
-  * edge sets can delay convergence by a round but can never terminate the
-  * loop on wrong labels. The confirmation costs one extra shuffle over
-  * 2·|edges| rows exactly once, on the terminal round, when the edge list
-  * has already collapsed toward one edge per non-root node.
-  *
-  * Output contract matches [[Dedup.connectedComponents]]: (idCol,
-  * cluster_id) over ALL of `nodes`, cluster id = the component's smallest
-  * node id, singletons labeled with themselves. */
-object CcStar {
-
-  def connectedComponents(edges: DataFrame, nodes: DataFrame, idCol: String,
-      maxIter: Int = 25): DataFrame = {
-    require(maxIter > 0, s"maxIter must be positive, got $maxIter")
-    var e = edges.select(col("a_id").as("__u"), col("b_id").as("__v"))
-      .filter(col("__u") =!= col("__v")).distinct().localCheckpoint()
-    var prevSig: (Long, Long) = null
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIter) {
-      val prev = e
-      e = smallStar(largeStar(e)).localCheckpoint()
-      val row = e.agg(count(lit(1)),
-        coalesce(expr("bit_xor(xxhash64(__u, __v))"), lit(0L))).head()
-      val sig = (row.getLong(0), row.getLong(1))
-      // Signature match is necessary but (with 2^-64-ish probability) not
-      // sufficient — confirm set equality exactly before declaring
-      // convergence: both frames are distinct row sets with equal counts
-      // (the signature carries the count), so |prev ∪ e| == |e| ⇔ equal.
-      converged = sig == prevSig &&
-        prev.unionAll(e).distinct().count() == row.getLong(0)
-      prevSig = sig
-      i += 1
-    }
-    if (!converged) throw new IllegalStateException(
-      s"CcStar: not converged after $maxIter rounds — raise maxIter")
-    // Converged ⇒ e is a forest of depth-1 stars (child → root, root < child):
-    // child labels come off the edges, roots and singletons label themselves.
-    val labels = e.select(col("__u").as("__id"), col("__v").as("__label"))
-      .unionAll(e.select(col("__v").as("__id"), col("__v").as("__label")))
-      .groupBy(col("__id")).agg(min(col("__label")).as("__label"))
-    nodes.select(col(idCol).as("__id"))
-      .join(labels, Seq("__id"), "left")
-      .select(col("__id").as(idCol),
-        coalesce(col("__label"), col("__id")).as("cluster_id"))
-  }
+  * Label contract (shared with [[Dedup.connectedComponents]]): (idCol,
+  * cluster_id) over ALL nodes, cluster id = the component's smallest node
+  * id, singletons labeled with themselves. */
+object CcLabels {
 
   /** O(affected) label MAINTENANCE under ingest — connected components as
     * a stored artifact with a delta verb, not a per-batch global job
     * (re-running corpus-wide CC per crawl batch is the scale pain the
-    * star rounds themselves can't fix). Given `storedLabels` (idCol,
+    * clustering algorithm itself can't fix). Given `storedLabels` (idCol,
     * cluster_id over the indexed corpus; cluster id = component min id —
-    * [[connectedComponents]]'s contract), the batch's `deltaNodes`, and
+    * the label contract above), the batch's `deltaNodes`, and
     * `newPairs` = EVERY new edge incident to the delta (delta-vs-corpus +
     * delta-internal; base-base pairs can't appear on ingest, so the
     * stored labels already carry all other connectivity), returns the
@@ -96,11 +31,12 @@ object CcStar {
     *    verbatim (ingest only ADDS edges — components never split, and an
     *    untouched component's min id can't change);
     *  - the AFFECTED subgraph — members of every stored component some
-    *    new edge reaches, plus the delta — re-resolves via the star
-    *    rounds over (member → stored-label star edges) ∪ newPairs: the
-    *    star edges reproduce each old component's connectivity exactly
-    *    (depth-1, through its min), so merged components re-label to the
-    *    min of mins, and purely-new components label among themselves.
+    *    new edge reaches, plus the delta — re-resolves through
+    *    [[Dedup.connectedComponents]] over (member → stored-label star
+    *    edges) ∪ newPairs: the star edges reproduce each old component's
+    *    connectivity exactly (depth-1, through its min), so merged
+    *    components re-label to the min of mins, and purely-new components
+    *    label among themselves.
     *
     * Work is bounded by |delta| + |members of affected components| — the
     * probes into the stored table are semi-joins on its keys, never a
@@ -134,7 +70,7 @@ object CcStar {
       .join(storedLabels.select(col(idCol).as("__d")), Seq("__d"), "left_semi")
       .limit(1).count()
     require(clash == 0L,
-      "CcStar.incrementalComponents: the batch re-ingests ids the stored " +
+      "CcLabels.incrementalComponents: the batch re-ingests ids the stored " +
         "label table already holds — the merge would emit duplicate " +
         "labels; dedup the batch against the store (or rebuild) first")
     val pairs = newPairs.select(col("a_id"), col("b_id")).localCheckpoint()
@@ -149,7 +85,7 @@ object CcStar {
       .select(col(idCol).as("a_id"), col("cluster_id").as("b_id"))
     val subNodes = members.select(col(idCol))
       .unionAll(deltaNodes.select(col(idCol))).distinct()
-    val relabeled = connectedComponents(
+    val relabeled = Dedup.connectedComponents(
       starEdges.unionAll(pairs), subNodes, idCol, maxIter)
     (affected, relabeled)
   }
@@ -263,7 +199,7 @@ object CcStar {
       if (maxVer > 0L) throw new IllegalStateException(
         s"cc-applied marker missing at $p but the label store already " +
           s"holds versions up to $maxVer — a replayed batch could not be " +
-          "told from a new one; restore the marker (CcStar.writeApplied " +
+          "told from a new one; restore the marker (CcLabels.writeApplied " +
           "with the true last applied batchId) or compact and rebase")
       (-1L, 0L)
     }
@@ -284,7 +220,7 @@ object CcStar {
     try out.write(s"$batchId $ver".getBytes("UTF-8")) finally out.close()
     if (f.exists(p)) f.delete(p, false)
     if (!f.rename(tmp, p))
-      sys.error(s"CcStar.writeApplied: rename $tmp -> $p failed")
+      sys.error(s"CcLabels.writeApplied: rename $tmp -> $p failed")
   }
 
   /** Create the maintained store from a full (idCol, cluster_id) labeling:
@@ -389,7 +325,7 @@ object CcStar {
         .join(deltaIds, Seq(idCol), "left_semi")
         .limit(1).count()
       require(clash == 0L,
-        "CcStar.applyBatch: the batch re-ingests ids the stored label " +
+        "CcLabels.applyBatch: the batch re-ingests ids the stored label " +
           "table already holds — the merge would emit duplicate labels; " +
           "dedup the batch against the store (or rebuild) first")
       val (_, members) = storeProbes(spark, labelTable, idCol, numBuckets,
@@ -399,7 +335,7 @@ object CcStar {
         .select(col(idCol).as("a_id"), col("cluster_id").as("b_id"))
       val subNodes = mem.select(col(idCol))
         .unionAll(deltaIds.select(col(idCol))).distinct()
-      val relabeled = connectedComponents(
+      val relabeled = Dedup.connectedComponents(
         starEdges.unionAll(pairs), subNodes, idCol, maxIter = 25)
       val rows = relabeled
         .select(col(idCol), col("cluster_id"), lit(newVer).as(VerCol))
@@ -465,32 +401,4 @@ object CcStar {
       }
       .outputMode("append")
       .start()
-
-  /** Large-star: per node u over the symmetrized neighborhood, m =
-    * min(N(u) ∪ {u}); emit (v, m) for every STRICTLY LARGER neighbor
-    * v > u. Large neighbors of a hub re-hang onto its minimum in one
-    * round; edges between small nodes survive via the symmetric view. */
-  private def largeStar(e: DataFrame): DataFrame = {
-    val sym = e.unionAll(e.select(col("__v").as("__u"), col("__u").as("__v")))
-    val m = sym.groupBy(col("__u")).agg(min(col("__v")).as("__mn"))
-      .select(col("__u"), least(col("__u"), col("__mn")).as("__m"))
-    sym.join(m, Seq("__u"))
-      .filter(col("__v") > col("__u"))
-      .select(col("__v").as("__u"), col("__m").as("__v"))
-      .filter(col("__u") =!= col("__v"))
-      .distinct()
-  }
-
-  /** Small-star: orient every edge (bigger → smaller), m = min of u's
-    * smaller neighborhood; re-hang those neighbors AND u itself onto m. */
-  private def smallStar(e: DataFrame): DataFrame = {
-    val or = e.select(greatest(col("__u"), col("__v")).as("__u"),
-      least(col("__u"), col("__v")).as("__v"))
-    val m = or.groupBy(col("__u")).agg(min(col("__v")).as("__m"))
-    or.join(m, Seq("__u"))
-      .filter(col("__v") =!= col("__m"))
-      .select(col("__v").as("__u"), col("__m").as("__v"))
-      .unionAll(m.select(col("__u"), col("__m").as("__v")))
-      .distinct()
-  }
 }

@@ -43,7 +43,7 @@ object Contrastive {
     val a = broadcast(anchors.select(
       col(anchorIdCol), col(anchorVecCol).as("__avec"),
       col(anchorLabelCol).as("__albl")))
-    val (keyCol, isString) = KnnJoin.keyColumn(corpus, idCol)
+    val keyCol = KnnJoin.keyColumn(corpus, idCol)
     val c = corpus.select(keyCol, col(vecCol).as("__cvec"),
       col(labelCol).as("__clbl"))
     val cands = a.join(c,
@@ -51,7 +51,7 @@ object Contrastive {
       .select(col(anchorIdCol),
         metric.dist(col("__avec"), col("__cvec")).as("dist"),
         col("__cid"))
-    val topk = KnnJoin.topkOfCandidates(cands, anchorIdCol, idCol, k, isString)
+    val topk = KnnJoin.topkOfCandidates(cands, anchorIdCol, idCol, k)
     topk.join(corpus.select(keyCol.as(idCol), col(labelCol)), Seq(idCol))
       .select(col(anchorIdCol), col(idCol), col(labelCol), col("rank"),
         col("dist"))

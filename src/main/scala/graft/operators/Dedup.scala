@@ -127,16 +127,31 @@ object Dedup {
     sh.groupBy(col(idCol))
       .agg(collect_list(col("__gh")).as("__g"), count(lit(1)).as("__m"))
 
-  /** Exact Jaccard verification of a candidate pair set by set intersection:
-    * join each side's per-doc hash array and count the overlap with one
-    * `array_intersect` per pair. The full inverted index never self-joins:
-    * verification cost is |candidates| × O(gram set), independent of
-    * posting-list skew. The per-doc set frame is O(corpus) rows — at the
-    * tested scale factors it broadcasts, while at 100 TB these joins
-    * (correctly) fall back to shuffled joins keyed on a_id/b_id, each side
-    * shuffling |candidates| + |corpus| rows once: the intended shape either
-    * way. Output: (a_id, b_id, shared, jaccard) filtered to
-    * jaccard ≥ minJaccard. */
+  /** Exact set intersection of a candidate pair set: join each side's
+    * per-doc hash array and count the overlap with one `array_intersect`
+    * per pair. The full inverted index never self-joins: verification cost
+    * is |candidates| × O(gram set), independent of posting-list skew. The
+    * join strategy is left to the optimizer: at the tested scale factors
+    * the O(corpus)-row set frame is small enough to broadcast, while at
+    * 100 TB these joins fall back to shuffled joins keyed on a_id/b_id,
+    * each side shuffling |candidates| + |corpus| rows once — the intended
+    * shape either way. `setsA`/`setsB` differ only on the incremental path
+    * (a delta verified against a stored corpus index). Output: (a_id,
+    * b_id, shared, __ma, __mb), the set sizes left for the caller's
+    * threshold. */
+  private def intersectSets(setsA: DataFrame, setsB: DataFrame,
+      cands: DataFrame): DataFrame =
+    cands
+      .join(setsA.select(col(setsA.columns.head).as("a_id"), col("__g").as("__ga"),
+        col("__m").as("__ma")), "a_id")
+      .join(setsB.select(col(setsB.columns.head).as("b_id"), col("__g").as("__gb"),
+        col("__m").as("__mb")), "b_id")
+      .select(col("a_id"), col("b_id"),
+        size(array_intersect(col("__ga"), col("__gb"))).cast("long").as("shared"),
+        col("__ma"), col("__mb"))
+
+  /** Exact Jaccard verification over [[intersectSets]]. Output: (a_id, b_id,
+    * shared, jaccard) filtered to jaccard ≥ minJaccard. */
   private def verifyByIntersect(sets: DataFrame, cands: DataFrame,
       minJaccard: Double): DataFrame =
     verifyByIntersect2(sets, sets, cands, minJaccard)
@@ -145,12 +160,7 @@ object Dedup {
     * incremental path verifies a delta against a stored corpus index). */
   private[graft] def verifyByIntersect2(setsA: DataFrame, setsB: DataFrame,
       cands: DataFrame, minJaccard: Double): DataFrame =
-    cands
-      .join(setsA.select(col(setsA.columns.head).as("a_id"), col("__g").as("__ga"),
-        col("__m").as("__ma")).hint("shuffle_hash"), "a_id")
-      .join(setsB.select(col(setsB.columns.head).as("b_id"), col("__g").as("__gb"),
-        col("__m").as("__mb")).hint("shuffle_hash"), "b_id")
-      .withColumn("shared", size(array_intersect(col("__ga"), col("__gb"))).cast("long"))
+    intersectSets(setsA, setsB, cands)
       .withColumn("__union", col("__ma") + col("__mb") - col("shared"))
       // Threshold FIRST, in ExactRound's integer predicate form (a long
       // compare). This matters because Catalyst inlines the filter into
@@ -172,6 +182,21 @@ object Dedup {
       // 2.6x on the LSH cosine path at sf0.1.
       .distinct()
 
+  /** One aggregation builds the df-rank-ordered per-doc hash array
+    * (idCol, __g, __m): the prefix is a slice of it, the set size its
+    * length, and the verification sets the very same arrays — no second
+    * pass over the inverted index. Caches-shared by the Jaccard,
+    * incremental Jaccard and containment joins (identical plan). */
+  private def orderedDocSets(sh: DataFrame, idCol: String): DataFrame = {
+    val dfc = sh.groupBy(col("__gh")).agg(count(lit(1)).as("__df"))
+    val ordered = sh.join(dfc, "__gh")
+      .groupBy(col(idCol))
+      .agg(sort_array(collect_list(struct(col("__df"), col("__gh")))).as("__o"))
+    Caches.cached(ordered.select(col(idCol),
+      transform(col("__o"), s => s.getField("__gh")).as("__g"),
+      size(col("__o")).as("__m")))
+  }
+
   /** Exact n-gram Jaccard similarity join with prefix filtering
     * (AllPairs/PPJoin, Bayardo WWW'07 / Xiao WWW'08): order each doc's
     * shingles by GLOBAL document frequency (rarest first, ties on the hash),
@@ -190,21 +215,6 @@ object Dedup {
     * not a row_number window — no per-doc sort exchange; the prefix is a
     * `slice` of the sorted array. Output: (a_id, b_id, shared, jaccard) for
     * pairs with jaccard ≥ minJaccard, a_id < b_id. */
-  /** One aggregation builds the df-rank-ordered per-doc hash array
-    * (idCol, __g, __m): the prefix is a slice of it, the set size its
-    * length, and the verification sets the very same arrays — no second
-    * pass over the inverted index. Caches-shared by the Jaccard AND
-    * containment joins (identical plan). */
-  private def orderedDocSets(sh: DataFrame, idCol: String): DataFrame = {
-    val dfc = sh.groupBy(col("__gh")).agg(count(lit(1)).as("__df"))
-    val ordered = sh.join(dfc, "__gh")
-      .groupBy(col(idCol))
-      .agg(sort_array(collect_list(struct(col("__df"), col("__gh")))).as("__o"))
-    Caches.cached(ordered.select(col(idCol),
-      transform(col("__o"), s => s.getField("__gh")).as("__g"),
-      size(col("__o")).as("__m")))
-  }
-
   def jaccardJoin(df: DataFrame, idCol: String, textCol: String, n: Int,
       minJaccard: Double): DataFrame = {
     require(minJaccard > 0 && minJaccard <= 1, s"minJaccard $minJaccard outside (0, 1]")
@@ -259,17 +269,7 @@ object Dedup {
       .filter(col("__p") =!= col("__q"))
       .select(least(col("__p"), col("__q")).as("a_id"),
         greatest(col("__p"), col("__q")).as("b_id"))
-    cands
-      // shuffle_hash: same reasoning as [[verifyByIntersect2]] — the
-      // broadcast build of the per-doc gram arrays is near-serial and a
-      // small-SF statistics artifact; the at-scale shape is the shuffled
-      // join on the pair ids.
-      .join(docSets.select(col(idCol).as("a_id"), col("__g").as("__ga"),
-        col("__m").as("__ma")).hint("shuffle_hash"), "a_id")
-      .join(docSets.select(col(idCol).as("b_id"), col("__g").as("__gb"),
-        col("__m").as("__mb")).hint("shuffle_hash"), "b_id")
-      .withColumn("shared",
-        size(array_intersect(col("__ga"), col("__gb"))).cast("long"))
+    intersectSets(docSets, docSets, cands)
       .filter(graft.functions.ExactRound.round6GeLong(
         col("shared"), least(col("__ma"), col("__mb")), minContain))
       .withColumn("containment", graft.functions.ExactRound.ratioRound6PosLong(
@@ -287,15 +287,10 @@ object Dedup {
   val hashA: Seq[Long] = (1 to NumHashes).map(j => (1103515245L * j) % 1048573L + 1L)
   val hashB: Seq[Long] = (1 to NumHashes).map(j => (12345L + 2654435761L * j) % MinhashP)
 
-  /** MinHash signature per row: (idCol, sig array<long>[NumHashes]).
-    * Input must carry the hashed shingle column "__gh"; rows with no
-    * shingles are dropped (no signature to compute). */
-  def minhashSignatures(sh: DataFrame, idCol: String): DataFrame =
-    signaturesOfSets(gramSets(sh, idCol), idCol)
-
-  /** Signatures over an already-aggregated [[gramSets]] frame — shares the
-    * per-doc arrays with the verification step instead of re-aggregating the
-    * inverted index. */
+  /** MinHash signature per doc over an already-aggregated [[gramSets]]
+    * frame: (idCol, sig array<long>[NumHashes]) — shares the per-doc arrays
+    * with the verification step instead of re-aggregating the inverted
+    * index. */
   private def signaturesOfSets(sets: DataFrame, idCol: String): DataFrame = {
     val sigCols = (0 until NumHashes).map { j =>
       array_min(transform(col("__g"),
@@ -346,13 +341,7 @@ object Dedup {
     require(minJaccard > 0 && minJaccard <= 1, s"minJaccard $minJaccard outside (0, 1]")
     val sh = shingleHashes(df, idCol, textCol, n)
     val flags = df.select(col(idCol), isNew.as("__new"))
-    val dfc = sh.groupBy(col("__gh")).agg(count(lit(1)).as("__df"))
-    val ordered = sh.join(dfc, "__gh")
-      .groupBy(col(idCol))
-      .agg(sort_array(collect_list(struct(col("__df"), col("__gh")))).as("__o"))
-    val docSets = Caches.cached(ordered.select(col(idCol),
-      transform(col("__o"), s => s.getField("__gh")).as("__g"),
-      size(col("__o")).as("__m")))
+    val docSets = orderedDocSets(sh, idCol)
     val m = col("__m")
     val plen = (m - ceil(lit(minJaccard) * m) + 1).cast("int")
     val prefix = docSets.join(flags, Seq(idCol)).select(col(idCol), col("__new"), m,
@@ -389,10 +378,7 @@ object Dedup {
     * re-canonicalizes a plan that embeds all previous rounds plus the whole
     * pair pipeline (measured: ~2 s/round of pure planning at 477 nodes;
     * checkpointed: milliseconds). Nothing is ever collected to the driver;
-    * the driver only reads the per-round convergence flag. The
-    * large-star/small-star rewiring (Kiveris et al., SoCC'14) remains the
-    * further upgrade for edge-SKEWED graphs (a star of 10^9 leaves);
-    * doubling already handles adversarial depth. Output:
+    * only the per-round convergence flag is read back. Output:
     * (idCol, cluster_id). */
   def connectedComponents(edges: DataFrame, nodes: DataFrame, idCol: String,
       maxIter: Int = 25): DataFrame = {

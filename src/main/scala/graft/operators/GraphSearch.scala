@@ -231,7 +231,7 @@ object GraphSearch {
       .select(col("__qid").as(qId),
         metric.dist(col("__qv"), col("__cv")).as("dist"),
         col("__node").as("__cid"))
-    KnnJoin.topkOfCandidates(cands, qId, cId, k, isString = false)
+    KnnJoin.topkOfCandidates(cands, qId, cId, k)
   }
 
   /** Frontier partition target for a walk: ~4096 (query, node) rows per
@@ -308,7 +308,7 @@ object GraphSearch {
     val probes = IvfIndex.probeAssign(
       corpus.select(col(idCol).as("__src"), col(vecCol).as("__avec")),
       "__avec", model, nProbe, metric)
-    val (keyCol, isString) = KnnJoin.keyColumn(corpus, idCol)
+    val keyCol = KnnJoin.keyColumn(corpus, idCol)
     val cands = IvfIndex.assign(
       corpus.select(keyCol, col(vecCol).as("__cvec")),
       "__cid", "__cvec", model, metric)
@@ -316,7 +316,7 @@ object GraphSearch {
       .filter(col("__cid") =!= col("__src"))
       .select(col("__src"),
         metric.dist(col("__avec"), col("__cvec")).as("dist"), col("__cid"))
-    KnnJoin.topkOfCandidates(scored, "__src", "dst", k, isString)
+    KnnJoin.topkOfCandidates(scored, "__src", "dst", k)
       .select(col("__src").as("src"), col("dst"))
   }
 

@@ -346,7 +346,7 @@ object IvfIndex {
       .withColumn("__pick", row_number().over(wProbe))
       .filter(col("__pick") <= nProbe)
       .select(col(queryIdCol), col("__qvec"), col("list_id"))
-    val (keyCol, isString) = KnnJoin.keyColumn(indexed, idCol)
+    val keyCol = KnnJoin.keyColumn(indexed, idCol)
     val c = indexed.select(keyCol, col(vecCol).as("__cvec"), col("list_id"))
     val joined = broadcast(probes).join(c, "list_id")
     val live = excludeIds.map(Tombstones.excludeIds(joined, col("__cid"), _))
@@ -355,6 +355,6 @@ object IvfIndex {
       .select(col(queryIdCol),
         metric.dist(col("__qvec"), col("__cvec")).as("dist"),
         col("__cid"))
-    KnnJoin.topkOfCandidates(cands, queryIdCol, idCol, k, isString)
+    KnnJoin.topkOfCandidates(cands, queryIdCol, idCol, k)
   }
 }

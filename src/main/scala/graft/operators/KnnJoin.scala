@@ -1,7 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
-import org.apache.spark.sql.expressions.{Aggregator, Window}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.functions.VectorFunctions.Metric
@@ -12,15 +12,17 @@ import graft.functions.VectorFunctions.Metric
   * (`skills_for_jobs.py:416-433` fanning into the five `*_search` functions)
   * as one distributed join. Two physical forms, same results:
   *
-  *  - [[exactWindow]]: cross join → distance → `row_number()` window. Simple,
-  *    oracle-matched 1:1 against DuckDB SQL, but shuffles the full |Q|×|C|
-  *    product to rank it — fine for tests, wrong at 100 TB.
+  *  - [[exactWindow]]: cross join → distance → `row_number()` window, the
+  *    literal shape of the DuckDB oracle SQL. Nothing pins the query side,
+  *    so at scale the planner may pick a cartesian product — fine for
+  *    tests, wrong at 100 TB.
   *
   *  - [[exact]] (default): broadcast the small query side, compute distances
-  *    map-side, then reduce with a bounded-heap partial aggregate — each
-  *    executor keeps at most k candidates per query, so the shuffle is
-  *    |Q|×k×partitions instead of |Q|×|C|. This is the form that survives a
-  *    1000-executor corpus scan.
+  *    map-side, then rank with `row_number() ≤ k`, which plans as a
+  *    map-side WindowGroupLimit — each task keeps at most k candidates per
+  *    query before the exchange, so the shuffle is |Q|×k×partitions
+  *    instead of |Q|×|C|. This is the form that survives a 1000-executor
+  *    corpus scan.
   *
   * Ties break deterministically on (dist, id) in both forms and in the DuckDB
   * oracle, making rank order reproducible across engines. The id column keeps
@@ -36,69 +38,20 @@ import graft.functions.VectorFunctions.Metric
   * deliberate divergence (SURVEY.md §2.9 W3).
   *
   * Output: (queryIdCol, idCol, rank long 1..k, dist double). Corpus metadata
-  * columns are intentionally not carried through the heap — join them back on
-  * idCol after the top-k (k rows per query) instead of shipping them through
-  * the aggregation.
+  * columns are intentionally not carried through the ranking — join them
+  * back on idCol after the top-k (k rows per query) instead of shipping
+  * them through the shuffle.
   */
 object KnnJoin {
 
-  case class ScoredL(dist: Double, id: Long)
-  case class ScoredS(dist: Double, id: String)
-  case class BufL(items: Seq[ScoredL])
-  case class BufS(items: Seq[ScoredS])
-
-  /** Bounded-heap top-k accumulator: partial aggregation keeps ≤ k entries per
-    * (query, partition), which is what makes the reduce shuffle O(|Q|·k) —
-    * the batch analog of each vector store's `top_k=` parameter
-    * (`skills_for_jobs.py:76,101,130,150,165`). Amortized trim: the buffer
-    * grows to max(4k, 64) then is cut back to k, keeping reduce() O(1)
-    * amortized instead of sorting on every row. */
-  class TopKAggL(k: Int) extends Aggregator[ScoredL, BufL, Seq[ScoredL]] {
-    private val ord: Ordering[ScoredL] = Ordering.by(s => (s.dist, s.id))
-    private val slack = math.max(4 * k, 64)
-    def zero: BufL = BufL(Vector.empty)
-    def reduce(b: BufL, a: ScoredL): BufL = {
-      val items = b.items :+ a
-      if (items.size > slack) BufL(items.sorted(ord).take(k)) else BufL(items)
-    }
-    def merge(b1: BufL, b2: BufL): BufL = {
-      val items = b1.items ++ b2.items
-      if (items.size > k) BufL(items.sorted(ord).take(k)) else BufL(items)
-    }
-    def finish(r: BufL): Seq[ScoredL] = r.items.sorted(ord).take(k)
-    def bufferEncoder: Encoder[BufL] = Encoders.product[BufL]
-    def outputEncoder: Encoder[Seq[ScoredL]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[ScoredL]]()
-  }
-
-  /** String-keyed twin of [[TopKAggL]] — ties order lexically, matching the
-    * oracle's ORDER BY on a VARCHAR id. */
-  class TopKAggS(k: Int) extends Aggregator[ScoredS, BufS, Seq[ScoredS]] {
-    private val ord: Ordering[ScoredS] = Ordering.by(s => (s.dist, s.id))
-    private val slack = math.max(4 * k, 64)
-    def zero: BufS = BufS(Vector.empty)
-    def reduce(b: BufS, a: ScoredS): BufS = {
-      val items = b.items :+ a
-      if (items.size > slack) BufS(items.sorted(ord).take(k)) else BufS(items)
-    }
-    def merge(b1: BufS, b2: BufS): BufS = {
-      val items = b1.items ++ b2.items
-      if (items.size > k) BufS(items.sorted(ord).take(k)) else BufS(items)
-    }
-    def finish(r: BufS): Seq[ScoredS] = r.items.sorted(ord).take(k)
-    def bufferEncoder: Encoder[BufS] = Encoders.product[BufS]
-    def outputEncoder: Encoder[Seq[ScoredS]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[ScoredS]]()
-  }
-
-  /** Normalize the corpus id to a heap-supported key column. Integral types
-    * widen to long; strings pass through; anything else is a hard error
-    * (never a silent NULL-producing cast). */
-  private[operators] def keyColumn(corpus: DataFrame, idCol: String): (Column, Boolean) =
+  /** Normalize the corpus id to the ranking key column "__cid". Integral
+    * types widen to long; strings pass through; anything else is a hard
+    * error (never a silent NULL-producing cast). */
+  private[operators] def keyColumn(corpus: DataFrame, idCol: String): Column =
     corpus.schema(idCol).dataType match {
       case ByteType | ShortType | IntegerType | LongType =>
-        (col(idCol).cast(LongType).as("__cid"), false)
-      case StringType => (col(idCol).as("__cid"), true)
+        col(idCol).cast(LongType).as("__cid")
+      case StringType => col(idCol).as("__cid")
       case other => throw new IllegalArgumentException(
         s"KnnJoin: id column '$idCol' has unsupported type $other " +
           "(supported: integral types, string)")
@@ -106,26 +59,19 @@ object KnnJoin {
 
   /** Rank pre-scored candidates to the top `k` per query id (rank 1..k,
     * dist ascending, ties by id). `cands` must carry (queryIdCol, "__cid"
-    * key from [[keyColumn]], "dist"). Shared tail of [[exact]] and
-    * IvfIndex.search.
+    * key from [[keyColumn]], "dist"). Shared tail of [[exact]] and every
+    * index search.
     *
-    * r16 physical form (guide step 4 — no non-codegen operators in the hot
-    * path): `row_number() ≤ k` plans as Spark's WindowGroupLimit
+    * Physical form: `row_number() ≤ k` plans as Spark's WindowGroupLimit
     * (SPARK-37099, on since 3.5 for k below
     * `spark.sql.optimizer.windowGroupLimitThreshold` = 1000), which keeps
-    * a bounded PER-GROUP top-k heap on the MAP side of the exchange — the
-    * shuffle stays O(groups·partitions·k), the same bound the old
-    * ScalaUDAF bounded-heap aggregate had, but the rows stay native
-    * UnsafeRows end to end. The UDAF path measured 86 task-seconds on the
-    * sf0.1 edge build (object heaps per (group, partition), encoder
-    * round-trips, and ObjectHashAggregate's 128-key sort fallback); the
-    * window form removes all three, and its plans are `sameResult`-stable
-    * (the per-call UDAF instances never were). Ordering/ties are
-    * IDENTICAL: (dist, id) ascending, numeric or lexical by the id's own
-    * type — `isString` stays in the signature to document that contract
-    * at the call sites. */
+    * a bounded PER-GROUP top-k on the MAP side of the exchange — the
+    * shuffle stays O(groups·partitions·k) and the rows stay native
+    * UnsafeRows end to end, with no object aggregation buffers. Ties order
+    * by (dist, id) ascending, numeric or lexical by the id's own type —
+    * the same ORDER BY the oracle runs. */
   private[graft] def topkOfCandidates(cands: DataFrame, queryIdCol: String,
-      idCol: String, k: Int, isString: Boolean): DataFrame = {
+      idCol: String, k: Int): DataFrame = {
     // CONTRACT (r16 verdict note): the map-side WindowGroupLimit only
     // fires for k BELOW spark.sql.optimizer.windowGroupLimitThreshold
     // (default 1000). A caller passing k >= 1000 still gets correct rows
@@ -143,20 +89,20 @@ object KnnJoin {
         col("dist"))
   }
 
-  /** Scale-first exact k-NN: broadcast(queries) ⋈ corpus → map-side distance →
-    * bounded-heap aggregate per query id → posexplode to ranked rows. */
+  /** Scale-first exact k-NN: broadcast(queries) ⋈ corpus → map-side
+    * distance → [[topkOfCandidates]]' map-side WindowGroupLimit per query
+    * id → ranked rows. */
   def exact(
       queries: DataFrame, queryIdCol: String, queryVecCol: String,
       corpus: DataFrame, idCol: String, vecCol: String,
       k: Int, metric: Metric): DataFrame = {
     val q = broadcast(queries.select(col(queryIdCol), col(queryVecCol).as("__qvec")))
-    val (keyCol, isString) = keyColumn(corpus, idCol)
-    val c = corpus.select(keyCol, col(vecCol).as("__cvec"))
+    val c = corpus.select(keyColumn(corpus, idCol), col(vecCol).as("__cvec"))
     val cands = q.join(c)
       .select(col(queryIdCol),
         metric.dist(col("__qvec"), col("__cvec")).as("dist"),
         col("__cid"))
-    topkOfCandidates(cands, queryIdCol, idCol, k, isString)
+    topkOfCandidates(cands, queryIdCol, idCol, k)
   }
 
   /** Radius search: ALL corpus rows within `radius` of each query — the
@@ -184,8 +130,7 @@ object KnnJoin {
       corpus: DataFrame, idCol: String, vecCol: String,
       k: Int, metric: Metric): DataFrame = {
     val q = queries.select(col(queryIdCol), col(queryVecCol).as("__qvec"))
-    val (keyCol, _) = keyColumn(corpus, idCol)
-    val c = corpus.select(keyCol, col(vecCol).as("__cvec"))
+    val c = corpus.select(keyColumn(corpus, idCol), col(vecCol).as("__cvec"))
     val w = Window.partitionBy(col(queryIdCol)).orderBy(col("dist"), col("__cid"))
     q.crossJoin(c)
       .withColumn("dist", metric.dist(col("__qvec"), col("__cvec")))
@@ -205,9 +150,8 @@ object KnnJoin {
       k: Int, metric: Metric, overfetchFactor: Int = 10): DataFrame = {
     val over = exact(queries, queryIdCol, queryVecCol, corpus, idCol, vecCol,
       k * overfetchFactor, metric)
-    val (keyCol, _) = keyColumn(corpus, idCol)
     val withKey = over.join(
-      corpus.select(keyCol.as(idCol), col(dedupKeyCol)), Seq(idCol))
+      corpus.select(keyColumn(corpus, idCol).as(idCol), col(dedupKeyCol)), Seq(idCol))
     // D1: first-wins per (query, key) in rank order, then re-rank to k.
     val wKey = Window.partitionBy(col(queryIdCol), col(dedupKeyCol)).orderBy(col("rank"))
     val wRerank = Window.partitionBy(col(queryIdCol)).orderBy(col("rank"))

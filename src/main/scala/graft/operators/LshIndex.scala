@@ -216,7 +216,7 @@ object LshIndex {
         numTables, numPlanes))
     val candIds = qb.join(cb, Seq("tbl", "bucket"))
       .select(col(queryIdCol), col(idCol)).distinct()
-    val (keyCol, isString) = KnnJoin.keyColumn(corpus, idCol)
+    val keyCol = KnnJoin.keyColumn(corpus, idCol)
     val qv = queries.select(col(queryIdCol), col(queryVecCol).as("__qvec"))
     val cv = corpus.select(keyCol, col(vecCol).as("__cvec"))
     val cands = candIds
@@ -225,6 +225,6 @@ object LshIndex {
       .select(col(queryIdCol),
         L2.dist(col("__qvec"), col("__cvec")).as("dist"),
         col("__cid"))
-    KnnJoin.topkOfCandidates(cands, queryIdCol, idCol, k, isString)
+    KnnJoin.topkOfCandidates(cands, queryIdCol, idCol, k)
   }
 }

@@ -1,8 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Multimodal column plumbing (BASELINE.json north star): image/audio/video
   * as opaque `binary` payloads with a typed metadata struct, processed by
@@ -20,19 +19,6 @@ import org.apache.spark.sql.types._
   * `mapInPandas` with an arrow-batched UDF.)
   */
 object Multimodal {
-
-  /** Typed metadata carried beside every payload. */
-  val mediaMetaType: StructType = StructType(Seq(
-    StructField("media_type", StringType),   // image | audio | video
-    StructField("format", StringType),       // e.g. png, wav, mp4
-    StructField("n_bytes", LongType),
-    StructField("checksum", StringType)))    // md5 of payload
-
-  val imageFeatureType: StructType = StructType(Seq(
-    StructField("width", IntegerType),
-    StructField("height", IntegerType),
-    StructField("n_channels", IntegerType),
-    StructField("mean_luma", DoubleType)))
 
   /** Image decode: real codec for real images, deterministic stub otherwise.
     * PNG and JPEG payloads (recognized by magic bytes) decode through

@@ -51,7 +51,7 @@ object PageRank {
       vecCol: String, k: Int, metric: Metric = Cosine): DataFrame = {
     val a = broadcast(srcs.select(col(idCol).as("__src"),
       col(vecCol).as("__avec")))
-    val (keyCol, isString) = KnnJoin.keyColumn(corpus, idCol)
+    val keyCol = KnnJoin.keyColumn(corpus, idCol)
     // r16 (guide §2.5 "input skew"): the map side computes |srcs| distances
     // PER CORPUS ROW — compute is |srcs|× heavier than the scan bytes
     // suggest, and a small parquet corpus arrives as ONE split, serializing
@@ -66,7 +66,7 @@ object PageRank {
     val cands = a.join(c, col("__cid") =!= col("__src"))
       .select(col("__src"), metric.dist(col("__avec"), col("__cvec")).as("dist"),
         col("__cid"))
-    KnnJoin.topkOfCandidates(cands, "__src", "dst", k, isString)
+    KnnJoin.topkOfCandidates(cands, "__src", "dst", k)
       .select(col("__src").as("src"), col("dst"))
   }
 

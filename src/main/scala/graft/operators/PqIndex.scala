@@ -297,11 +297,11 @@ object PqIndex {
     val qv = col(queryVecCol).cast("array<double>")
     val q = broadcast(queries.select(col(queryIdCol),
       distTables(qv, model).as("__dt")))
-    val (keyCol, isString) = KnnJoin.keyColumn(encoded, idCol)
+    val keyCol = KnnJoin.keyColumn(encoded, idCol)
     val c = encoded.select(keyCol, col("codes").as("__codes"))
     val cands = q.join(c).select(col(queryIdCol),
       adcDist(col("__dt"), col("__codes")).as("dist"), col("__cid"))
-    KnnJoin.topkOfCandidates(cands, queryIdCol, idCol, k, isString)
+    KnnJoin.topkOfCandidates(cands, queryIdCol, idCol, k)
   }
 
   /** IVF-PQ (FAISS's IVFADC, Jégou et al. §V): the coarse quantizer prunes
@@ -357,7 +357,7 @@ object PqIndex {
     // pred before the code projection: the row prune lands at the scan,
     // ahead of every ADC lookup
     val base = pred.map(indexed.filter).getOrElse(indexed)
-    val (keyCol, isString) = KnnJoin.keyColumn(base, idCol)
+    val keyCol = KnnJoin.keyColumn(base, idCol)
     val c = base.select(keyCol, col("codes").as("__codes"), col("list_id"))
     val joined = broadcast(probes).join(c, "list_id")
     val liveRows = excludeIds.map(Tombstones.excludeIds(joined, col("__cid"), _))
@@ -365,7 +365,7 @@ object PqIndex {
     val cands = liveRows
       .select(col(queryIdCol),
         adcDist(col("__dt"), col("__codes")).as("dist"), col("__cid"))
-    KnnJoin.topkOfCandidates(cands, queryIdCol, idCol, k, isString)
+    KnnJoin.topkOfCandidates(cands, queryIdCol, idCol, k)
   }
 
   /** Code-assignment drift between two codebook fits — [[IvfIndex

@@ -70,7 +70,7 @@ object DedupQueries extends graft.QueryModule {
         // the VERSIONED store (base rows at __v=0): ingest appends only
         // relabeled rows and readers resolve latest-wins — the O(affected)
         // persistence the streaming face rides
-        graft.operators.CcStar.initLabelStore(labels, name,
+        graft.operators.CcLabels.initLabelStore(labels, name,
           s"/tmp/graft_cclabels/$tag", "doc_id", 8)
         name
       }
@@ -208,9 +208,9 @@ object DedupQueries extends graft.QueryModule {
   }
 
   /** The verified near-dup pair list and its min-label clusters, memoized
-    * per (session, dir) — four queries (both CC gates, the survivor
-    * policy, the dedup-aware split) consume the same pairs, and three the
-    * same clusters; keyed memo because the CC loop's localCheckpoint
+    * per (session, dir) — the CC gate, the incremental label store's
+    * base, the survivor policy and the dedup-aware splits consume the same
+    * pairs, and all but the label store the same clusters; keyed memo because the CC loop's localCheckpoint
     * frames defeat plan equality. dedup_clusters (alphabetically first of
     * the cluster consumers) absorbs the cluster build in Bench. */
   private def ccPairs(s: SparkSession, dir: String): DataFrame =
@@ -652,21 +652,8 @@ object DedupQueries extends graft.QueryModule {
         .select(col("cluster_id"), col("cluster_size"),
           col("doc_id").as("rep_id"), col("__nt").as("rep_tokens"))
     }),
-    // Same clusters via the OTHER published algorithm: large-star/small-star
-    // edge rewiring (Kiveris SoCC'14) — the hub-robust form. Gated by the
-    // IDENTICAL oracle as dedup_clusters, so the two implementations are
-    // pinned to agree with the recursive-closure ground truth AND each other.
-    "dedup_clusters_star" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val cc = graft.operators.CcStar.connectedComponents(
-        ccPairs(s, dir), docs.select("doc_id"), "doc_id")
-      val sizes = cc.groupBy("cluster_id").agg(count(lit(1)).as("cluster_size"))
-      cc.join(sizes, "cluster_id")
-        .select(col("doc_id"), col("cluster_id"), col("cluster_size"),
-          (col("doc_id") === col("cluster_id")).as("is_rep"))
-    }),
     // Connected components as a MAINTAINED artifact: stored base labels +
-    // an O(affected) ingest merge (CcStar.incrementalComponents) — the
+    // an O(affected) ingest merge (CcLabels.incrementalComponents) — the
     // daily-crawl face of the clustering, where re-running corpus-wide CC
     // per batch is the 100 TB pain. New edges come from the persisted
     // prefix index (delta-vs-base probes, O(delta)) plus the delta's
@@ -682,8 +669,8 @@ object DedupQueries extends graft.QueryModule {
           "text", N, MinJ).select("a_id", "b_id")
         .unionAll(Dedup.jaccardJoin(delta, "doc_id", "text", N, MinJ)
           .select("a_id", "b_id"))
-      val merged = graft.operators.CcStar.incrementalComponents(
-        graft.operators.CcStar.readLabels(s, lbl, "doc_id"), "doc_id",
+      val merged = graft.operators.CcLabels.incrementalComponents(
+        graft.operators.CcLabels.readLabels(s, lbl, "doc_id"), "doc_id",
         delta.select("doc_id"), newPairs)
       val sizes = merged.groupBy("cluster_id").agg(count(lit(1)).as("cluster_size"))
       merged.join(sizes, "cluster_id")
@@ -1280,9 +1267,8 @@ object DedupQueries extends graft.QueryModule {
          |  CAST(sum(doc_id) AS BIGINT) AS id_checksum,
          |  cp.n_cross_pairs
          |FROM asn CROSS JOIN cp GROUP BY split, cp.n_cross_pairs""".stripMargin,
-    "dedup_clusters_star" -> clustersSql,
     // The incremental merge must equal the one-shot clustering exactly —
-    // same oracle as both batch implementations.
+    // same oracle as the batch clustering.
     "dedup_clusters_incremental" -> clustersSql,
     // Survivor policy over the same ground-truth clusters: keep the LONGEST
     // member (ties → lowest id), not the smallest id — argmax replayed by a

@@ -1143,7 +1143,6 @@ object TextQueries extends graft.QueryModule {
     s"""$toksCte,
        |tok AS (SELECT doc_id % 2 = 0 AS ga, unnest(toks) AS t FROM tokd),
        |${graft.operators.Drift.countsCte}""".stripMargin
-  private def langIn(ws: Seq[String]) = ws.map(w => s"'$w'").mkString("(", ",", ")")
 
   private val toksCte = DocSql.toksCte
 

@@ -711,8 +711,7 @@ object VectorQueries extends graft.QueryModule {
         .select(col("job_id"),
           abs(col("__qp") - col("__cp")).cast("double").as("dist"),
           col("__cid"))
-      val approx = KnnJoin.topkOfCandidates(cands, "job_id", "skill_id", K,
-        isString = false)
+      val approx = KnnJoin.topkOfCandidates(cands, "job_id", "skill_id", K)
       val exact = Fixtures.exactTopK(s, dir)
       graft.operators.Eval.recallSummary(
         graft.operators.Eval.recallAtK(approx, exact, "job_id", "skill_id"))

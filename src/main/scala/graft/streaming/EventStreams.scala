@@ -48,18 +48,6 @@ object EventStreams {
       spark.readStream.schema(schema).parquet(path).withWatermark("ts", "1 hour"))
   }
 
-  /** Streaming face of [[slidingActivityCounts]]: watermarked windowed agg —
-    * identical windows, but distinct users come from the HLL++ sketch
-    * (Structured Streaming rejects exact distinct aggregation — the
-    * sketch's fixed-size mergeable registers are exactly what incremental
-    * state maintenance needs; same trade the agg_distinct_sketch query
-    * gates). */
-  def slidingActivityCountsStream(spark: SparkSession, path: String): DataFrame = {
-    val schema = graft.schema.Schemas.events
-    slidingActivityCountsSketch(
-      spark.readStream.schema(schema).parquet(path).withWatermark("ts", "1 hour"))
-  }
-
   /** [[slidingActivityCounts]] with the sketch distinct — the form a stream
     * (or an exactness-indifferent 100 TB batch) runs. */
   def slidingActivityCountsSketch(events: DataFrame): DataFrame =

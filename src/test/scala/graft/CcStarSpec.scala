@@ -2,51 +2,29 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.operators.{CcStar, Dedup}
+import graft.operators.{CcLabels, Dedup}
 
 class CcStarSpec extends SparkSpec {
   import spark.implicits._
 
-  private def run(pairs: Seq[(Long, Long)], ids: Seq[Long]): (Map[Long, Long], Map[Long, Long]) = {
-    val edges = pairs.toDF("a_id", "b_id")
-    val nodes = ids.toDF("doc_id")
-    val star = CcStar.connectedComponents(edges, nodes, "doc_id")
-      .as[(Long, Long)].collect().toMap
-    val prop = Dedup.connectedComponents(edges, nodes, "doc_id")
-      .as[(Long, Long)].collect().toMap
-    (star, prop)
-  }
-
-  test("adversarial hub: a star of leaves hanging off the LARGEST id") {
-    // Center 1000 with 200 leaves 0..199: propagation funnels everything
-    // through the hub; star rewiring collapses it. Component min is 0.
-    val pairs = (0L until 200L).map(l => (1000L, l))
-    val (star, prop) = run(pairs, (0L until 200L) :+ 1000L)
-    assert(star == prop)
-    assert(star.values.toSet == Set(0L))
-  }
+  private def labels(pairs: Seq[(Long, Long)], ids: Seq[Long]): Map[Long, Long] =
+    Dedup.connectedComponents(pairs.toDF("a_id", "b_id"), ids.toDF("doc_id"),
+      "doc_id").as[(Long, Long)].collect().toMap
 
   test("deep chain converges and matches propagation") {
-    val pairs = (0L until 59L).map(i => (i, i + 1))
-    val (star, prop) = run(pairs, 0L to 59L)
-    assert(star == prop)
-    assert(star.values.toSet == Set(0L))
+    val got = labels((0L until 59L).map(i => (i, i + 1)), 0L to 59L)
+    assert(got == (0L to 59L).map(_ -> 0L).toMap)
   }
 
   test("multiple components + singletons, arbitrary edge orientation") {
-    val pairs = Seq((5L, 3L), (3L, 9L), (20L, 21L), (21L, 20L), (30L, 31L))
-    val ids = Seq(3L, 5L, 9L, 20L, 21L, 30L, 31L, 40L, 41L)
-    val (star, prop) = run(pairs, ids)
-    assert(star == prop)
-    assert(star(3L) == 3L && star(5L) == 3L && star(9L) == 3L)
-    assert(star(20L) == 20L && star(21L) == 20L)
-    assert(star(40L) == 40L && star(41L) == 41L)
+    val got = labels(Seq((5L, 3L), (3L, 9L), (20L, 21L), (21L, 20L), (30L, 31L)),
+      Seq(3L, 5L, 9L, 20L, 21L, 30L, 31L, 40L, 41L))
+    assert(got == Map(3L -> 3L, 5L -> 3L, 9L -> 3L, 20L -> 20L, 21L -> 20L,
+      30L -> 30L, 31L -> 30L, 40L -> 40L, 41L -> 41L))
   }
 
   test("empty edge list: every node its own cluster") {
-    val (star, prop) = run(Seq.empty, Seq(1L, 2L, 3L))
-    assert(star == prop)
-    assert(star == Map(1L -> 1L, 2L -> 2L, 3L -> 3L))
+    assert(labels(Seq.empty, Seq(1L, 2L, 3L)) == Map(1L -> 1L, 2L -> 2L, 3L -> 3L))
   }
 
   test("incremental ingest equals from-scratch CC; untouched components keep labels verbatim") {
@@ -56,14 +34,14 @@ class CcStarSpec extends SparkSpec {
     // component 20 and singleton 30 are untouched.
     val basePairs = Seq((0L, 1L), (1L, 2L), (10L, 11L), (20L, 21L))
     val baseIds = Seq(0L, 1L, 2L, 10L, 11L, 20L, 21L, 30L)
-    val stored = CcStar.connectedComponents(
+    val stored = Dedup.connectedComponents(
       basePairs.toDF("a_id", "b_id"), baseIds.toDF("doc_id"), "doc_id")
     val deltaIds = Seq(100L, 101L, 102L)
     val newPairs = Seq((100L, 2L), (100L, 11L), (101L, 102L))
-    val merged = CcStar.incrementalComponents(stored, "doc_id",
+    val merged = CcLabels.incrementalComponents(stored, "doc_id",
       deltaIds.toDF("doc_id"), newPairs.toDF("a_id", "b_id"))
       .as[(Long, Long)].collect().toMap
-    val truth = CcStar.connectedComponents(
+    val truth = Dedup.connectedComponents(
       (basePairs ++ newPairs).toDF("a_id", "b_id"),
       (baseIds ++ deltaIds).toDF("doc_id"), "doc_id")
       .as[(Long, Long)].collect().toMap
@@ -75,11 +53,11 @@ class CcStarSpec extends SparkSpec {
   }
 
   test("re-ingesting an already-labeled id fails loudly, never duplicates rows") {
-    val stored = CcStar.connectedComponents(
+    val stored = Dedup.connectedComponents(
       Seq((0L, 1L)).toDF("a_id", "b_id"), Seq(0L, 1L, 2L).toDF("doc_id"),
       "doc_id")
     val e = intercept[IllegalArgumentException] {
-      CcStar.incrementalComponents(stored, "doc_id",
+      CcLabels.incrementalComponents(stored, "doc_id",
         Seq(1L, 100L).toDF("doc_id"), // 1 is already labeled
         Seq((100L, 2L)).toDF("a_id", "b_id"))
     }
@@ -103,16 +81,16 @@ class CcStarSpec extends SparkSpec {
   }
   private def initStore(): String = {
     val table = s"ccstream_${System.nanoTime()}"
-    CcStar.initLabelStore(
-      CcStar.connectedComponents(basePairs.toDF("a_id", "b_id"),
+    CcLabels.initLabelStore(
+      Dedup.connectedComponents(basePairs.toDF("a_id", "b_id"),
         baseIds.toDF("doc_id"), "doc_id"),
       table, s"/tmp/graft_ccstream_${System.nanoTime()}", "doc_id", 2)
     table
   }
   private def stored(table: String): Map[Long, Long] =
-    CcStar.readLabels(spark, table, "doc_id").as[(Long, Long)].collect().toMap
+    CcLabels.readLabels(spark, table, "doc_id").as[(Long, Long)].collect().toMap
   private def truth(ids: Seq[Long], pairs: Seq[(Long, Long)]): Map[Long, Long] =
-    CcStar.connectedComponents(
+    Dedup.connectedComponents(
       (basePairs ++ pairs).toDF("a_id", "b_id"),
       (baseIds ++ ids).toDF("doc_id"), "doc_id")
       .as[(Long, Long)].collect().toMap
@@ -122,7 +100,7 @@ class CcStarSpec extends SparkSpec {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val table = initStore()
     val input = MemoryStream[Long]
-    val query = CcStar.ingestStream(spark, table, "doc_id", 2,
+    val query = CcLabels.ingestStream(spark, table, "doc_id", 2,
       input.toDF().toDF("doc_id"))(pairsOf)
     try {
       input.addData(Seq(100L, 101L)); query.processAllAvailable()
@@ -153,12 +131,12 @@ class CcStarSpec extends SparkSpec {
     // but each batch still re-aggregated the full store).
     val table = s"ccprune_${System.nanoTime()}"
     val baseIds = (0L until 42L)
-    CcStar.initLabelStore(
-      CcStar.connectedComponents(Seq((0L, 1L)).toDF("a_id", "b_id"),
+    CcLabels.initLabelStore(
+      Dedup.connectedComponents(Seq((0L, 1L)).toDF("a_id", "b_id"),
         baseIds.toDF("doc_id"), "doc_id"),
       table, s"/tmp/graft_ccprune_${System.nanoTime()}", "doc_id", 4)
     val pairs = Seq((100L, 0L)).toDF("a_id", "b_id")
-    val (ep, mem) = CcStar.storeProbes(spark, table, "doc_id", 4, 0L, pairs)
+    val (ep, mem) = CcLabels.storeProbes(spark, table, "doc_id", 4, 0L, pairs)
     def scannedRows(df: org.apache.spark.sql.DataFrame, tbl: String): Long = {
       df.collect()
       // walk THROUGH the AQE stage wrappers (collect() stops at
@@ -196,7 +174,7 @@ class CcStarSpec extends SparkSpec {
       s"the member probe must prune on __cb:\n$memPlan")
     val total = spark.table(table).count()
     val epScanned = scannedRows(ep, table)
-    val memScanned = scannedRows(mem, CcStar.memberTable(table))
+    val memScanned = scannedRows(mem, CcLabels.memberTable(table))
     assert(epScanned > 0L && epScanned < total,
       s"endpoint probe scanned $epScanned of $total rows — must be the " +
         "touched buckets only")
@@ -211,25 +189,25 @@ class CcStarSpec extends SparkSpec {
       .filter(col("col_name") === "Location")
       .select("data_type").head().getString(0)
     val b1 = Seq(100L, 101L).toDF("doc_id")
-    val n1 = CcStar.applyBatch(spark, table, "doc_id", 2, b1, 0L)(pairsOf)
+    val n1 = CcLabels.applyBatch(spark, table, "doc_id", 2, b1, 0L)(pairsOf)
     assert(n1 == 4L)
     val t1 = truth(Seq(100L, 101L), allPairs(100L))
     assert(stored(table) == t1)
     // at-least-once redelivery AFTER the marker advanced: a pure no-op
-    assert(CcStar.applyBatch(spark, table, "doc_id", 2, b1, 0L)(pairsOf) == 0L)
+    assert(CcLabels.applyBatch(spark, table, "doc_id", 2, b1, 0L)(pairsOf) == 0L)
     assert(spark.table(table).count() == 9L, "replay must not re-append")
     assert(stored(table) == t1)
     // crash BETWEEN the append and the marker: rewind the sidecar to the
     // pre-batch state and replay — the as-of-watermark view hides the torn
     // rows, so the recompute is identical and the duplicate rows are
     // invisible under latest-wins
-    CcStar.writeApplied(spark, loc, -1L, 0L)
-    assert(CcStar.applyBatch(spark, table, "doc_id", 2, b1, 0L)(pairsOf) == 4L)
+    CcLabels.writeApplied(spark, loc, -1L, 0L)
+    assert(CcLabels.applyBatch(spark, table, "doc_id", 2, b1, 0L)(pairsOf) == 4L)
     assert(spark.table(table).count() == 13L, "the replay re-appends its 4 rows")
     assert(stored(table) == t1, "duplicate same-version rows must not change labels")
     // a later batch proceeds normally on top
     val b2 = Seq(110L).toDF("doc_id")
-    assert(CcStar.applyBatch(spark, table, "doc_id", 2, b2, 1L)(pairsOf) == 4L)
+    assert(CcLabels.applyBatch(spark, table, "doc_id", 2, b2, 1L)(pairsOf) == 4L)
     val all = Seq(100L, 101L, 110L)
     assert(stored(table) == truth(all, all.flatMap(allPairs.getOrElse(_, Seq.empty))))
   }
@@ -243,21 +221,21 @@ class CcStarSpec extends SparkSpec {
     val p = new org.apache.hadoop.fs.Path(loc.stripSuffix("/") + "__cc_applied")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(p, false)
-    assert(CcStar.applyBatch(spark, table, "doc_id", 2,
+    assert(CcLabels.applyBatch(spark, table, "doc_id", 2,
       Seq(100L, 101L).toDF("doc_id"), 0L)(pairsOf) == 4L)
     // batches applied, sidecar gone: a replay could not be told from a
     // new batch — refuse loudly with the repair named, never wedge the
     // stream on the clash guard
     fs.delete(p, false)
     val e = intercept[IllegalStateException] {
-      CcStar.applyBatch(spark, table, "doc_id", 2,
+      CcLabels.applyBatch(spark, table, "doc_id", 2,
         Seq(110L).toDF("doc_id"), 1L)(pairsOf)
     }
     assert(e.getMessage.contains("marker missing"), e.getMessage)
     assert(e.getMessage.contains("writeApplied"), e.getMessage)
     // the named repair unwedges it
-    CcStar.writeApplied(spark, loc, 0L, 1L)
-    assert(CcStar.applyBatch(spark, table, "doc_id", 2,
+    CcLabels.writeApplied(spark, loc, 0L, 1L)
+    assert(CcLabels.applyBatch(spark, table, "doc_id", 2,
       Seq(110L).toDF("doc_id"), 1L)(pairsOf) == 4L)
     val all = Seq(100L, 101L, 110L)
     assert(stored(table) == truth(all, all.flatMap(allPairs.getOrElse(_, Seq.empty))))
@@ -265,26 +243,18 @@ class CcStarSpec extends SparkSpec {
 
   test("compaction collapses version history to one row per key; labels and watermark survive") {
     val table = initStore()
-    CcStar.applyBatch(spark, table, "doc_id", 2,
+    CcLabels.applyBatch(spark, table, "doc_id", 2,
       Seq(100L, 101L).toDF("doc_id"), 0L)(pairsOf)
-    CcStar.applyBatch(spark, table, "doc_id", 2,
+    CcLabels.applyBatch(spark, table, "doc_id", 2,
       Seq(110L).toDF("doc_id"), 1L)(pairsOf)
     val before = stored(table)
-    CcStar.compactLabelStore(spark, table, "doc_id", 2)
+    CcLabels.compactLabelStore(spark, table, "doc_id", 2)
     assert(spark.table(table).count() == before.size.toLong,
       "compaction keeps exactly one row per key")
     assert(stored(table) == before, "compaction changes layout, never labels")
     // the store keeps accepting batches after compaction (sidecar intact)
-    assert(CcStar.applyBatch(spark, table, "doc_id", 2,
+    assert(CcLabels.applyBatch(spark, table, "doc_id", 2,
       Seq(110L).toDF("doc_id"), 1L)(pairsOf) == 0L,
       "the applied marker survives compaction — a replay still no-ops")
-  }
-
-  test("dense random-ish graph parity with propagation") {
-    // 80 nodes, edges joining i to (i*7) % 80 — a few mid-size components
-    // with cycles and cross links.
-    val pairs = (0L until 80L).map(i => (i, (i * 7) % 80)).filter(p => p._1 != p._2)
-    val (star, prop) = run(pairs, 0L until 80L)
-    assert(star == prop)
   }
 }

@@ -165,6 +165,10 @@ class DedupSpec extends SparkSpec {
       s"missing=${want -- got}\nextra=${got -- want}")
   }
 
+  private def ccLabels(pairs: Seq[(Long, Long)], ids: Seq[Long]): Map[Long, Long] =
+    Dedup.connectedComponents(pairs.toDF("a_id", "b_id"), ids.toDF("doc_id"),
+      "doc_id").as[(Long, Long)].collect().toMap
+
   test("connectedComponents: chains collapse to min id, singletons self-label") {
     // chain 1-2-3 (diameter 2, needs >1 round), pair 10-11, singletons 20,21
     val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("a_id", "b_id")
@@ -189,6 +193,24 @@ class DedupSpec extends SparkSpec {
     val got = Dedup.connectedComponents(chain, nodes, "doc_id")
       .as[(Long, Long)].collect()
     assert(got.length == n && got.forall(_._2 == 0L))
+  }
+
+  test("connectedComponents: a hub with 200 leaves off the largest id labels all 0") {
+    // Center 1000 with leaves 0..199: every label funnels through the hub.
+    val got = ccLabels((0L until 200L).map(l => (1000L, l)), (0L until 200L) :+ 1000L)
+    assert(got == ((0L until 200L) :+ 1000L).map(_ -> 0L).toMap)
+  }
+
+  test("connectedComponents: i -> 7i mod 80 graph equals a local union-find") {
+    // A few mid-size components with cycles and cross links.
+    val pairs = (0L until 80L).map(i => (i, (i * 7) % 80)).filter(p => p._1 != p._2)
+    val parent = Array.tabulate(80)(identity)
+    def find(x: Int): Int = if (parent(x) == x) x else find(parent(x))
+    pairs.foreach { case (a, b) =>
+      val (ra, rb) = (find(a.toInt), find(b.toInt))
+      parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    assert(ccLabels(pairs, 0L until 80L) == (0 until 80).map(i => i.toLong -> find(i).toLong).toMap)
   }
 
   test("persisted-index incrementalJoin equals the from-scratch incremental join") {

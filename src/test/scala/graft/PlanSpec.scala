@@ -170,21 +170,6 @@ class PlanSpec extends SparkSpec {
       s"span stats should shuffle exactly twice (gram-hash count + per-doc window), found $exchanges:\n$plan")
   }
 
-  test("star CC: rewiring rounds are keyed aggregations, labels never sort-merge the node set") {
-    import spark.implicits._
-    val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("a_id", "b_id")
-    val nodes = Seq(1L, 2L, 3L, 10L, 11L, 20L).toDF("doc_id")
-    val cc = graft.operators.CcStar.connectedComponents(edges, nodes, "doc_id")
-    cc.collect()
-    val plan = cc.queryExecution.executedPlan.toString
-    // The converged edge frame is a localCheckpoint (scan of stored
-    // blocks); the label extraction and the node join must stay
-    // hash-keyed — a sort-merge here would re-sort the corpus at scale.
-    assert(!plan.contains("Cartesian"), s"label join must be keyed:\n$plan")
-    assert(plan.contains("HashAggregate"),
-      s"label extraction should be a keyed min aggregation:\n$plan")
-  }
-
   test("vocab is a bounded take broadcast into the coverage join; shuffle ranks never single-partition") {
     val vocab = planOf("text_vocab_coverage").split("== Initial Plan ==").head
     assert(vocab.contains("TakeOrderedAndProject"),
