@@ -75,11 +75,17 @@ object Bench {
     // SPARK_GRAFT_ONLY=a,b,c restricts the run (single-query timing loops).
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     // JMH-style warm-up iteration: run every query once at the smallest SF
-    // (SPARK_GRAFT_WARM_DIR, empty to disable) so whole-stage-codegen class
-    // generation for each plan compiles OUTSIDE the measured window — without
-    // it the alphabetically-first query touching each table absorbs that
-    // one-time cost. Different directory ⇒ different plans, so nothing the
-    // measured pass reads is pre-materialized; warm-up caches are released.
+    // (SPARK_GRAFT_WARM_DIR, empty to disable) so the JIT and the parquet
+    // readers are warm before the measured window — without it the
+    // alphabetically-first query touching each table absorbs that one-time
+    // cost. It does NOT keep each query's generated classes compiled: one
+    // board run generates ~4,800 distinct classes, more than Tuning's
+    // 1000-entry codegen cache holds (and far more than Spark's default of
+    // 100), so by the time the measured pass reaches a query the rest of
+    // the board has evicted the classes its warm-up compiled, unless later
+    // queries reused them. Different directory ⇒ different plans, so
+    // nothing the measured pass reads is pre-materialized; warm-up caches
+    // are released.
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
     if (warmDir.nonEmpty) {
       SparkEntry.queries.toSeq.sortBy(_._1)

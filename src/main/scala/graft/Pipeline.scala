@@ -58,26 +58,34 @@ object Pipeline {
       similarity: DataFrame, // (avg_avg_sim, n_queries)
       report: DataFrame)     // (job, skill0, level0, …)
 
-  /** Entry point C over a previously built index. */
+  /** Entry point C over a previously built index.
+    *
+    * The exact side scores |jobs|×|skills| once: one [[KnnJoin.exact]] at
+    * k×10 (the reference's J3 overfetch), cached. Its ranks 1..k are the
+    * exact top-k the eval compares the ANN path against (ranks order by
+    * (dist, id), so this equals `exact(k)` row for row), and
+    * [[KnnJoin.dedupByKey]] of the whole frame is the deduped ranking the
+    * report pivots. */
   def skillsForJobs(spark: SparkSession, jobs: DataFrame, indexPath: String,
       model: IvfIndex.Model, cfg: Config = Config()): Result = {
     val indexed = Caches.cached(spark.read.parquet(indexPath))
-    // Register the embed and both top-k frames with Caches: recall reads
-    // ann+exact, best-sim reads ann+exact again, the report reads the dedup
-    // ranking — without the registry each consumer would re-run the
-    // embedding scan and the k-NN joins (the same sharing discipline the
-    // eval_* queries use).
+    // Register the embed, the ANN top-k and the overfetch with Caches:
+    // recall reads ann+exact, best-sim reads ann+exact again, the report
+    // reads the dedup ranking — without the registry each consumer would
+    // re-run the embedding scan and the k-NN joins (the same sharing
+    // discipline the eval_* queries use).
     val jobVecs = Caches.cached(
       embed(jobs.limit(cfg.maxJobs), "job_code", "gpt_job_description", cfg.dim))
 
     val ann = Caches.cached(IvfIndex.search(jobVecs, "job_code", "embedding",
       indexed, "abbreviation", "embedding", model, cfg.k, cfg.nProbe, cfg.metric))
-    val exact = Caches.cached(KnnJoin.exact(jobVecs, "job_code", "embedding",
-      indexed, "abbreviation", "embedding", cfg.k, cfg.metric))
+    val over = Caches.cached(KnnJoin.exact(jobVecs, "job_code", "embedding",
+      indexed, "abbreviation", "embedding", cfg.k * 10, cfg.metric))
+    val exact = over.filter(col("rank") <= cfg.k)
 
-    // J3/D1: overfetch + first-wins dedup by level, re-ranked to k.
-    val ranked = KnnJoin.exactDedupByKey(jobVecs, "job_code", "embedding",
-      indexed, "abbreviation", "embedding", "level", cfg.k, cfg.metric)
+    // J3/D1: first-wins dedup by level over the overfetch, re-ranked to k.
+    val ranked = KnnJoin.dedupByKey(over, "job_code", indexed, "abbreviation",
+      "level", cfg.k)
 
     // J4/J5 + A1-A3 eval of the ANN path against the exact oracle.
     val recall = Eval.recallSummary(

@@ -41,6 +41,30 @@ import org.apache.spark.sql.SparkSession
   * build pattern), which states intent where the byte heuristic can't
   * see it.
   *
+  * Generated-code cache: Spark keeps compiled whole-stage and expression
+  * classes in one JVM-wide cache, keyed by source code and compiling
+  * class loader (the driver's and the executor threads' copies of a
+  * class are two entries), capped by the static conf
+  * `spark.sql.codegen.cache.maxEntries` (default 100). A batch op reruns
+  * the same plans on new input, so every class the cap evicted is
+  * recompiled by Janino on every op. Measured with the perfbench
+  * workloads (seed 11, 4 cores) by counting
+  * `CodegenMetrics.METRIC_COMPILATION_TIME` around each op:
+  * `skills_match` (`Pipeline.skillsForJobs` + CSV report, after the
+  * index load) compiles 224 classes per run, `train_prep`
+  * (`Pipeline.prepareTrainingData`) 123–127. At the default cap a
+  * steady-state op recompiled 81–83 classes (0.50–0.66 s of a ~2.3 s
+  * `skills_match` op) and 81–98 (0.6–1.2 s, `train_prep`). At 1000 it
+  * compiles 2 and 0, plus a few classes the first time AQE picks another
+  * join plan. The 2 left come from `jobs.limit(maxJobs)`: Spark names a
+  * limit's counter `_limit_counter_<N>` with a fresh N per plan
+  * instance, so a class containing a limit never matches an earlier one.
+  * 1000 is a fixed value that holds one pipeline op with room to spare;
+  * the whole query board (4,846 classes in one `Verify` at sf0.01) does
+  * not fit, see the warm-up note in [[Bench]]. A static conf only takes
+  * effect when set on the builder before the first codegen, which is
+  * where this runs.
+  *
   * Overridable per-run via `SPARK_GRAFT_TUNE=off` (diagnostic escape
   * hatch: compare plans with stock defaults).
   */
@@ -51,4 +75,5 @@ object Tuning {
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
       .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
         sys.env.getOrElse("SPARK_GRAFT_MINPART", "1m"))
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
 }

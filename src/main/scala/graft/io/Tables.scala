@@ -45,7 +45,7 @@ object Tables {
   def events(spark: SparkSession, sfDir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = spark.read.parquet(s"$sfDir/events.parquet")
-    import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
+    import org.apache.spark.sql.functions.{expr, timestamp_micros}
     val df =
       if (raw.schema("ts").dataType == org.apache.spark.sql.types.LongType)
         raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))

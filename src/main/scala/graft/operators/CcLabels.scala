@@ -253,7 +253,7 @@ object CcLabels {
       .agg(max_by(col("cluster_id"), col(VerCol)).as("cluster_id"))
 
   /** The per-batch PRUNED store probes, exposed for the plan pin
-    * (CcStarSpec asserts both scans carry partition filters and read
+    * (CcLabelsSpec asserts both scans carry partition filters and read
     * only the touched directories — the "reads O(touched buckets), not
     * |table|" contract):
     *  - `epLabels`: the as-of latest-wins labels of the batch's pair

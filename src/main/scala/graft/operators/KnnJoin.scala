@@ -24,6 +24,13 @@ import graft.functions.VectorFunctions.Metric
   *    instead of |Q|×|C|. This is the form that survives a 1000-executor
   *    corpus scan.
   *
+  * One scoring pass serves both rankings the reference derives from a
+  * query: ranks order by (dist, id), so the top-k is exactly ranks 1..k of
+  * the top-k·f overfetch. A caller that needs the plain top-k and the
+  * deduped one ([[graft.Pipeline.skillsForJobs]]) runs [[exact]] once at
+  * k·f, filters `rank ≤ k` for the first and feeds the same frame to
+  * [[dedupByKey]] for the second, instead of scoring |Q|×|C| twice.
+  *
   * Ties break deterministically on (dist, id) in both forms and in the DuckDB
   * oracle, making rank order reproducible across engines. The id column keeps
   * its own type end-to-end: integral ids order numerically, string ids (the
@@ -147,12 +154,19 @@ object KnnJoin {
   def exactDedupByKey(
       queries: DataFrame, queryIdCol: String, queryVecCol: String,
       corpus: DataFrame, idCol: String, vecCol: String, dedupKeyCol: String,
-      k: Int, metric: Metric, overfetchFactor: Int = 10): DataFrame = {
-    val over = exact(queries, queryIdCol, queryVecCol, corpus, idCol, vecCol,
-      k * overfetchFactor, metric)
+      k: Int, metric: Metric, overfetchFactor: Int = 10): DataFrame =
+    dedupByKey(exact(queries, queryIdCol, queryVecCol, corpus, idCol, vecCol,
+      k * overfetchFactor, metric), queryIdCol, corpus, idCol, dedupKeyCol, k)
+
+  /** D1 over an already-ranked frame `over` (an [[exact]] output): join each
+    * row's `dedupKeyCol` from `corpus`, keep the first row per (query, key)
+    * in rank order, re-rank contiguously and keep k — so one overfetch can
+    * also serve the plain top-k (see the object Scaladoc). Output:
+    * (queryIdCol, idCol, dedupKeyCol, rank long 1..k, dist). */
+  def dedupByKey(over: DataFrame, queryIdCol: String, corpus: DataFrame,
+      idCol: String, dedupKeyCol: String, k: Int): DataFrame = {
     val withKey = over.join(
       corpus.select(keyColumn(corpus, idCol).as(idCol), col(dedupKeyCol)), Seq(idCol))
-    // D1: first-wins per (query, key) in rank order, then re-rank to k.
     val wKey = Window.partitionBy(col(queryIdCol), col(dedupKeyCol)).orderBy(col("rank"))
     val wRerank = Window.partitionBy(col(queryIdCol)).orderBy(col("rank"))
     withKey

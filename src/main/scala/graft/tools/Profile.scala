@@ -2,13 +2,19 @@ package graft.tools
 
 import java.util.Locale
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** Measurement harness for the optimization rounds (guide §1): runs the
   * named queries exactly the way [[graft.Bench]] does (same master/conf
   * envs, same `.count()` action) under a listener that aggregates, per
   * query: wall seconds, Spark job count, stage count, task count, summed
-  * task time, and summed shuffle read/write bytes. The job/stage/task
+  * task time, summed shuffle read/write bytes, and the generated classes
+  * Janino compiled during the run with their compile time (`codegen_compiles`
+  * from `CodegenMetrics`, `codegen_ms` from `CodeGenerator.compileTime`;
+  * a steady-state rerun should read 0, and a recompile storm from an
+  * undersized codegen cache shows here). The job/stage/task
   * census is what separates "slow because compute" from "slow because
   * 40 sequential tiny jobs × scheduling latency" — the first thing the
   * optimization guide asks for and the thing `explain` can't show.
@@ -88,13 +94,15 @@ object Profile {
     spark.sparkContext.addSparkListener(agg)
     val dumpStages = sys.env.get("SPARK_GRAFT_STAGES").exists(_.toInt > 0)
     val nStages = sys.env.get("SPARK_GRAFT_STAGES").map(_.toInt).getOrElse(0)
-    println("query,run,sec,jobs,stages,tasks,task_sec,gc_sec,deser_sec,shuf_read_mb,shuf_write_mb,input_mb")
+    println("query,run,sec,jobs,stages,tasks,task_sec,gc_sec,deser_sec,shuf_read_mb,shuf_write_mb,input_mb,codegen_compiles,codegen_ms")
     args.foreach { name =>
       graft.SparkEntry.queries.get(name) match {
         case None => println(s"$name,?,unknown query")
         case Some(fn) =>
           (1 to repeat).foreach { i =>
             agg.reset()
+            val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+            val compileNs0 = CodeGenerator.compileTime
             val t0 = System.nanoTime()
             try fn(spark, sfDir).count() catch {
               case e: Throwable => println(s"$name FAILED: ${e.getMessage.take(200)}")
@@ -105,7 +113,9 @@ object Profile {
             println(Seq(name, i, fmt(dt), agg.jobs, agg.stages, agg.tasks,
               fmt(agg.taskMs / 1e3), fmt(agg.gcMs / 1e3), fmt(agg.deserMs / 1e3),
               fmt(agg.shufReadB / 1e6),
-              fmt(agg.shufWriteB / 1e6), fmt(agg.inputB / 1e6)).mkString(","))
+              fmt(agg.shufWriteB / 1e6), fmt(agg.inputB / 1e6),
+              CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0,
+              fmt((CodeGenerator.compileTime - compileNs0) / 1e6)).mkString(","))
             if (dumpStages) {
               agg.stageRows.sortBy(-_._4).take(nStages).foreach {
                 case (id, nm, wall, tms, nt) =>

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.{CcLabels, Dedup}
 
-class CcStarSpec extends SparkSpec {
+class CcLabelsSpec extends SparkSpec {
   import spark.implicits._
 
   private def labels(pairs: Seq[(Long, Long)], ids: Seq[Long]): Map[Long, Long] =

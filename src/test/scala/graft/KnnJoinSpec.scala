@@ -92,4 +92,41 @@ class KnnJoinSpec extends SparkSpec {
       .groupBy(t => (t._1, t._2)).view.mapValues(_.map(_._3).min).toMap
     rows.foreach { case (q, _, l, _, d) => assertNear(d, full((q, l)), 1e-12) }
   }
+
+  test("one overfetch serves both rankings: top-k is its ranks 1..k, dedup equals exactDedupByKey (with id ties)") {
+    // 20 distinct vectors, each stored under 3 ids in scrambled order, so
+    // equal distances tie in triples and both the k and the k·10 cut fall
+    // inside a tie group (k = 4: ranks 4|5 and 40|41 split a triple). A
+    // triple shares its label, so first-wins must pick by id among ties.
+    val base = (0 until 20).map(_ => vec(8))
+    val ids = new scala.util.Random(11).shuffle((0L until 60L).toList)
+    val longC = ids.zipWithIndex.map { case (id, j) => (id, base(j % 20), j % 20 % 7) }
+      .toDF("cid", "cvec", "label")
+    // string ids order lexically ("c10" < "c9"), not numerically
+    val strC = longC.select(concat(lit("c"), col("cid")).as("cid"), col("cvec"), col("label"))
+    val k = 4
+    def rows(df: org.apache.spark.sql.DataFrame, cols: String*) =
+      df.select(cols.map(col): _*).collect().map(_.toSeq).toSeq
+        .sortBy(r => (r.head.asInstanceOf[Long], r(cols.indexOf("rank")).asInstanceOf[Long]))
+    for (c <- Seq(longC, strC); m <- Seq(Cosine, L2)) {
+      val over = KnnJoin.exact(queries, "qid", "qvec", c, "cid", "cvec", k * 10, m)
+      val cols = Seq("qid", "cid", "rank", "dist")
+      assert(rows(KnnJoin.exact(queries, "qid", "qvec", c, "cid", "cvec", k, m), cols: _*) ==
+        rows(over.filter(col("rank") <= k), cols: _*))
+
+      val dcols = Seq("qid", "cid", "label", "rank", "dist")
+      val shared = rows(KnnJoin.dedupByKey(over, "qid", c, "cid", "label", k), dcols: _*)
+      assert(shared == rows(KnnJoin.exactDedupByKey(queries, "qid", "qvec", c, "cid", "cvec",
+        "label", k, m), dcols: _*))
+      // the pre-split algorithm on the driver: walk the overfetch in rank
+      // order, keep each label's first row, re-rank, keep k
+      val labels = c.select("cid", "label").collect().map(r => r.get(0) -> r.getInt(1)).toMap
+      val reference = rows(over, cols: _*).groupBy(_.head).toSeq.flatMap { case (_, g) =>
+        g.foldLeft(Vector.empty[Seq[Any]]) { (kept, r) =>
+          if (kept.exists(_(2) == labels(r(1)))) kept else kept :+ Seq(r(0), r(1), labels(r(1)), r(3))
+        }.take(k).zipWithIndex.map { case (r, i) => Seq(r(0), r(1), r(2), (i + 1).toLong, r(3)) }
+      }.sortBy(r => (r.head.asInstanceOf[Long], r(3).asInstanceOf[Long]))
+      assert(shared == reference)
+    }
+  }
 }

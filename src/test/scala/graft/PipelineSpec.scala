@@ -97,6 +97,39 @@ class PipelineSpec extends SparkSpec {
     assert(td.shards.select("doc_id").as[Long].collect().toSet == Set(1L, 4L))
   }
 
+  test("prepareTrainingData: a second batch of the same shape compiles no new classes") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    // Each batch op reruns the same plans on new input. If Spark's
+    // generated-code cache evicted the first batch's classes, the second
+    // would recompile them (Tuning's codegen.cache.maxEntries).
+    def batch(seed: Int) = {
+      val r = new scala.util.Random(seed)
+      val ws = (0 until 60).map(i => s"w$i")
+      def text(n: Int) = Seq.fill(n)(ws(r.nextInt(ws.size))).mkString(" ")
+      val orig = (1L to 30L).map(i => (i, text(12 + r.nextInt(8))))
+      val dups = orig.take(6).map { case (i, t) => (100L + i, t + " extra") }
+      (orig ++ dups).toDF("doc_id", "text")
+    }
+    def run(seed: Int): Long = {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val td = Pipeline.prepareTrainingData(batch(seed), "doc_id", "text")
+      Seq(td.clusters, td.chunks, td.shards)
+        .foreach(_.write.format("noop").mode("overwrite").save())
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    // With AQE on, whether a join stage plans as a broadcast or a sort-merge
+    // join can depend on which shuffle stage finishes first, so a plan
+    // variant may first appear in the second batch. Static plans make the
+    // set of classes the same for every batch; this pins the cache.
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val first = run(1)
+      assert(first > 0, "the first batch compiles the pipeline's classes")
+      assert(run(2) == 0L, s"the second batch recompiled classes (first compiled $first)")
+    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+  }
+
   test("index persists partitioned by list_id and searches from disk") {
     val base = java.nio.file.Files.createTempDirectory("pipeline2").toString
     val cfg = Config(dim = 32, k = 3, lists = 2, nProbe = 1)
