@@ -48,7 +48,8 @@ object Pipeline {
       if (seeded) IvfIndex.fitSeeds(vectors, "abbreviation", "embedding", cfg.lists)
       else IvfIndex.fitKMeans(vectors, "embedding", cfg.lists)
     IvfIndex.write(
-      IvfIndex.assign(vectors, "abbreviation", "embedding", model, cfg.metric), path)
+      IvfIndex.assign(vectors, "abbreviation", "embedding", model, cfg.metric),
+      path, model, cfg.metric)
     model
   }
 

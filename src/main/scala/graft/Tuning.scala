@@ -39,7 +39,8 @@ import org.apache.spark.sql.SparkSession
   * (6-query board 31.9 → 52.2 s). Compute-dense small-byte stages get
   * explicit `repartition` at the operator instead (the PageRank edge-
   * build pattern), which states intent where the byte heuristic can't
-  * see it.
+  * see it. The conf therefore stays at Spark's own 1m default and is not
+  * set here.
   *
   * Generated-code cache: Spark keeps compiled whole-stage and expression
   * classes in one JVM-wide cache, keyed by source code and compiling
@@ -73,7 +74,5 @@ object Tuning {
     if (sys.env.get("SPARK_GRAFT_TUNE").contains("off")) b
     else b
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MINPART", "1m"))
       .config("spark.sql.codegen.cache.maxEntries", "1000")
 }

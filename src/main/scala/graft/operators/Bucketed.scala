@@ -118,7 +118,20 @@ object Bucketed {
   def compactTable(spark: SparkSession, tableName: String, keys: Seq[String],
       numBuckets: Int, purgeIdCol: Option[String] = None,
       partCols: Seq[String] = Nil)(
-      merge: DataFrame => DataFrame): Unit = {
+      merge: DataFrame => DataFrame): Unit =
+    compactWith(spark, tableName, purgeIdCol, merge) { (merged, loc) =>
+      writeBucketedKeys(merged, tableName, loc, keys, numBuckets, partCols)
+    }
+
+  /** [[compactTable]]'s scaffold with the layout write as a function of
+    * (rows, location): the fingerprint carry, the location lookup, the
+    * fence, the optional purge, and the tombstone preserve or clear around
+    * `rewrite`. `merge` of the live rows is materialized off the table
+    * before `rewrite` runs. Shared with [[PqIndex.compactIvfIndex]], whose
+    * layout is list-partitioned instead of bucketed. */
+  private[operators] def compactWith(spark: SparkSession, tableName: String,
+      purgeIdCol: Option[String], merge: DataFrame => DataFrame)(
+      rewrite: (DataFrame, String) => Unit): Unit = {
     val fp = graft.Layouts.readFingerprint(spark, tableName)
     val loc = spark.sql(s"DESCRIBE FORMATTED $tableName")
       .filter(org.apache.spark.sql.functions.col("col_name") === "Location")
@@ -138,11 +151,9 @@ object Bucketed {
           // backup/restore protocol — a kill at any point between the
           // rewrite's commit and the restore must not resurrect rows
           // (unfenced form: this body already holds the layout's fence)
-          Tombstones.preserveUnfenced(spark, loc)(
-            writeBucketedKeys(merged, tableName, loc, keys, numBuckets,
-              partCols))
+          Tombstones.preserveUnfenced(spark, loc)(rewrite(merged, loc))
         case Some(_) =>
-          writeBucketedKeys(merged, tableName, loc, keys, numBuckets, partCols)
+          rewrite(merged, loc)
           // purge: markers die WITH the rewrite; clear also removes any
           // stale sibling backup a crashed earlier cycle left behind
           Tombstones.clear(spark, loc)

@@ -183,8 +183,8 @@ object GraphSearch {
     * filtered/unfiltered stored twins): the walk is the expensive part
     * (hops sequential rounds), the ranking a cheap bounded join, so
     * twins memoize this frame and pay one traversal. Filtered-ANN over
-    * the stored graph ([[SimilaritySearch.topKFilteredIvf]]'s graph-tier
-    * sibling — filtered HNSW in the vector stores) IS the composition
+    * the stored graph (the graph-tier sibling of [[IvfIndex.search]] over
+    * a filtered layout — filtered HNSW in the vector stores) IS the composition
     * `rankVisited(visitedStored(...), ..., pred = Some(...))`: the walk
     * traverses the FULL graph (predicate-pruned edges would disconnect
     * it and strand whole filtered regions, the documented failure mode

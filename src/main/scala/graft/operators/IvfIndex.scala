@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.ml.functions.array_to_vector
@@ -81,19 +81,9 @@ object IvfIndex {
     * break toward the lowest list_id — the same (dist, list_id) order the
     * window used and the SQL oracle's row_number mirrors. */
   def assign(corpus: DataFrame, idCol: String, vecCol: String, model: Model,
-      metric: Metric): DataFrame = {
-    val cents = model.centroids
-      .select(col("list_id").cast("int"), col("centroid").cast("array<double>"))
-      .collect()
-      .map(r => (r.getInt(0), r.getSeq[Double](1)))
-      .sortBy(_._1)
-    require(cents.nonEmpty, "IvfIndex.assign: model has no centroids")
-    val scored = cents.map { case (i, c) =>
-      struct(metric.dist(col(vecCol), lit(c.toArray)).as("d"), lit(i).as("list_id"))
-    }
+      metric: Metric): DataFrame =
     corpus.withColumn("list_id",
-      element_at(array_sort(array(scored.toSeq: _*)), 1).getField("list_id"))
-  }
+      element_at(nearestLists(col(vecCol), model, metric), 1).getField("list_id"))
 
   /** [[assign]]'s multi-probe sibling: each row exploded to its `nProbe`
     * NEAREST centroids' list_ids (ties → lowest list_id, the same
@@ -108,27 +98,37 @@ object IvfIndex {
   def probeAssign(df: DataFrame, vecCol: String, model: Model, nProbe: Int,
       metric: Metric): DataFrame = {
     require(nProbe >= 1, s"IvfIndex.probeAssign: nProbe must be >= 1, got $nProbe")
-    val cents = model.centroids
+    df.withColumn("list_id", explode(
+      slice(nearestLists(col(vecCol), model, metric), 1, nProbe).getField("list_id")))
+  }
+
+  /** The model's centroids collected to the driver, ordered by list_id —
+    * the one collect behind [[assign]], [[probeAssign]] and
+    * [[centroidsKey]]. */
+  private def collectCentroids(model: Model): Array[(Int, Seq[Double])] =
+    model.centroids
       .select(col("list_id").cast("int"), col("centroid").cast("array<double>"))
       .collect()
       .map(r => (r.getInt(0), r.getSeq[Double](1)))
       .sortBy(_._1)
-    require(cents.nonEmpty, "IvfIndex.probeAssign: model has no centroids")
-    val scored = cents.map { case (i, c) =>
-      struct(metric.dist(col(vecCol), lit(c.toArray)).as("d"), lit(i).as("list_id"))
-    }
-    df.withColumn("list_id", explode(
-      slice(array_sort(array(scored.toSeq: _*)), 1, nProbe).getField("list_id")))
+
+  /** Every centroid as a (d, list_id) struct against `vec`, sorted
+    * nearest first. Struct ordering compares fields left to right, so ties
+    * on distance break toward the lowest list_id. */
+  private def nearestLists(vec: Column, model: Model, metric: Metric): Column = {
+    val cents = collectCentroids(model)
+    require(cents.nonEmpty, "IvfIndex: model has no centroids")
+    array_sort(array(cents.toSeq.map { case (i, c) =>
+      struct(metric.dist(vec, lit(c.toArray)).as("d"), lit(i).as("list_id"))
+    }: _*))
   }
 
   /** Canonical serialization of a centroid table — the ONE implementation
     * both this module's and [[PqIndex]]'s fingerprints build on, so the
     * two stamp formats cannot drift apart. */
   private[operators] def centroidsKey(model: Model): String =
-    model.centroids
-      .select(col("list_id").cast("int"), col("centroid").cast("array<double>"))
-      .collect()
-      .map(r => s"${r.getInt(0)}:${r.getSeq[Double](1).mkString(",")}")
+    collectCentroids(model)
+      .map { case (i, c) => s"$i:${c.mkString(",")}" }
       .sorted.mkString(";")
 
   /** Stable fingerprint of the (centroids, metric) pair a [[write]] layout
@@ -324,6 +324,18 @@ object IvfIndex {
   /** Probe-pruned ANN top-k. `indexed` must already carry `list_id`
     * (from [[assign]] or a partitioned read).
     *
+    * Filtered search passes the filtered layout: `indexed.filter(pred)`
+    * over the list-partitioned read of a [[write]] layout that carries the
+    * predicate's metadata columns (the reference's Qdrant surface takes a
+    * `Filter` on the same call, `skills_for_jobs.py:20`). The filter lands
+    * on the scan side of the probe join, so the parquet scan reads only
+    * the probed partitions' files (the probes reach it as a
+    * DynamicPruningExpression on `list_id`) and drops failing rows before
+    * any distance work; ranking over the survivors is exact, so quality
+    * degrades only by probe choice, never by post-k truncation. That
+    * pruning is why the probe side keeps its `row_number` Filter
+    * ([[probeLists]]).
+    *
     * `excludeIds`: optional tombstone set ([[Tombstones.read]]) whose ids
     * are dropped from the candidates — the delete-aware serving face. The
     * anti-join sits AFTER the probe join, not on the scan side: an
@@ -338,23 +350,48 @@ object IvfIndex {
       indexed: DataFrame, idCol: String, vecCol: String,
       model: Model, k: Int, nProbe: Int, metric: Metric,
       excludeIds: Option[DataFrame] = None): DataFrame = {
-    val cents = broadcast(model.centroids)
-    val wProbe = Window.partitionBy(col(queryIdCol)).orderBy(col("__cdist"), col("list_id"))
-    val probes = queries.select(col(queryIdCol), col(queryVecCol).as("__qvec"))
-      .join(cents)
-      .withColumn("__cdist", metric.dist(col("__qvec"), col("centroid")))
-      .withColumn("__pick", row_number().over(wProbe))
-      .filter(col("__pick") <= nProbe)
-      .select(col(queryIdCol), col("__qvec"), col("list_id"))
-    val keyCol = KnnJoin.keyColumn(indexed, idCol)
-    val c = indexed.select(keyCol, col(vecCol).as("__cvec"), col("list_id"))
-    val joined = broadcast(probes).join(c, "list_id")
-    val live = excludeIds.map(Tombstones.excludeIds(joined, col("__cid"), _))
-      .getOrElse(joined)
-    val cands = live
+    val probes = probeLists(
+      queries.select(col(queryIdCol), col(queryVecCol).as("__qvec")),
+      queryIdCol, "__qvec", model, nProbe, metric, "__qvec")
+    val cands = probeJoin(probes, indexed, idCol, col(vecCol).as("__cvec"),
+      excludeIds)
       .select(col(queryIdCol),
         metric.dist(col("__qvec"), col("__cvec")).as("dist"),
         col("__cid"))
     KnnJoin.topkOfCandidates(cands, queryIdCol, idCol, k)
+  }
+
+  /** The probe ranking of every IVF search ([[search]],
+    * [[PqIndex.searchIvf]]): per query, the `nProbe` nearest centroids of
+    * `model` to the `qvecCol` column of `queries`, ties to the lowest
+    * list_id. Output: (queryIdCol, keep…, list_id).
+    *
+    * The ranking is a `row_number` window over the broadcast centroid
+    * cross, not [[probeAssign]]'s filter-free projection, on purpose:
+    * Spark's `PartitionPruning` adds the `list_id` DynamicPruningExpression
+    * to the layout scan only when the probe side carries a selective
+    * Filter, and the `__pick <= nProbe` filter is that Filter (PlanSpec
+    * pins the pruning). */
+  private[operators] def probeLists(queries: DataFrame, queryIdCol: String,
+      qvecCol: String, model: Model, nProbe: Int, metric: Metric,
+      keep: String*): DataFrame = {
+    val wProbe = Window.partitionBy(col(queryIdCol)).orderBy(col("__cdist"), col("list_id"))
+    queries.join(broadcast(model.centroids))
+      .withColumn("__cdist", metric.dist(col(qvecCol), col("centroid")))
+      .withColumn("__pick", row_number().over(wProbe))
+      .filter(col("__pick") <= nProbe)
+      .select((queryIdCol +: keep :+ "list_id").map(col): _*)
+  }
+
+  /** The probe join of every IVF search: broadcast `probes` ⋈ the
+    * (`__cid`, `payload`, list_id) projection of `indexed` on `list_id`,
+    * then the tombstone anti-join on `__cid` (see [[search]] for why it
+    * sits above the join). */
+  private[operators] def probeJoin(probes: DataFrame, indexed: DataFrame,
+      idCol: String, payload: Column,
+      excludeIds: Option[DataFrame]): DataFrame = {
+    val c = indexed.select(KnnJoin.keyColumn(indexed, idCol), payload, col("list_id"))
+    val joined = broadcast(probes).join(c, "list_id")
+    excludeIds.map(Tombstones.excludeIds(joined, col("__cid"), _)).getOrElse(joined)
   }
 }

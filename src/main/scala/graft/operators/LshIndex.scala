@@ -97,23 +97,21 @@ object LshIndex {
     * read time. None (the default) keeps the build-time-capped fast path:
     * no extra window over the index.
     *
-    * `pred`: optional metadata predicate over the corpus columns — the
-    * filtered-search face of the LSH tier (the reference's filter surface
-    * is tier-agnostic, `skills_for_jobs.py:20`). The bucket index itself
-    * stays predicate-free (one stored layout serves EVERY filter), so the
+    * Filtered search passes the filtered corpus (`corpus.filter(pred)`;
+    * the reference's filter surface is tier-agnostic,
+    * `skills_for_jobs.py:20`). The bucket index itself stays
+    * predicate-free (one stored layout serves EVERY filter), so the
     * predicate lands at the corpus VECTOR scan: bucket-colliding candidate
     * ids that fail it simply drop out of the vector-lookup join before any
     * distance work, and the exact-L2 ranking runs over survivors only.
     * Quality therefore degrades only by hash-collision recall, never by
-    * post-k truncation — a query whose matching neighbors collide returns
-    * them all, ranked exactly. At 100 TB the predicate is pushed into the
-    * corpus parquet scan (PushedFilters) while the candidate set stays
+    * post-k truncation. At 100 TB the predicate is pushed into the corpus
+    * parquet scan (PushedFilters) while the candidate set stays
     * bucket-bounded. */
   def annTopKStored(queries: DataFrame, queryIdCol: String, queryVecCol: String,
       corpus: DataFrame, idCol: String, vecCol: String, indexTable: String,
       k: Int, dim: Int, bucketLength: Double, numTables: Int,
-      numPlanes: Int, recapAt: Option[Long] = None,
-      pred: Option[org.apache.spark.sql.Column] = None): DataFrame = {
+      numPlanes: Int, recapAt: Option[Long] = None): DataFrame = {
     // An UNCAPPED layout (the append-mode build; the stamp carries the
     // mode from build time, so the guard holds before the first append
     // too) has no build-time skew guard — probing it cap-less would
@@ -128,8 +126,7 @@ object LshIndex {
     val stored = queries.sparkSession.table(indexTable)
     val cb = recapAt.map(Salt.capBuckets(stored, Seq("tbl", "bucket"), _))
       .getOrElse(stored)
-    annTopKOfBuckets(queries, queryIdCol, queryVecCol,
-      pred.map(corpus.filter).getOrElse(corpus), idCol, vecCol,
+    annTopKOfBuckets(queries, queryIdCol, queryVecCol, corpus, idCol, vecCol,
       cb, k, dim, bucketLength, numTables, numPlanes)
   }
 

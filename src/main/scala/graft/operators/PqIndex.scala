@@ -314,19 +314,21 @@ object PqIndex {
     * composition — probe choice, code lookups, ranking — replays in the
     * DuckDB oracle.
     *
-    * `pred` is the filtered-ANN metadata predicate at the COMPRESSED
-    * tier ([[SimilaritySearch.topKFilteredIvf]]'s IVFADC sibling —
-    * completing the family across brute/IVF/graph/PQ; the reference's
-    * filter surface is tier-agnostic, `skills_for_jobs.py:20`): it
-    * prunes rows INSIDE the probed lists BEFORE any ADC lookup — the
-    * filter reaches the codes table's scan (under the same
-    * DynamicPruningExpression partition pruning the probes induce, so
-    * only the probed partitions' FILES are read), and the m-lookup ADC
-    * ranking runs over survivors only. A match in a probed list is
-    * never lost to post-k truncation; quality degrades only by probe
-    * choice and code quantization, exactly as unfiltered. The layout
-    * must carry the predicate's metadata columns ([[writeIvfIndex]]'s
-    * `metaCols`).
+    * Filtered search passes the filtered layout: `indexed.filter(pred)`
+    * over a [[writeIvfIndex]] layout written with the predicate's
+    * `metaCols`. The filter lands on the scan side of the probe join, so
+    * it reaches the codes table's scan under the DynamicPruningExpression
+    * partition pruning the probes induce (only the probed partitions'
+    * FILES are read) and prunes rows BEFORE any ADC lookup. A match in a
+    * probed list is never lost to post-k truncation; quality degrades
+    * only by probe choice and code quantization, exactly as unfiltered.
+    *
+    * Probe ranking and probe join are [[IvfIndex.search]]'s
+    * ([[IvfIndex.probeLists]], [[IvfIndex.probeJoin]] — the ranking keeps
+    * its window Filter because partition pruning needs it); PQ supplies
+    * only the per-query distance tables, carried through the probes in
+    * place of the query vector (dropped before the broadcast), and the ADC
+    * scorer.
     *
     * `excludeIds` is the delete-aware serving face ([[Tombstones]]): the
     * tombstone set anti-joins the candidate stream AFTER the probe join —
@@ -338,31 +340,13 @@ object PqIndex {
       indexed: DataFrame, idCol: String, ivfModel: IvfIndex.Model,
       pqModel: Model, k: Int, nProbe: Int,
       metric: graft.functions.VectorFunctions.Metric,
-      pred: Option[Column] = None,
       excludeIds: Option[DataFrame] = None): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val qv = col(queryVecCol).cast("array<double>")
-    // Probe ranking exactly as IvfIndex.search: per query, the nProbe
-    // nearest centroids under the IVF metric, ties to the lowest list_id.
-    val cents = broadcast(ivfModel.centroids)
-    val wProbe = Window.partitionBy(col(queryIdCol))
-      .orderBy(col("__cdist"), col("list_id"))
-    val probes = queries
-      .select(col(queryIdCol), qv.as("__qv"), distTables(qv, pqModel).as("__dt"))
-      .join(cents)
-      .withColumn("__cdist", metric.dist(col("__qv"), col("centroid")))
-      .withColumn("__pick", row_number().over(wProbe))
-      .filter(col("__pick") <= nProbe)
-      .select(col(queryIdCol), col("__dt"), col("list_id"))
-    // pred before the code projection: the row prune lands at the scan,
-    // ahead of every ADC lookup
-    val base = pred.map(indexed.filter).getOrElse(indexed)
-    val keyCol = KnnJoin.keyColumn(base, idCol)
-    val c = base.select(keyCol, col("codes").as("__codes"), col("list_id"))
-    val joined = broadcast(probes).join(c, "list_id")
-    val liveRows = excludeIds.map(Tombstones.excludeIds(joined, col("__cid"), _))
-      .getOrElse(joined)
-    val cands = liveRows
+    val probes = IvfIndex.probeLists(
+      queries.select(col(queryIdCol), qv.as("__qv"), distTables(qv, pqModel).as("__dt")),
+      queryIdCol, "__qv", ivfModel, nProbe, metric, "__dt")
+    val cands = IvfIndex.probeJoin(probes, indexed, idCol,
+      col("codes").as("__codes"), excludeIds)
       .select(col(queryIdCol),
         adcDist(col("__dt"), col("__codes")).as("dist"), col("__cid"))
     KnnJoin.topkOfCandidates(cands, queryIdCol, idCol, k)
@@ -421,10 +405,10 @@ object PqIndex {
     * [[appendToIvfIndex]]'s compatibility check.
     *
     * `metaCols` carries extra corpus columns (filter metadata — labels,
-    * language, license class) into the layout so [[searchIvf]]'s `pred`
-    * can prune rows at the codes scan: the filtered-vector-store layout
-    * choice — metadata rides WITH the index, never a post-search join
-    * back to the corpus. Appends must pass the same list
+    * language, license class) into the layout so a filter over it
+    * ([[searchIvf]]'s filtered input) can prune rows at the codes scan:
+    * the filtered-vector-store layout choice — metadata rides WITH the
+    * index, never a post-search join back to the corpus. Appends must pass the same list
     * ([[appendToIvfIndex]]) so the column positions line up. */
   def writeIvfIndex(corpus: DataFrame, idCol: String, vecCol: String,
       pqModel: Model, ivfModel: IvfIndex.Model,
@@ -481,10 +465,11 @@ object PqIndex {
 
   /** Compact an appended codes table: rewrite each list partition's files
     * in one pass off a checkpointed read, carrying the build's model
-    * fingerprint across the rewrite (the [[SpanDedup.compactIndex]]
-    * pattern — every append adds a file per touched partition, and a long
-    * append history degrades probe scan efficiency; compaction bounds it
-    * while changing nothing a reader sees, gated by `pq_index_compact`).
+    * fingerprint across the rewrite ([[Bucketed.compactTable]]'s
+    * scaffold with a list-partitioned write — every append adds a file
+    * per touched partition, and a long append history degrades probe scan
+    * efficiency; compaction bounds it while changing nothing a reader
+    * sees, gated by `pq_index_compact`).
     * "Nothing a reader sees" includes the layout's [[Tombstones]]: the
     * rewrite deletes the location's contents, so delete markers are
     * restored across it by default (dropping them while their rows
@@ -493,41 +478,12 @@ object PqIndex {
     * the files and the markers die WITH the rewrite,
     * [[IvfIndex.compact]]'s compressed-tier sibling. */
   def compactIvfIndex(spark: org.apache.spark.sql.SparkSession,
-      tableName: String, purgeIdCol: Option[String] = None): Unit = {
-    val fp = graft.Layouts.readFingerprint(spark, tableName)
-    val loc = spark.sql(s"DESCRIBE FORMATTED $tableName")
-      .filter(col("col_name") === "Location")
-      .select("data_type").head().getString(0)
-    // fence the whole window, marker read included: a takedown racing the
-    // rewrite raises (Tombstones.add's check) instead of being destroyed
-    graft.operators.Tombstones.fencedRewrite(spark, loc) {
-      val tombs = graft.operators.Tombstones.read(spark, loc)
-        .map(_.localCheckpoint())
-      val base = spark.table(tableName)
-      val live = purgeIdCol match {
-        case Some(idCol) if tombs.nonEmpty =>
-          graft.operators.Tombstones.excludeIds(base, base(idCol), tombs.get)
-        case _ => base
-      }
-      val rows = live.localCheckpoint()
-      def rewrite(): Unit = {
-        spark.sql(s"DROP TABLE IF EXISTS $tableName")
-        rows.write.mode("overwrite").format("parquet")
-          .partitionBy("list_id").option("path", loc).saveAsTable(tableName)
-      }
-      purgeIdCol match {
-        case None =>
-          // layout-only: markers ride the crash-safe backup/restore
-          // protocol (Bucketed.compactTable's argument); unfenced form —
-          // this body already holds the layout's fence
-          graft.operators.Tombstones.preserveUnfenced(spark, loc)(rewrite())
-        case Some(_) =>
-          rewrite()
-          graft.operators.Tombstones.clear(spark, loc)
-      }
-      fp.foreach(graft.Layouts.stampFingerprint(spark, tableName, _))
+      tableName: String, purgeIdCol: Option[String] = None): Unit =
+    Bucketed.compactWith(spark, tableName, purgeIdCol, identity) { (rows, loc) =>
+      spark.sql(s"DROP TABLE IF EXISTS $tableName")
+      rows.write.mode("overwrite").format("parquet")
+        .partitionBy("list_id").option("path", loc).saveAsTable(tableName)
     }
-  }
 
   /** ADC + refine (the "IVFADC+R" production shape): [[search]] overfetches
     * k·`overfetch` candidates from the code scan, then ONLY those rows'

@@ -85,40 +85,6 @@ object SimilaritySearch {
             upperBeam = math.max(4, beam / 4), nEntries = 4, metric = metric)
     }
 
-  /** Filtered search over a STORED IVF layout — the metadata predicate
-    * rides WITH the index instead of post-filtering results or falling
-    * back to a brute corpus scan (the "filtered ANN" API of the vector
-    * stores; the reference's Qdrant surface imports
-    * `Filter`/`FieldCondition`/`MatchValue` for exactly this,
-    * `skills_for_jobs.py:20`). `stored` must be the list-partitioned
-    * read of an [[IvfIndex.write]] layout (carrying the metadata
-    * columns the predicate reads) and `model` the layout's build model.
-    *
-    * Scale shape, in order: (1) the probe ranking keeps nProbe lists per
-    * query; (2) the probes' list_ids reach the parquet scan as a
-    * DynamicPruningExpression on the `list_id` partition column
-    * (broadcast-reuse DPP — PlanSpec-guarded), so only the probed
-    * partitions' FILES are read; (3) `pred` prunes rows inside those
-    * partitions before any distance work; (4) ranking over the survivors
-    * is exact (plain IVF stores full vectors — the distance IS the true
-    * distance, no separate refine pass needed). Top-k quality therefore
-    * degrades only by probe choice, never by the filter: a match in a
-    * probed list is never lost to pre-k truncation, the failure mode of
-    * filter-AFTER-search at low k.
-    *
-    * `excludeIds` composes the delete face into the same serving call
-    * ([[Tombstones.read]] of the layout's side store): deleted rows drop
-    * via the post-probe-join anti-join ([[IvfIndex.search]]'s placement —
-    * the scan stays DPP-pruned), so one call serves the full vector-store
-    * contract: predicate ∩ live, ranked exactly. */
-  def topKFilteredIvf(queries: DataFrame, queryIdCol: String, queryVecCol: String,
-      stored: DataFrame, idCol: String, vecCol: String,
-      model: IvfIndex.Model, k: Int, nProbe: Int, metric: Metric,
-      pred: org.apache.spark.sql.Column,
-      excludeIds: Option[DataFrame] = None): DataFrame =
-    IvfIndex.search(queries, queryIdCol, queryVecCol, stored.filter(pred),
-      idCol, vecCol, model, k, nProbe, metric, excludeIds)
-
   /** Streaming face: a stream of query vectors searched against the static
     * corpus per micro-batch — the serving half of the reference's
     * request/response search loop expressed as Structured Streaming (the
@@ -137,9 +103,8 @@ object SimilaritySearch {
       idCol, vecCol, k, metric, strategy))
 
   /** The one batch-operator-behind-foreachBatch scaffold both streaming
-    * faces share (r11 verdict optional #8 — the filtered face had
-    * duplicated it verbatim): apply `search` to each micro-batch, hand
-    * the result to `sink`. */
+    * faces share: apply `search` to each micro-batch, hand the result to
+    * `sink`. */
   private def streamFace(queryStream: DataFrame,
       sink: (DataFrame, Long) => Unit)(
       search: DataFrame => DataFrame): org.apache.spark.sql.streaming.StreamingQuery =
@@ -150,21 +115,22 @@ object SimilaritySearch {
       .outputMode("append")
       .start()
 
-  /** Streaming face of [[topKFilteredIvf]]: a stream of query vectors
-    * searched per micro-batch against the STORED filtered IVF tier — the
-    * serving loop of a filtered vector store (same batch-operator-behind-
-    * foreachBatch bridge as [[topKStream]]: top-k needs batch-only
-    * operators). Per batch the probes prune the layout's partitions
-    * exactly like the batch face, so micro-batch latency tracks batch
-    * size and probed-partition size, never corpus size; results per
-    * micro-batch equal the batch [[topKFilteredIvf]] of the same rows
-    * (asserted in SimilaritySearchSpec). */
-  def topKFilteredIvfStream(queryStream: DataFrame, queryIdCol: String,
+  /** Streaming face of [[IvfIndex.search]] over a STORED IVF layout: a
+    * stream of query vectors searched per micro-batch against `stored`
+    * (the list-partitioned read of an [[IvfIndex.write]] layout, filtered
+    * by the caller for filtered search) — the serving loop of a vector
+    * store (same batch-operator-behind-foreachBatch bridge as
+    * [[topKStream]]: top-k needs batch-only operators). Per batch the
+    * probes prune the layout's partitions exactly like the batch face, so
+    * micro-batch latency tracks batch size and probed-partition size,
+    * never corpus size; results per micro-batch equal the batch
+    * [[IvfIndex.search]] of the same rows (asserted in
+    * SimilaritySearchSpec). */
+  def topKIvfStream(queryStream: DataFrame, queryIdCol: String,
       queryVecCol: String, stored: DataFrame, idCol: String, vecCol: String,
       model: IvfIndex.Model, k: Int, nProbe: Int, metric: Metric,
-      pred: org.apache.spark.sql.Column,
       excludeIds: Option[DataFrame] = None)(
       sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    streamFace(queryStream, sink)(topKFilteredIvf(_, queryIdCol, queryVecCol,
-      stored, idCol, vecCol, model, k, nProbe, metric, pred, excludeIds))
+    streamFace(queryStream, sink)(IvfIndex.search(_, queryIdCol, queryVecCol,
+      stored, idCol, vecCol, model, k, nProbe, metric, excludeIds))
 }

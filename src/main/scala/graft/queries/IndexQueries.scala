@@ -337,9 +337,8 @@ object IndexQueries extends graft.QueryModule {
       val path = IvfLayout.ensure(s, dir)
       val (q, c) = Fixtures.split(s, dir)
       val model = IvfIndex.fitSeeds(c, "skill_id", "svec", Lists)
-      graft.operators.SimilaritySearch.topKFilteredIvf(q, "job_id", "qvec",
-        s.read.parquet(path), "skill_id", "svec", model, K, Probes, Cosine,
-        filterPred)
+      IvfIndex.search(q, "job_id", "qvec", s.read.parquet(path).filter(filterPred),
+        "skill_id", "svec", model, K, Probes, Cosine)
         .withColumn("dist", round(col("dist"), 6))
     }),
     // The filtered tier's price tag: recall@k of the probe-pruned filtered
@@ -351,9 +350,9 @@ object IndexQueries extends graft.QueryModule {
       val path = IvfLayout.ensure(s, dir)
       val (q, c) = Fixtures.split(s, dir)
       val model = IvfIndex.fitSeeds(c, "skill_id", "svec", Lists)
-      val ann = graft.operators.SimilaritySearch.topKFilteredIvf(q, "job_id",
-        "qvec", s.read.parquet(path), "skill_id", "svec", model, K, Probes,
-        Cosine, filterPred)
+      val ann = IvfIndex.search(q, "job_id", "qvec",
+        s.read.parquet(path).filter(filterPred), "skill_id", "svec", model, K,
+        Probes, Cosine)
       val exact = graft.operators.KnnJoin.exact(q, "job_id", "qvec",
         c.filter(filterPred), "skill_id", "svec", K, Cosine)
       graft.operators.Eval.recallSummary(
@@ -506,8 +505,8 @@ object IndexQueries extends graft.QueryModule {
     "knn_filtered_lsh" -> ((s, dir) => {
       val t = LshLayout.ensure(s, dir)
       val (q, c) = Fixtures.split(s, dir)
-      LshIndex.annTopKStored(q, "job_id", "qvec", c, "skill_id", "svec", t,
-        K, Dim, LshBucketLen, LshTables, LshPlanes, pred = Some(filterPred))
+      LshIndex.annTopKStored(q, "job_id", "qvec", c.filter(filterPred),
+        "skill_id", "svec", t, K, Dim, LshBucketLen, LshTables, LshPlanes)
         .withColumn("dist", round(col("dist"), 6))
     }),
     // The hash-table filtered tier's price tag: recall@k of the filtered
@@ -518,9 +517,8 @@ object IndexQueries extends graft.QueryModule {
     "eval_filtered_lsh_recall" -> ((s, dir) => {
       val t = LshLayout.ensure(s, dir)
       val (q, c) = Fixtures.split(s, dir)
-      val ann = LshIndex.annTopKStored(q, "job_id", "qvec", c, "skill_id",
-        "svec", t, K, Dim, LshBucketLen, LshTables, LshPlanes,
-        pred = Some(filterPred))
+      val ann = LshIndex.annTopKStored(q, "job_id", "qvec", c.filter(filterPred),
+        "skill_id", "svec", t, K, Dim, LshBucketLen, LshTables, LshPlanes)
       val exact = graft.operators.KnnJoin.exact(q, "job_id", "qvec",
         c.filter(filterPred), "skill_id", "svec", K, L2)
       graft.operators.Eval.recallSummary(
@@ -700,8 +698,8 @@ object IndexQueries extends graft.QueryModule {
       val (q, c) = Fixtures.split(s, dir)
       val ivfModel = IvfIndex.fitSeeds(c, "skill_id", "svec", Lists)
       val pqModel = PqIndex.fitSeeds(c, "skill_id", "svec", PqM, PqK)
-      PqIndex.searchIvf(q, "job_id", "qvec", s.table(t), "skill_id",
-        ivfModel, pqModel, K, Probes, Cosine, pred = Some(filterPred))
+      PqIndex.searchIvf(q, "job_id", "qvec", s.table(t).filter(filterPred),
+        "skill_id", ivfModel, pqModel, K, Probes, Cosine)
         .withColumn("dist", round(col("dist"), 6))
     }),
     // The compressed filtered tier's price tag: recall@k of the filtered
@@ -715,8 +713,9 @@ object IndexQueries extends graft.QueryModule {
       val (q, c) = Fixtures.split(s, dir)
       val ivfModel = IvfIndex.fitSeeds(c, "skill_id", "svec", Lists)
       val pqModel = PqIndex.fitSeeds(c, "skill_id", "svec", PqM, PqK)
-      val ann = PqIndex.searchIvf(q, "job_id", "qvec", s.table(t), "skill_id",
-        ivfModel, pqModel, K, Probes, Cosine, pred = Some(filterPred))
+      val ann = PqIndex.searchIvf(q, "job_id", "qvec",
+        s.table(t).filter(filterPred), "skill_id", ivfModel, pqModel, K,
+        Probes, Cosine)
       val exact = graft.operators.KnnJoin.exact(q, "job_id", "qvec",
         c.filter(filterPred), "skill_id", "svec", K, L2)
       graft.operators.Eval.recallSummary(
@@ -1296,10 +1295,10 @@ object IndexQueries extends graft.QueryModule {
   /** The LSH replay's CTE chain, ending in the ranked `r` — shared by
     * [[lshAnnSql]] and the filtered-tier consumers. `candPred`: optional
     * SQL predicate over the corpus rows at the vector-lookup join (alias
-    * `c` — e.g. " WHERE c.label % 2 = 0"), the oracle twin of
-    * [[LshIndex.annTopKStored]]'s `pred`: bucket-colliding candidates that
-    * fail it drop before any distance work, exactly where the Spark side
-    * applies it. Empty = the unfiltered search every pre-existing consumer
+    * `c` — e.g. " WHERE c.label % 2 = 0"), the oracle twin of the
+    * filtered corpus [[LshIndex.annTopKStored]] takes: bucket-colliding
+    * candidates that fail it drop before any distance work, exactly where
+    * the Spark side applies it. Empty = the unfiltered search every pre-existing consumer
     * replays. */
   private def lshCtes(candPred: String = ""): String =
     s"""$qCte, $cCte,
@@ -1487,9 +1486,9 @@ object IndexQueries extends graft.QueryModule {
     * ivfCtes' probe CTE also answers to `pr`. Ends in
     * xr(job_id, skill_id, dist, rank). `candPred` (e.g.
     * " WHERE xasg.label % 2 = 0") prunes the assigned candidates inside
-    * the probed lists before the ADC join — the oracle twin of
-    * [[PqIndex.searchIvf]]'s `pred`, exactly where the Spark side prunes
-    * rows at the codes scan. */
+    * the probed lists before the ADC join — the oracle twin of the
+    * filtered layout [[PqIndex.searchIvf]] takes, exactly where the Spark
+    * side prunes rows at the codes scan. */
   private def ivfpqCtes(candPred: String = ""): String =
       s"""$pqCtes,
          |xcent AS (SELECT CAST(row_number() OVER (ORDER BY skill_id) AS INT) - 1 AS list_id,

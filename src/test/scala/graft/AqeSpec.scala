@@ -4,8 +4,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
 class AqeSpec extends SparkSpec {
-  import spark.implicits._
-
   /** Run `body` with temporary SQL confs, restoring previous values —
     * the shared-session discipline (no stop(), no leaked settings). */
   private def withConf[T](pairs: (String, String)*)(body: => T): T = {

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.operators.Bpe
 
 /** Greedy-merge semantics pins for the BPE trainer — the edge cases where

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions.col
 import graft.operators.Eval
 
 /** Ranking metrics (MRR / nDCG@k) against hand-computed cases. */

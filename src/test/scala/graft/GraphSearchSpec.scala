@@ -56,7 +56,6 @@ class GraphSearchSpec extends SparkSpec {
 
   test("beam-insert append: fingerprint enforced, delta edges land, base untouched") {
     import graft.operators.IvfIndex
-    import graft.functions.VectorFunctions.Cosine
     val tag = s"gs_${System.nanoTime()}"
     val ids = corpus.orderBy("skill_id").select("skill_id")
       .collect().map(_.getLong(0))

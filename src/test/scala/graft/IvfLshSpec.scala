@@ -75,15 +75,15 @@ class IvfLshSpec extends SparkSpec {
     val pred = $"cid" % 2 === 0
     // probe-all degrades to exact search over the FILTERED corpus: the
     // filtered tier and the brute filtered baseline must answer identically
-    val all = graft.operators.SimilaritySearch.topKFilteredIvf(queries, "qid",
-      "qvec", stored, "cid", "cvec", model, 10, 4, Cosine, pred)
+    val all = IvfIndex.search(queries, "qid", "qvec", stored.filter(pred),
+      "cid", "cvec", model, 10, 4, Cosine)
     val brute = KnnJoin.exact(queries, "qid", "qvec", corpus.filter(pred),
       "cid", "cvec", 10, Cosine)
     assert(all.collect().map(_.toSeq).toSet == brute.collect().map(_.toSeq).toSet)
     // probe-pruned: every hit satisfies the predicate, and the stored tier
     // answers exactly like the same search over the in-memory assignment
-    val pruned = graft.operators.SimilaritySearch.topKFilteredIvf(queries,
-      "qid", "qvec", stored, "cid", "cvec", model, 10, 2, Cosine, pred)
+    val pruned = IvfIndex.search(queries, "qid", "qvec", stored.filter(pred),
+      "cid", "cvec", model, 10, 2, Cosine)
     assert(pruned.filter($"cid" % 2 =!= 0).isEmpty)
     val inMem = IvfIndex.search(queries, "qid", "qvec",
       IvfIndex.assign(corpus, "cid", "cvec", model, Cosine).filter(pred),
@@ -117,14 +117,14 @@ class IvfLshSpec extends SparkSpec {
     LshIndex.writeIndex(corpus, "cid", "cvec", 64, 0.2, 3, 1,
       t, s"/tmp/graft_test_lshfilt/${ProcessHandle.current().pid()}", 4)
     val pred = $"cid" % 2 === 0
-    val filt = LshIndex.annTopKStored(queries, "qid", "qvec", corpus, "cid",
-      "cvec", t, 10, 64, 0.2, 3, 1, pred = Some(pred))
+    val filt = LshIndex.annTopKStored(queries, "qid", "qvec",
+      corpus.filter(pred), "cid", "cvec", t, 10, 64, 0.2, 3, 1)
     // every hit satisfies the predicate
     assert(filt.filter($"cid" % 2 =!= 0).isEmpty)
     assert(filt.count() > 0, "filtered LSH returned nothing at all")
     // a trivial predicate answers exactly like the unfiltered stored search
-    val trivial = LshIndex.annTopKStored(queries, "qid", "qvec", corpus, "cid",
-      "cvec", t, 10, 64, 0.2, 3, 1, pred = Some(lit(true)))
+    val trivial = LshIndex.annTopKStored(queries, "qid", "qvec",
+      corpus.filter(lit(true)), "cid", "cvec", t, 10, 64, 0.2, 3, 1)
     val plain = LshIndex.annTopKStored(queries, "qid", "qvec", corpus, "cid",
       "cvec", t, 10, 64, 0.2, 3, 1)
     assert(trivial.collect().map(_.toSeq).toSet ==

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.Pipeline.Config
 import graft.functions.VectorFunctions.Cosine
 
@@ -71,6 +70,25 @@ class PipelineSpec extends SparkSpec {
     val res = Pipeline.runAll(spark, skills, jobs, s"$base/idx", s"$base/report", cfg)
     assert(res.report.count() == 2)
     assert(res.recall.head().getAs[Double]("avg_recall") == 1.0) // nProbe = lists
+  }
+
+  test("buildIndex stamps its model: append under a re-fitted model throws, under the build model succeeds") {
+    import graft.operators.IvfIndex
+    val path = java.nio.file.Files.createTempDirectory("pipestamp").toString + "/idx"
+    val cfg = Config(dim = 32, k = 3, lists = 2, nProbe = 2)
+    val model = Pipeline.buildIndex(skills, cfg, path, seeded = true)
+    val extra = Seq(("SKX1", "Skill X", 2, sentence(12)))
+      .toDF("abbreviation", "title", "level", "level_description")
+    val delta = Pipeline.embed(extra, "abbreviation", "level_description", cfg.dim)
+      .join(extra.select("abbreviation", "level"), "abbreviation")
+    val refit = IvfIndex.fitKMeans(
+      Pipeline.embed(skills, "abbreviation", "level_description", cfg.dim),
+      "embedding", cfg.lists)
+    intercept[IllegalArgumentException] {
+      IvfIndex.append(delta, "abbreviation", "embedding", refit, cfg.metric, path)
+    }
+    IvfIndex.append(delta, "abbreviation", "embedding", model, cfg.metric, path)
+    assert(spark.read.parquet(path).count() == skills.count() + 1)
   }
 
   test("prepareTrainingData: junk filtered, dup clusters collapse, survivors chunk and pack") {

@@ -122,8 +122,8 @@ class PqIndexSpec extends SparkSpec {
       .join(PqIndex.encode(labeled, "id", "vec", pq), "id")
     val k = 5
     val pred = $"label" === 0L
-    val filtered = PqIndex.searchIvf(queries, "qid", "qvec", indexed, "id",
-      ivf, pq, k, nProbe = 2, Cosine, pred = Some(pred))
+    val filtered = PqIndex.searchIvf(queries, "qid", "qvec", indexed.filter(pred),
+      "id", ivf, pq, k, nProbe = 2, Cosine)
       .select($"qid", $"id", $"rank").as[(Long, Long, Long)].collect()
     // every hit satisfies the predicate
     val allowed = labeled.filter(pred).select($"id").as[Long].collect().toSet
@@ -132,8 +132,8 @@ class PqIndexSpec extends SparkSpec {
     val unf = PqIndex.searchIvf(queries, "qid", "qvec", indexed, "id",
       ivf, pq, k, nProbe = 2, Cosine)
       .select($"qid", $"id", $"rank").as[(Long, Long, Long)].collect().toSet
-    val triv = PqIndex.searchIvf(queries, "qid", "qvec", indexed, "id",
-      ivf, pq, k, nProbe = 2, Cosine, pred = Some(lit(true)))
+    val triv = PqIndex.searchIvf(queries, "qid", "qvec", indexed.filter(lit(true)),
+      "id", ivf, pq, k, nProbe = 2, Cosine)
       .select($"qid", $"id", $"rank").as[(Long, Long, Long)].collect().toSet
     assert(triv == unf)
     // filter-BEFORE-ranking, the operator's whole point: only ~1/3 of the
@@ -169,14 +169,14 @@ class PqIndexSpec extends SparkSpec {
     val want = labeled.select($"id", $"label").as[(Long, Long)].collect().toSet
     assert(got == want)
     val pred = $"label" === 0L
-    val fromStore = PqIndex.searchIvf(queries, "qid", "qvec", stored, "id",
-      ivf, pq, 5, 2, Cosine, pred = Some(pred))
+    val fromStore = PqIndex.searchIvf(queries, "qid", "qvec", stored.filter(pred),
+      "id", ivf, pq, 5, 2, Cosine)
       .select($"qid", $"id", $"rank").as[(Long, Long, Long)].collect().toSet
     val inMem = IvfIndex.assign(labeled, "id", "vec", ivf, Cosine)
       .select($"id", $"label", $"list_id")
       .join(PqIndex.encode(labeled, "id", "vec", pq), "id")
-    val fromMem = PqIndex.searchIvf(queries, "qid", "qvec", inMem, "id",
-      ivf, pq, 5, 2, Cosine, pred = Some(pred))
+    val fromMem = PqIndex.searchIvf(queries, "qid", "qvec", inMem.filter(pred),
+      "id", ivf, pq, 5, 2, Cosine)
       .select($"qid", $"id", $"rank").as[(Long, Long, Long)].collect().toSet
     assert(fromStore == fromMem)
     spark.sql("DROP TABLE IF EXISTS graft_test_pqmeta")

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.operators.Robots
 
 /** RFC 9309 semantics of the robots parser/enforcer: group assignment,

@@ -6,7 +6,6 @@ import graft.operators.SimilaritySearch.{BruteForce, Graph, Ivf, Lsh, Pq}
 
 class SimilaritySearchSpec extends SparkSpec {
   import spark.implicits._
-  import org.apache.spark.sql.functions._
 
   private lazy val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
   private lazy val q = emb.filter($"vec_id" < 10)
@@ -104,9 +103,9 @@ class SimilaritySearchSpec extends SparkSpec {
     val (b1, b2) = qRows.splitAt(4)
     val input = MemoryStream[(Long, Seq[Double])]
     val got = scala.collection.mutable.Map[Long, Array[(Long, Long, Long, Double)]]()
-    val query = SimilaritySearch.topKFilteredIvfStream(
-      input.toDF().toDF("qid", "v"), "qid", "v", stored, "cid", "v",
-      model, 5, 2, Cosine, pred)(
+    val query = SimilaritySearch.topKIvfStream(
+      input.toDF().toDF("qid", "v"), "qid", "v", stored.filter(pred), "cid", "v",
+      model, 5, 2, Cosine)(
       (df, id) => got(id) = df.orderBy("qid", "rank")
         .as[(Long, Long, Long, Double)].collect())
     try {
@@ -114,8 +113,8 @@ class SimilaritySearchSpec extends SparkSpec {
       input.addData(b2); query.processAllAvailable()
     } finally query.stop()
     def batchOf(rows: Seq[(Long, Seq[Double])]) =
-      SimilaritySearch.topKFilteredIvf(rows.toDF("qid", "v"), "qid", "v",
-        stored, "cid", "v", model, 5, 2, Cosine, pred)
+      IvfIndex.search(rows.toDF("qid", "v"), "qid", "v",
+        stored.filter(pred), "cid", "v", model, 5, 2, Cosine)
         .orderBy("qid", "rank").as[(Long, Long, Long, Double)].collect()
     assert(got(0L).toSeq == batchOf(b1).toSeq)
     assert(got(1L).toSeq == batchOf(b2).toSeq)
@@ -140,9 +139,9 @@ class SimilaritySearchSpec extends SparkSpec {
     val (b1, b2) = qRows.splitAt(4)
     val input = MemoryStream[(Long, Seq[Double])]
     val got = scala.collection.mutable.Map[Long, Array[(Long, Long, Long, Double)]]()
-    val query = SimilaritySearch.topKFilteredIvfStream(
-      input.toDF().toDF("qid", "v"), "qid", "v", stored, "cid", "v",
-      model, 5, 2, Cosine, pred, excludeIds = tombs)(
+    val query = SimilaritySearch.topKIvfStream(
+      input.toDF().toDF("qid", "v"), "qid", "v", stored.filter(pred), "cid", "v",
+      model, 5, 2, Cosine, excludeIds = tombs)(
       (df, id) => got(id) = df.orderBy("qid", "rank")
         .as[(Long, Long, Long, Double)].collect())
     try {
@@ -150,8 +149,8 @@ class SimilaritySearchSpec extends SparkSpec {
       input.addData(b2); query.processAllAvailable()
     } finally query.stop()
     def batchOf(rows: Seq[(Long, Seq[Double])]) =
-      SimilaritySearch.topKFilteredIvf(rows.toDF("qid", "v"), "qid", "v",
-        stored, "cid", "v", model, 5, 2, Cosine, pred, excludeIds = tombs)
+      IvfIndex.search(rows.toDF("qid", "v"), "qid", "v",
+        stored.filter(pred), "cid", "v", model, 5, 2, Cosine, excludeIds = tombs)
         .orderBy("qid", "rank").as[(Long, Long, Long, Double)].collect()
     assert(got(0L).toSeq == batchOf(b1).toSeq)
     assert(got(1L).toSeq == batchOf(b2).toSeq)

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.functions.VectorFunctions.Cosine
-import graft.operators.{IvfIndex, KnnJoin, LshIndex, PqIndex, Tombstones}
+import graft.operators.{IvfIndex, LshIndex, PqIndex, Tombstones}
 
 /** The delete lifecycle over stored layouts: tombstone add/read/clear,
   * reader exclusion, the search faces' `excludeIds`, and the compact purge
