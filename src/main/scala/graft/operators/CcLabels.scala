@@ -393,12 +393,7 @@ object CcLabels {
   def ingestStream(spark: SparkSession, labelTable: String, idCol: String,
       numBuckets: Int, deltaStream: DataFrame)(
       newPairsOf: DataFrame => DataFrame): org.apache.spark.sql.streaming.StreamingQuery =
-    deltaStream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        applyBatch(spark, labelTable, idCol, numBuckets, batch.toDF(),
-          batchId)(newPairsOf)
-        ()
-      }
-      .outputMode("append")
-      .start()
+    graft.streaming.MicroBatch.start(deltaStream) { (batch, batchId) =>
+      applyBatch(spark, labelTable, idCol, numBuckets, batch, batchId)(newPairsOf)
+    }
 }

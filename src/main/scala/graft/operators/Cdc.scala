@@ -186,19 +186,16 @@ object Cdc {
       deltaStream: DataFrame, idCol: String, textCol: String, modulus: Int,
       numBuckets: Int)(
       sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    deltaStream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        sink(probeStore(spark, table, batch, idCol, textCol, modulus)
-          .localCheckpoint(), batchId)
-        appendToStore(table, batch, idCol, textCol, modulus, numBuckets)
-        // the append refreshed the MICRO-BATCH session's relation cache
-        // (batch.sparkSession is a streaming clone); the next batch's probe
-        // reads through THIS session — refresh it too or it sees the
-        // pre-append file listing
-        spark.catalog.refreshTable(table.chunks)
-      }
-      .outputMode("append")
-      .start()
+    graft.streaming.MicroBatch.start(deltaStream) { (batch, batchId) =>
+      sink(probeStore(spark, table, batch, idCol, textCol, modulus)
+        .localCheckpoint(), batchId)
+      appendToStore(table, batch, idCol, textCol, modulus, numBuckets)
+      // the append refreshed the MICRO-BATCH session's relation cache
+      // (batch.sparkSession is a streaming clone); the next batch's probe
+      // reads through THIS session — refresh it too or it sees the
+      // pre-append file listing
+      spark.catalog.refreshTable(table.chunks)
+    }
 
   /** Corpus-level storage census: total vs distinct chunks, tokens that
     * collapse as duplicate chunk copies, and the exact dedup ratio in

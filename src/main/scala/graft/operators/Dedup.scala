@@ -150,15 +150,12 @@ object Dedup {
         size(array_intersect(col("__ga"), col("__gb"))).cast("long").as("shared"),
         col("__ma"), col("__mb"))
 
-  /** Exact Jaccard verification over [[intersectSets]]. Output: (a_id, b_id,
-    * shared, jaccard) filtered to jaccard ≥ minJaccard. */
-  private def verifyByIntersect(sets: DataFrame, cands: DataFrame,
-      minJaccard: Double): DataFrame =
-    verifyByIntersect2(sets, sets, cands, minJaccard)
-
-  /** [[verifyByIntersect]] with distinct a-side/b-side set frames (the
-    * incremental path verifies a delta against a stored corpus index). */
-  private[graft] def verifyByIntersect2(setsA: DataFrame, setsB: DataFrame,
+  /** Exact Jaccard verification over [[intersectSets]]: `setsA`/`setsB`
+    * are the a-side and b-side set frames — the same frame for a
+    * self-join, a delta and a stored corpus index for [[JaccardIndex]].
+    * Output: (a_id, b_id, shared, jaccard) filtered to jaccard ≥
+    * minJaccard. */
+  private[operators] def verifyByIntersect(setsA: DataFrame, setsB: DataFrame,
       cands: DataFrame, minJaccard: Double): DataFrame =
     intersectSets(setsA, setsB, cands)
       .withColumn("__union", col("__ma") + col("__mb") - col("shared"))
@@ -183,18 +180,39 @@ object Dedup {
       .distinct()
 
   /** One aggregation builds the df-rank-ordered per-doc hash array
-    * (idCol, __g, __m): the prefix is a slice of it, the set size its
+    * (idCol, __g, __m) from an (idCol, __gh, __df) frame, grams sorted by
+    * (df, gram), rarest first: the prefix is a slice of it, the set size its
     * length, and the verification sets the very same arrays — no second
-    * pass over the inverted index. Caches-shared by the Jaccard,
-    * incremental Jaccard and containment joins (identical plan). */
+    * pass over the inverted index. */
+  private[operators] def dfOrderedSets(withDf: DataFrame, idCol: String): DataFrame = {
+    val ordered = withDf.groupBy(col(idCol))
+      .agg(sort_array(collect_list(struct(col("__df"), col("__gh")))).as("__o"))
+    ordered.select(col(idCol),
+      transform(col("__o"), s => s.getField("__gh")).as("__g"),
+      size(col("__o")).as("__m"))
+  }
+
+  /** The rarest-first prefix of [[dfOrderedSets]] for threshold `t`: one
+    * (idCol, __m, __gh) row per gram among the first m − ⌈t·m⌉ + 1 — the
+    * grams any pair at similarity ≥ t provably shares (see [[jaccardJoin]],
+    * [[containmentJoin]]). */
+  private[operators] def prefixGrams(sets: DataFrame, idCol: String,
+      t: Double): DataFrame = {
+    val m = col("__m")
+    val plen = (m - ceil(lit(t) * m) + 1).cast("int")
+    sets.select(col(idCol), m, explode(slice(col("__g"), lit(1), plen)).as("__gh"))
+  }
+
+  /** Length filter over a candidate's set sizes (__ma, __mb): Jaccard ≥ t
+    * needs min(m_a, m_b) ≥ ⌈t·max(m_a, m_b)⌉. */
+  private[operators] def lengthFilter(t: Double): Column =
+    least(col("__ma"), col("__mb")) >= ceil(lit(t) * greatest(col("__ma"), col("__mb")))
+
+  /** [[dfOrderedSets]] under the shingle frame's own df — Caches-shared by
+    * the Jaccard and containment joins (identical plan). */
   private def orderedDocSets(sh: DataFrame, idCol: String): DataFrame = {
     val dfc = sh.groupBy(col("__gh")).agg(count(lit(1)).as("__df"))
-    val ordered = sh.join(dfc, "__gh")
-      .groupBy(col(idCol))
-      .agg(sort_array(collect_list(struct(col("__df"), col("__gh")))).as("__o"))
-    Caches.cached(ordered.select(col(idCol),
-      transform(col("__o"), s => s.getField("__gh")).as("__g"),
-      size(col("__o")).as("__m")))
+    Caches.cached(dfOrderedSets(sh.join(dfc, "__gh"), idCol))
   }
 
   /** Exact n-gram Jaccard similarity join with prefix filtering
@@ -220,18 +238,14 @@ object Dedup {
     require(minJaccard > 0 && minJaccard <= 1, s"minJaccard $minJaccard outside (0, 1]")
     val sh = shingleHashes(df, idCol, textCol, n)
     val docSets = orderedDocSets(sh, idCol)
-    val m = col("__m")
-    val plen = (m - ceil(lit(minJaccard) * m) + 1).cast("int")
-    val prefix = docSets.select(col(idCol), m,
-      explode(slice(col("__g"), lit(1), plen)).as("__gh"))
+    val prefix = prefixGrams(docSets, idCol, minJaccard)
     val cands = prefix.select(col(idCol).as("a_id"), col("__m").as("__ma"), col("__gh"))
       .join(prefix.select(col(idCol).as("b_id"), col("__m").as("__mb"), col("__gh")),
         "__gh")
       .filter(col("a_id") < col("b_id"))
-      .filter(least(col("__ma"), col("__mb")) >=
-        ceil(lit(minJaccard) * greatest(col("__ma"), col("__mb"))))
+      .filter(lengthFilter(minJaccard))
       .select("a_id", "b_id") // dedup AFTER verify — see verifyByIntersect
-    verifyByIntersect(docSets, cands, minJaccard)
+    verifyByIntersect(docSets, docSets, cands, minJaccard)
   }
 
   /** Containment similarity join — the ASYMMETRIC inclusion detector:
@@ -260,11 +274,8 @@ object Dedup {
       s"minContain $minContain outside (0, 1]")
     val sh = shingleHashes(df, idCol, textCol, n)
     val docSets = orderedDocSets(sh, idCol)
-    val m = col("__m")
-    val plen = (m - ceil(lit(minContain) * m) + 1).cast("int")
-    val prefix = docSets.select(col(idCol),
-      explode(slice(col("__g"), lit(1), plen)).as("__gh"))
-    val cands = prefix.select(col(idCol).as("__p"), col("__gh"))
+    val cands = prefixGrams(docSets, idCol, minContain)
+      .select(col(idCol).as("__p"), col("__gh"))
       .join(sh.select(col(idCol).as("__q"), col("__gh")), "__gh")
       .filter(col("__p") =!= col("__q"))
       .select(least(col("__p"), col("__q")).as("a_id"),
@@ -325,35 +336,7 @@ object Dedup {
         Seq("band", "bh"))
       .filter(col("a_id") < col("b_id"))
       .select("a_id", "b_id") // dedup AFTER verify — see verifyByIntersect
-    verifyByIntersect(sets, cands, minJaccard)
-  }
-
-  /** Incremental n-gram Jaccard dedup: near-dups of a NEW ingest batch
-    * against the EXISTING corpus — the daily-ingest shape. Candidate
-    * generation joins the new batch's prefix shingles against the whole
-    * prefix index but keeps only (new, existing) pairs, so the work is
-    * O(|delta| × collision rate), never the all-pairs of the combined
-    * corpus; verification is the same intersect-verify as [[jaccardJoin]].
-    * `isNew` partitions the input (true = the batch being ingested).
-    * Output: (a_id=new doc, b_id=existing doc, shared, jaccard ≥ minJ). */
-  def jaccardJoinIncremental(df: DataFrame, idCol: String, textCol: String,
-      n: Int, minJaccard: Double, isNew: Column): DataFrame = {
-    require(minJaccard > 0 && minJaccard <= 1, s"minJaccard $minJaccard outside (0, 1]")
-    val sh = shingleHashes(df, idCol, textCol, n)
-    val flags = df.select(col(idCol), isNew.as("__new"))
-    val docSets = orderedDocSets(sh, idCol)
-    val m = col("__m")
-    val plen = (m - ceil(lit(minJaccard) * m) + 1).cast("int")
-    val prefix = docSets.join(flags, Seq(idCol)).select(col(idCol), col("__new"), m,
-      explode(slice(col("__g"), lit(1), plen)).as("__gh"))
-    val cands = prefix.filter(col("__new"))
-      .select(col(idCol).as("a_id"), col("__m").as("__ma"), col("__gh"))
-      .join(prefix.filter(!col("__new"))
-        .select(col(idCol).as("b_id"), col("__m").as("__mb"), col("__gh")), "__gh")
-      .filter(least(col("__ma"), col("__mb")) >=
-        ceil(lit(minJaccard) * greatest(col("__ma"), col("__mb"))))
-      .select("a_id", "b_id") // dedup AFTER verify — see verifyByIntersect
-    verifyByIntersect(docSets, cands, minJaccard)
+    verifyByIntersect(sets, sets, cands, minJaccard)
   }
 
   /** Connected components over a near-dup pair list: every node's label

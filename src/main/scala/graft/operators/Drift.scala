@@ -76,14 +76,11 @@ object Drift {
     * snapshot-A token frame. */
   def jsdStream(tokenStream: DataFrame, reference: DataFrame)(
       sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    tokenStream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val tagged = reference.select(lit(true).as("ga"), col("t"))
-          .unionByName(batch.select(lit(false).as("ga"), col("t")))
-        sink(jsdSummary(tagged), batchId)
-      }
-      .outputMode("append")
-      .start()
+    graft.streaming.MicroBatch.start(tokenStream) { (batch, batchId) =>
+      val tagged = reference.select(lit(true).as("ga"), col("t"))
+        .unionByName(batch.select(lit(false).as("ga"), col("t")))
+      sink(jsdSummary(tagged), batchId)
+    }
 
   // ---- DuckDB twins ---------------------------------------------------------
 

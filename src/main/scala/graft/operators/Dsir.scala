@@ -130,19 +130,15 @@ object Dsir {
 
   /** Streaming face: score an incoming document stream against the FIXED
     * fitted model, one broadcast join per micro-batch — the online half of
-    * DSIR (filter the crawl as it arrives). Same
-    * batch-operator-behind-foreachBatch bridge as
-    * [[SimilaritySearch.topKStream]]; per-batch results equal the batch
+    * DSIR (filter the crawl as it arrives), through the
+    * [[graft.streaming.MicroBatch]] bridge; per-batch results equal the batch
     * [[scoreWith]] of the same rows (asserted in DsirSpec). */
   def scoreStream(docStream: DataFrame, model: LambdaModel, idCol: String,
       textCol: String, buckets: Int)(
       sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    docStream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        sink(scoreWith(model, batch, idCol, textCol, buckets), batchId)
-      }
-      .outputMode("append")
-      .start()
+    graft.streaming.MicroBatch.start(docStream) { (batch, batchId) =>
+      sink(scoreWith(model, batch, idCol, textCol, buckets), batchId)
+    }
 
   /** Gumbel top-m resample (the DSIR selection step): key = w/τ + g where
     * g = −ln(−ln(u)) and u is the md5-uniform of the id — deterministic,

@@ -66,10 +66,11 @@ object GraphSearch {
     // restricts to visited nodes satisfying the predicate ([[rankVisited]],
     // the ONE ranking tail — each depth's visited prefix rides the same
     // broadcast-pinned bounded join).
+    val ranked = rankPred.map(corpus.filter).getOrElse(corpus)
     stages.map { h =>
       val vh = frontiers.take(h + 1).reduce(_ unionAll _)
-      rankVisited(vh, queries, qId, qVec, corpus, cId, cVec, k, metric,
-        rankPred).withColumn("hops", lit(h.toLong))
+      rankVisited(vh, queries, qId, qVec, ranked, cId, cVec, k, metric)
+        .withColumn("hops", lit(h.toLong))
     }.reduce(_ unionAll _)
   }
 
@@ -185,7 +186,7 @@ object GraphSearch {
     * twins memoize this frame and pay one traversal. Filtered-ANN over
     * the stored graph (the graph-tier sibling of [[IvfIndex.search]] over
     * a filtered layout — filtered HNSW in the vector stores) IS the composition
-    * `rankVisited(visitedStored(...), ..., pred = Some(...))`: the walk
+    * `rankVisited(visitedStored(...), ..., corpus.filter(pred), ...)`: the walk
     * traverses the FULL graph (predicate-pruned edges would disconnect
     * it and strand whole filtered regions, the documented failure mode
     * of naive filtered graph search), and only the ranking restricts to
@@ -199,20 +200,18 @@ object GraphSearch {
       metric, None).reduce(_ unionAll _)
   }
 
-  /** Exact top-`k` ranking over a walk's visited set, optionally
-    * restricted to nodes satisfying `pred` (filtered-ANN semantics: the
-    * traversal saw the full graph; only the ranking filters). The work is
-    * a join of the bounded visited set against the corpus vectors —
+  /** Exact top-`k` ranking over a walk's visited set: only visited nodes
+    * present in `corpus` rank, so filtered-ANN passes the filtered corpus
+    * (the traversal saw the full graph; only the ranking filters). The work
+    * is a join of the bounded visited set against the corpus vectors —
     * O(|Q|·(1 + hops·beam)) rows, never a corpus scan. */
   def rankVisited(visited: DataFrame, queries: DataFrame, qId: String,
       qVec: String, corpus: DataFrame, cId: String, cVec: String, k: Int,
       metric: Metric = Cosine,
-      pred: Option[org.apache.spark.sql.Column] = None,
       hintBroadcastVisited: Boolean = false): DataFrame = {
     val q = broadcast(queries.select(col(qId).as("__qid"),
       col(qVec).as("__qv")))
-    val rc = pred.map(corpus.filter).getOrElse(corpus)
-    val vecs = rc.select(col(cId).cast("long").as("__vid"),
+    val vecs = corpus.select(col(cId).cast("long").as("__vid"),
       col(cVec).as("__cv"))
     // `hintBroadcastVisited` pins the visited set as the broadcast build
     // side so the corpus-vector join is a map-side lookup over the corpus

@@ -121,11 +121,8 @@ object Mmr {
       queryVecCol: String, corpus: DataFrame, idCol: String, vecCol: String,
       k: Int, fetch: Int, lambda: Double)(
       sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    queryStream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        sink(rerank(batch, queryIdCol, queryVecCol, corpus, idCol, vecCol,
-          k, fetch, lambda), batchId)
-      }
-      .outputMode("append")
-      .start()
+    graft.streaming.MicroBatch.start(queryStream) { (batch, batchId) =>
+      sink(rerank(batch, queryIdCol, queryVecCol, corpus, idCol, vecCol,
+        k, fetch, lambda), batchId)
+    }
 }

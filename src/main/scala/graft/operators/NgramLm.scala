@@ -231,12 +231,9 @@ object NgramLm {
   def scoreStream(spark: SparkSession, tables: LmTables,
       deltaStream: DataFrame, idCol: String, textCol: String)(
       sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    deltaStream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        sink(scoreDocs(spark, tables, batch.toDF(), idCol, textCol), batchId)
-      }
-      .outputMode("append")
-      .start()
+    graft.streaming.MicroBatch.start(deltaStream) { (batch, batchId) =>
+      sink(scoreDocs(spark, tables, batch, idCol, textCol), batchId)
+    }
 
   /** Per-document mean interpolated log-probability of `delta` against the
     * STORED model: (idCol, n_bigrams, avg_logprob) for every delta doc

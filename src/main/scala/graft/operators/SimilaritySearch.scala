@@ -87,9 +87,8 @@ object SimilaritySearch {
 
   /** Streaming face: a stream of query vectors searched against the static
     * corpus per micro-batch — the serving half of the reference's
-    * request/response search loop expressed as Structured Streaming (the
-    * same batch-operator-behind-foreachBatch bridge as
-    * JaccardIndex.incrementalJoinStream, because top-k needs batch-only
+    * request/response search loop expressed as Structured Streaming
+    * ([[graft.streaming.MicroBatch]], because top-k needs batch-only
     * operators). Per batch the work is O(|batch| × corpus-scan-of-strategy)
     * with the batch side broadcast — queries never shuffle the corpus, so
     * micro-batch latency tracks batch size, not corpus size, under IVF/LSH.
@@ -99,28 +98,17 @@ object SimilaritySearch {
       corpus: DataFrame, idCol: String, vecCol: String,
       k: Int, metric: Metric, strategy: Strategy = BruteForce)(
       sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    streamFace(queryStream, sink)(topK(_, queryIdCol, queryVecCol, corpus,
-      idCol, vecCol, k, metric, strategy))
-
-  /** The one batch-operator-behind-foreachBatch scaffold both streaming
-    * faces share: apply `search` to each micro-batch, hand the result to
-    * `sink`. */
-  private def streamFace(queryStream: DataFrame,
-      sink: (DataFrame, Long) => Unit)(
-      search: DataFrame => DataFrame): org.apache.spark.sql.streaming.StreamingQuery =
-    queryStream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        sink(search(batch.toDF()), batchId)
-      }
-      .outputMode("append")
-      .start()
+    graft.streaming.MicroBatch.start(queryStream) { (batch, batchId) =>
+      sink(topK(batch, queryIdCol, queryVecCol, corpus, idCol, vecCol, k,
+        metric, strategy), batchId)
+    }
 
   /** Streaming face of [[IvfIndex.search]] over a STORED IVF layout: a
     * stream of query vectors searched per micro-batch against `stored`
     * (the list-partitioned read of an [[IvfIndex.write]] layout, filtered
     * by the caller for filtered search) — the serving loop of a vector
-    * store (same batch-operator-behind-foreachBatch bridge as
-    * [[topKStream]]: top-k needs batch-only operators). Per batch the
+    * store (same [[graft.streaming.MicroBatch]] bridge as [[topKStream]]:
+    * top-k needs batch-only operators). Per batch the
     * probes prune the layout's partitions exactly like the batch face, so
     * micro-batch latency tracks batch size and probed-partition size,
     * never corpus size; results per micro-batch equal the batch
@@ -131,6 +119,8 @@ object SimilaritySearch {
       model: IvfIndex.Model, k: Int, nProbe: Int, metric: Metric,
       excludeIds: Option[DataFrame] = None)(
       sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    streamFace(queryStream, sink)(IvfIndex.search(_, queryIdCol, queryVecCol,
-      stored, idCol, vecCol, model, k, nProbe, metric, excludeIds))
+    graft.streaming.MicroBatch.start(queryStream) { (batch, batchId) =>
+      sink(IvfIndex.search(batch, queryIdCol, queryVecCol, stored, idCol,
+        vecCol, model, k, nProbe, metric, excludeIds), batchId)
+    }
 }

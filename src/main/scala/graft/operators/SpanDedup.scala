@@ -243,12 +243,9 @@ object SpanDedup {
   def incrementalSpanStream(spark: SparkSession, table: IndexTable,
       deltaStream: DataFrame, idCol: String, textCol: String, k: Int)(
       sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    deltaStream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        sink(incrementalSpanStats(spark, table, batch, idCol, textCol, k), batchId)
-      }
-      .outputMode("append")
-      .start()
+    graft.streaming.MicroBatch.start(deltaStream) { (batch, batchId) =>
+      sink(incrementalSpanStats(spark, table, batch, idCol, textCol, k), batchId)
+    }
 
   /** Per-delta-document span accounting over [[incrementalSpans]] — the
     * ingest-batch report: (idCol, n_tokens, n_spans, dup_tokens). */

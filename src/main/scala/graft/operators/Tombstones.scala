@@ -216,12 +216,9 @@ object Tombstones {
     * fails the streaming query loudly instead of losing the takedown. */
   def addStream(idStream: DataFrame, idCol: String, layoutPath: String):
       org.apache.spark.sql.streaming.StreamingQuery =
-    idStream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        add(batch.toDF(), idCol, layoutPath)
-      }
-      .outputMode("append")
-      .start()
+    graft.streaming.MicroBatch.start(idStream) { (batch, _) =>
+      add(batch, idCol, layoutPath)
+    }
 
   /** Drop the side store AND the sibling backup — called by the purge
     * rewrites AFTER they land (a purge that cleared markers first would

@@ -471,12 +471,6 @@ object DedupQueries extends graft.QueryModule {
       Dedup.jaccardJoin(Tables.documents(s, dir), "doc_id", "text", N, MinJ)),
     "dedup_minhash_lsh" -> ((s, dir) =>
       Dedup.minhashLshJoin(Tables.documents(s, dir), "doc_id", "text", N, MinJ)),
-    // Daily-ingest shape: near-dups of a new batch (stand-in: every 10th
-    // doc) against the existing corpus — delta x collision-rate work, never
-    // all-pairs of the combined corpus.
-    "dedup_jaccard_incremental" -> ((s, dir) =>
-      Dedup.jaccardJoinIncremental(Tables.documents(s, dir), "doc_id", "text",
-        N, MinJ, deltaPred)),
     // Index build as its own gated query: persists the corpus prefix index
     // (bucketed df / prefix / per-doc gram-set tables) and reports its
     // shape; the oracle recomputes both counts from scratch, so a build
@@ -486,11 +480,13 @@ object DedupQueries extends graft.QueryModule {
       s.table(t.docsets).agg(count(lit(1)).as("n_docs"))
         .crossJoin(s.table(t.prefix).agg(count(lit(1)).as("n_prefix_entries")))
     }),
-    // The O(delta) ingest path: same answer as dedup_jaccard_incremental
-    // (both candidate generators are lossless and verification is exact —
-    // the shared oracle pins that), but the corpus appears ONLY through
+    // Daily-ingest shape: near-dups of a new batch (stand-in: every 10th
+    // doc) against the existing corpus. The corpus appears ONLY through
     // probes of the persisted index: per-batch work is O(|delta| ×
-    // collision rate), with no full-corpus df recount or re-shingling.
+    // collision rate), with no full-corpus df recount or re-shingling, and
+    // the answer equals a from-scratch prefix join over corpus ∪ delta
+    // (lossless candidates under any consistent gram order + exact
+    // verification — the oracle replays exactly that).
     "dedup_jaccard_incremental_indexed" -> ((s, dir) =>
       JaccardIndex.incrementalJoin(s, JidxLayout.ensure(s, dir),
         Tables.documents(s, dir).filter(deltaPred), "doc_id", "text", N, MinJ)),
@@ -832,8 +828,10 @@ object DedupQueries extends graft.QueryModule {
       s"SELECT doc_id, simhash, $k AS band, (simhash >> $off) & ${(1L << w) - 1L} AS bits FROM sh"
     }.mkString("\n  UNION ALL ")
 
-  /** Shared by dedup_jaccard_incremental, its indexed twin, and the
-    * delete-aware face — see the oracle map entries. `extraB`: optional
+  /** From-scratch replay of the delta-vs-corpus join: df and prefixes
+    * over corpus ∪ delta, candidates restricted to (new, existing) pairs.
+    * Shared by dedup_jaccard_incremental_indexed and the delete-aware
+    * face — see the oracle map entries. `extraB`: optional
     * predicate appended to the candidate b (indexed) side, the oracle twin
     * of [[graft.operators.JaccardIndex.incrementalJoin]]'s `excludeIds` —
     * exclusion at candidate generation, exactly where the Spark side
@@ -1189,15 +1187,14 @@ object DedupQueries extends graft.QueryModule {
          |  CASE WHEN n_lsh = 0 THEN CAST(0 AS DOUBLE)
          |    ELSE ${graft.functions.ExactRound.ratioRound6IntSql("n_hit", 0, "n_lsh")} END AS precision
          |FROM ns""".stripMargin,
-    // Same prefix index as dedup_jaccard_pairs; candidates keep only
-    // (new, existing) orientations. The length-ratio prune the Spark side
-    // applies is lossless (pruned pairs cannot reach MinJ), so the oracle
-    // may omit it — verification removes them identically.
-    "dedup_jaccard_incremental" -> incrementalSql,
-    // The indexed path answers IDENTICALLY (lossless candidates under any
-    // consistent gram order + exact verification), so it shares the
-    // incremental oracle verbatim — the strongest possible pin that moving
-    // the index to storage changed nothing.
+    // The indexed path answers IDENTICALLY to a from-scratch prefix join
+    // over corpus ∪ delta (lossless candidates under any consistent gram
+    // order + exact verification), so the oracle replays that join with
+    // candidates kept to (new, existing) orientations — the strongest pin
+    // that moving the index to storage changed nothing. The length-ratio
+    // prune the Spark side applies is lossless (pruned pairs cannot reach
+    // MinJ), so the oracle may omit it — verification removes them
+    // identically.
     "dedup_jaccard_incremental_indexed" -> incrementalSql,
     // The delete-aware face: the same replay with tombstoned docs excluded
     // from the candidate b side — exactly where the Spark side's prefix

@@ -924,7 +924,7 @@ object IndexQueries extends graft.QueryModule {
       val (q, c) = Fixtures.split(s, dir)
       graft.operators.GraphSearch.rankVisited(storedWalkVisited(s, dir),
         q, "job_id", "qvec", c.select(col("skill_id"), col("svec")),
-        "skill_id", "svec", K, Cosine, None, hintBroadcastVisited = true)
+        "skill_id", "svec", K, Cosine, hintBroadcastVisited = true)
         .withColumn("dist", round(col("dist"), 6))
     }),
     // The stored walk's own census (a Bench producer — it materializes the
@@ -949,9 +949,8 @@ object IndexQueries extends graft.QueryModule {
       val (q, c) = Fixtures.split(s, dir)
       graft.operators.GraphSearch.rankVisited(storedWalkVisited(s, dir),
         q, "job_id", "qvec",
-        c.select(col("skill_id"), col("svec"), col("label")),
-        "skill_id", "svec", K, Cosine, Some(filterPred),
-        hintBroadcastVisited = true)
+        c.select(col("skill_id"), col("svec"), col("label")).filter(filterPred),
+        "skill_id", "svec", K, Cosine, hintBroadcastVisited = true)
         .withColumn("dist", round(col("dist"), 6))
     }),
     // Delete-aware serving at the GRAPH tier — the Lucene-HNSW delete
@@ -972,7 +971,7 @@ object IndexQueries extends graft.QueryModule {
         c.select(col("skill_id"), col("svec")), "skill_id", s,
         GraphLayout.path(dir))
       graft.operators.GraphSearch.rankVisited(storedWalkVisited(s, dir),
-        q, "job_id", "qvec", live, "skill_id", "svec", K, Cosine, None,
+        q, "job_id", "qvec", live, "skill_id", "svec", K, Cosine,
         hintBroadcastVisited = true)
         .withColumn("dist", round(col("dist"), 6))
     }),

@@ -150,8 +150,12 @@ class DedupSpec extends SparkSpec {
 
   test("incremental jaccard equals brute force restricted to (new, existing) pairs") {
     val corpus = randomCorpus(seed = 13, nBase = 25)
-    val got = Dedup.jaccardJoinIncremental(corpus.toDF("doc_id", "text"),
-        "doc_id", "text", 3, 0.5, col("doc_id") % 5 === 0)
+    val df = corpus.toDF("doc_id", "text")
+    val tag = "spec_" + java.util.UUID.randomUUID.toString.replace("-", "").take(12)
+    val t = graft.operators.JaccardIndex.build(df.filter(col("doc_id") % 5 =!= 0),
+      "doc_id", "text", 3, 0.5, tag, s"/tmp/graft_jidx_spec/$tag", 4)
+    val got = graft.operators.JaccardIndex.incrementalJoin(spark, t,
+        df.filter(col("doc_id") % 5 === 0), "doc_id", "text", 3, 0.5)
       .select($"a_id", $"b_id", $"shared", $"jaccard")
       .as[(Long, Long, Long, Double)].collect().toSet
     val want = bruteJaccard(corpus, 3, 0.5).flatMap { case (a, b, sh, j) =>
@@ -163,6 +167,8 @@ class DedupSpec extends SparkSpec {
     }
     assert(got == want,
       s"missing=${want -- got}\nextra=${got -- want}")
+    Seq(t.docsets, t.prefix, t.dfc)
+      .foreach(n => spark.sql(s"DROP TABLE IF EXISTS $n"))
   }
 
   private def ccLabels(pairs: Seq[(Long, Long)], ids: Seq[Long]): Map[Long, Long] =
@@ -216,23 +222,34 @@ class DedupSpec extends SparkSpec {
   test("persisted-index incrementalJoin equals the from-scratch incremental join") {
     val corpus = randomCorpus(seed = 29, nBase = 25)
     val df = corpus.toDF("doc_id", "text")
-    val want = Dedup.jaccardJoinIncremental(df, "doc_id", "text", 3, 0.5,
-        col("doc_id") % 5 === 0)
+    // Even ids are the delta: base k and its mutant k + 25 differ in parity,
+    // so every planted near-duplicate is a (new, existing) pair. From
+    // scratch: the full self-join over corpus ∪ delta, kept to those pairs
+    // and oriented new-first.
+    val full = Dedup.jaccardJoin(df, "doc_id", "text", 3, 0.5)
       .select($"a_id", $"b_id", $"shared", $"jaccard")
       .as[(Long, Long, Long, Double)].collect().toSet
+    val want = full.flatMap { case (a, b, sh, j) =>
+      (a % 2 == 0, b % 2 == 0) match {
+        case (true, false) => Some((a, b, sh, j))
+        case (false, true) => Some((b, a, sh, j))
+        case _ => None
+      }
+    }
     val tag = "spec_" + java.util.UUID.randomUUID.toString.replace("-", "").take(12)
-    val t = graft.operators.JaccardIndex.build(df.filter(col("doc_id") % 5 =!= 0),
+    val t = graft.operators.JaccardIndex.build(df.filter(col("doc_id") % 2 =!= 0),
       "doc_id", "text", 3, 0.5, tag, s"/tmp/graft_jidx_spec/$tag", 4)
     // Streaming-leak guard: a delta probe is per-batch work and must not
     // register cache entries (a long-running stream would accumulate one
     // registry entry + pinned storage per micro-batch otherwise).
     val cachesBefore = Caches.size
     val got = graft.operators.JaccardIndex.incrementalJoin(spark, t,
-        df.filter(col("doc_id") % 5 === 0), "doc_id", "text", 3, 0.5)
+        df.filter(col("doc_id") % 2 === 0), "doc_id", "text", 3, 0.5)
       .select($"a_id", $"b_id", $"shared", $"jaccard")
       .as[(Long, Long, Long, Double)].collect().toSet
     assert(Caches.size == cachesBefore,
       "incrementalJoin registered cache entries for a per-batch delta")
+    assert(want.nonEmpty, "seed 29 corpus yields no (new, existing) pairs")
     assert(got == want, s"missing=${want -- got}\nextra=${got -- want}")
     Seq(t.docsets, t.prefix, t.dfc)
       .foreach(n => spark.sql(s"DROP TABLE IF EXISTS $n"))
