@@ -289,22 +289,31 @@ object Pipeline {
     * stage is the operator already covered by the driver's correctness gate
     * ([[graft.operators.Dedup]], [[graft.operators.Sequencer]]); this only
     * composes them, and the `pipeline_training_data` query pins the
-    * composition itself against a single DuckDB oracle. */
+    * composition itself against a single DuckDB oracle.
+    *
+    * Each doc is tokenized and md5-hashed once: one cached projection
+    * holds (id, text, token count, distinct gram-hash array). The
+    * repetition filter reads the distinct-gram count as the array's size,
+    * and the Jaccard join explodes the surviving docs' arrays. The cache is
+    * also a plan barrier: without it Spark pushes the filter below the
+    * projection, inlining the token-hash array into the gram lambda, whose
+    * `element_at` then re-runs the tokenizer and md5 per element. A call
+    * registers three [[Caches]] entries: that projection, the Jaccard
+    * join's df-ordered doc sets and `kept`. */
   def prepareTrainingData(docs: DataFrame, idCol: String, textCol: String,
       cfg: TrainingConfig = TrainingConfig()): TrainingData = {
-    val toks = graft.functions.TextFunctions.tokens(col(textCol))
-    val totals = docs.select(col(idCol), col(textCol),
-      size(toks).cast("long").as("__nt"),
-      when(size(toks) >= cfg.gramN, size(toks) - (cfg.gramN - 1))
-        .otherwise(0).cast("long").as("__ng"))
-    val dis = Dedup.shingleHashes(docs, idCol, textCol, cfg.gramN)
-      .groupBy(idCol).agg(count(lit(1)).as("__nd"))
-    val cleaned = Caches.cached(totals.join(dis, Seq(idCol), "left")
-      .filter(col("__nt") >= cfg.minTokens &&
-        graft.functions.CleanFunctions.repetitionRatio(
-          col("__ng"), coalesce(col("__nd"), lit(0L))) <= cfg.maxRepRatio)
-      .select(col(idCol), col(textCol), col("__nt").as("n_tokens")))
-    val pairs = Dedup.jaccardJoin(cleaned, idCol, textCol, cfg.gramN,
+    val hashed = Caches.cached(docs
+      .select(col(idCol), col(textCol), Dedup.tokenHashArray(col(textCol)).as("__ht"))
+      .select(col(idCol), col(textCol), size(col("__ht")).cast("long").as("__nt"),
+        Dedup.gramHashArray(col("__ht"), cfg.gramN).as("__g")))
+    val nt = col("__nt")
+    val totalGrams = when(nt >= cfg.gramN, nt - (cfg.gramN - 1)).otherwise(0L)
+    val passing = hashed.filter(nt >= cfg.minTokens &&
+      graft.functions.CleanFunctions.repetitionRatio(
+        totalGrams, size(col("__g")).cast("long")) <= cfg.maxRepRatio)
+    val cleaned = passing.select(col(idCol), col(textCol), nt.as("n_tokens"))
+    val pairs = Dedup.jaccardJoinOfShingles(
+      passing.select(col(idCol), explode(col("__g")).as("__gh")), idCol,
       cfg.minJaccard).select("a_id", "b_id")
     val clusters = Dedup.connectedComponents(pairs, cleaned.select(col(idCol)), idCol)
     val kept = Caches.cached(cleaned.join(clusters, idCol)

@@ -68,7 +68,10 @@ object Dedup {
   val ShingleP = 1000000007L
 
   /** Distinct rolling n-gram hashes per row: (idCol, __gh long) — the shared
-    * input of [[jaccardJoin]] and [[minhashLshJoin]]. The gram hash combines
+    * input of [[jaccardJoin]], [[containmentJoin]], [[minhashLshJoin]] and
+    * the corpus-side [[JaccardIndex]]. (The training pipeline does not read
+    * it: it keeps [[gramHashArray]] per doc beside the text and explodes
+    * that, so each doc is hashed once.) The gram hash combines
     * the n per-token md5 hashes arithmetically (fold of acc·31 + h mod
     * [[ShingleP]]) instead of concatenating gram STRINGS and hashing those:
     * one md5 per token rather than per gram, `array_distinct` compares longs
@@ -94,15 +97,19 @@ object Dedup {
     shingleHashesPlan(tokenHashesUncached(df, idCol, textCol), idCol, n)
 
   private def shingleHashesPlan(withHt: DataFrame, idCol: String,
-      n: Int): DataFrame = {
-    val ht = col("__ht")
-    val ghs = when(size(ht) >= n, array_distinct(
+      n: Int): DataFrame =
+    withHt.select(col(idCol), explode(gramHashArray(col("__ht"), n)).as("__gh"))
+
+  /** The distinct rolling n-gram hashes of one token-hash array (see
+    * [[shingleHashes]]) as an array<long>; empty below n tokens. `ht` must
+    * be a materialized column, not an expression: the gram lambda reads it
+    * through `element_at`, and HOF lambdas don't CSE (see [[shingles]]). */
+  def gramHashArray(ht: Column, n: Int): Column =
+    when(size(ht) >= n, array_distinct(
       transform(sequence(lit(1), size(ht) - (n - 1)),
         i => (0 until n).map(o => element_at(ht, i + o))
           .foldLeft(lit(0L): Column)((acc, h) => (acc * 31L + h) % ShingleP))))
       .otherwise(array().cast("array<long>"))
-    withHt.select(col(idCol), explode(ghs).as("__gh"))
-  }
 
   /** Per-token md5 hash array: (idCol, __ht array<long>) — the expensive half
     * of every gram index (one md5 per token; the gram fold on top is integer
@@ -116,8 +123,12 @@ object Dedup {
   /** [[tokenHashes]] without the [[Caches]] registration — see
     * [[shingleHashesUncached]] for when (and why) delta paths need this. */
   def tokenHashesUncached(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    df.select(col(idCol),
-      transform(TextFunctions.tokens(col(textCol)), TextFunctions.tokenHash(_)).as("__ht"))
+    df.select(col(idCol), tokenHashArray(col(textCol)).as("__ht"))
+
+  /** The md5 hash of every token of a text, in order: the __ht column of
+    * [[tokenHashes]]. */
+  def tokenHashArray(text: Column): Column =
+    transform(TextFunctions.tokens(text), TextFunctions.tokenHash(_))
 
   /** Per-doc gram-hash set as ONE array row: (idCol, __g array<long>,
     * __m int). ≤ a few hundred longs per doc, so the whole frame is orders
@@ -232,11 +243,22 @@ object Dedup {
     * The per-doc ordering is ONE aggregation (sort_array over ≤ m structs),
     * not a row_number window — no per-doc sort exchange; the prefix is a
     * `slice` of the sorted array. Output: (a_id, b_id, shared, jaccard) for
-    * pairs with jaccard ≥ minJaccard, a_id < b_id. */
+    * pairs with jaccard ≥ minJaccard, a_id < b_id.
+    *
+    * Hashes the text through [[shingleHashes]]; [[jaccardJoinOfShingles]]
+    * is the same join over gram hashes the caller already has. */
   def jaccardJoin(df: DataFrame, idCol: String, textCol: String, n: Int,
+      minJaccard: Double): DataFrame =
+    jaccardJoinOfShingles(shingleHashes(df, idCol, textCol, n), idCol, minJaccard)
+
+  /** [[jaccardJoin]] over a [[shingleHashes]]-shaped frame (idCol, __gh),
+    * one row per distinct gram of a doc — for callers that built the gram
+    * hashes themselves (`Pipeline.prepareTrainingData` explodes the
+    * [[gramHashArray]] its quality filter already read). Registers one
+    * [[Caches]] entry, the df-ordered doc sets. */
+  def jaccardJoinOfShingles(sh: DataFrame, idCol: String,
       minJaccard: Double): DataFrame = {
     require(minJaccard > 0 && minJaccard <= 1, s"minJaccard $minJaccard outside (0, 1]")
-    val sh = shingleHashes(df, idCol, textCol, n)
     val docSets = orderedDocSets(sh, idCol)
     val prefix = prefixGrams(docSets, idCol, minJaccard)
     val cands = prefix.select(col(idCol).as("a_id"), col("__m").as("__ma"), col("__gh"))
@@ -361,7 +383,14 @@ object Dedup {
     * re-canonicalizes a plan that embeds all previous rounds plus the whole
     * pair pipeline (measured: ~2 s/round of pure planning at 477 nodes;
     * checkpointed: milliseconds). Nothing is ever collected to the driver;
-    * only the per-round convergence flag is read back. Output:
+    * only the per-round convergence flag is read back.
+    *
+    * The edge list is read once: one `explode` emits both orientations of
+    * each pair into the checkpointed symmetric list. Round 0 is the
+    * shuffle that collects the edge-induced node set: each node starts at
+    * min(its id, its smallest neighbor), one propagation step already
+    * taken, so a graph of stars converges in the first checkpoint-and-probe
+    * round. `maxIter` counts round 0 as a round. Output:
     * (idCol, cluster_id). */
   def connectedComponents(edges: DataFrame, nodes: DataFrame, idCol: String,
       maxIter: Int = 25): DataFrame = {
@@ -373,19 +402,29 @@ object Dedup {
     // unlike a cache — replaces the logical plan with the stored blocks, so
     // per-round planning doesn't re-walk the pair pipeline's tree. Blocks
     // are released by the ContextCleaner when the frames go out of scope.
-    val sym = edges.select(col("a_id").as("__src"), col("b_id").as("__dst"))
-      .unionAll(edges.select(col("b_id").as("__src"), col("a_id").as("__dst")))
+    // One explode, not a union of two selects: a union re-runs the whole
+    // uncached pair pipeline (prefix join + verify) once per branch.
+    val sym = edges
+      .select(explode(array(
+        struct(col("a_id").as("__src"), col("b_id").as("__dst")),
+        struct(col("b_id").as("__src"), col("a_id").as("__dst")))).as("__e"))
+      .select(col("__e.__src").as("__src"), col("__e.__dst").as("__dst"))
       .localCheckpoint()
     // Propagate over the EDGE-INDUCED subgraph only: near-dup graphs are
     // overwhelmingly singletons, which never change label — iterating them
     // would drag the whole corpus through every round. Singletons join back
     // exactly once at the end as their own cluster; at 100 TB this is the
     // difference between rounds over |pairs| and rounds over |corpus|.
-    var labels = sym.select(col("__src").as("__id")).distinct()
-      .select(col("__id"), col("__id").as("__label"))
+    // Round 0: the grouping that collects the node set also takes the
+    // first min-label step (the symmetric list's neighbors of a source).
+    var labels = sym.groupBy(col("__src").as("__id"))
+      .agg(min(col("__dst")).as("__nbr"))
+      .select(col("__id"), least(col("__id"), col("__nbr")).as("__label"))
       .localCheckpoint()
-    var converged = false
-    var i = 0
+    // Only a one-round budget must read round 0's change flag; otherwise
+    // round 1's probe tells.
+    var converged = maxIter == 1 && labels.filter(col("__label") < col("__id")).isEmpty
+    var i = 1
     while (!converged && i < maxIter) {
       val nbrMin = sym.join(labels, sym("__src") === labels("__id"))
         .groupBy(col("__dst").as("__id")).agg(min("__label").as("__nbr"))
@@ -447,7 +486,7 @@ object Dedup {
     // re-run md5 once per bit (32×/token) since HOF lambdas don't CSE.
     // After transform(), `h` below is a bound lambda variable — evaluated
     // once per token no matter how many bits read it.
-    val toks = transform(TextFunctions.tokens(textCol), TextFunctions.tokenHash(_))
+    val toks = tokenHashArray(textCol)
     // Integer bit ops only: tokenHash is 0..2^32-1, so shiftright == the
     // floor-div-by-2^i form but without 32 double pow/floor per token.
     val bitvec = (h: Column) => transform(sequence(lit(0), lit(31)),

@@ -152,19 +152,22 @@ class DedupSpec extends SparkSpec {
     val corpus = randomCorpus(seed = 13, nBase = 25)
     val df = corpus.toDF("doc_id", "text")
     val tag = "spec_" + java.util.UUID.randomUUID.toString.replace("-", "").take(12)
-    val t = graft.operators.JaccardIndex.build(df.filter(col("doc_id") % 5 =!= 0),
+    // Even ids are the delta: base k and its mutant k + 25 differ in parity,
+    // so every planted near-duplicate is a (new, existing) pair.
+    val t = graft.operators.JaccardIndex.build(df.filter(col("doc_id") % 2 =!= 0),
       "doc_id", "text", 3, 0.5, tag, s"/tmp/graft_jidx_spec/$tag", 4)
     val got = graft.operators.JaccardIndex.incrementalJoin(spark, t,
-        df.filter(col("doc_id") % 5 === 0), "doc_id", "text", 3, 0.5)
+        df.filter(col("doc_id") % 2 === 0), "doc_id", "text", 3, 0.5)
       .select($"a_id", $"b_id", $"shared", $"jaccard")
       .as[(Long, Long, Long, Double)].collect().toSet
     val want = bruteJaccard(corpus, 3, 0.5).flatMap { case (a, b, sh, j) =>
-      (a % 5 == 0, b % 5 == 0) match {
+      (a % 2 == 0, b % 2 == 0) match {
         case (true, false) => Some((a, b, sh, j))
         case (false, true) => Some((b, a, sh, j))
         case _ => None // both-new and both-existing pairs are out of scope
       }
     }
+    assert(want.nonEmpty, "seed 13 corpus yields no (new, existing) pairs")
     assert(got == want,
       s"missing=${want -- got}\nextra=${got -- want}")
     Seq(t.docsets, t.prefix, t.dfc)
@@ -187,6 +190,27 @@ class DedupSpec extends SparkSpec {
     val lone = Dedup.connectedComponents(edges.limit(0), nodes, "doc_id")
       .as[(Long, Long)].collect().toMap
     assert(lone == nodes.as[Long].collect().map(x => x -> x).toMap)
+    // maxIter counts round 0: one round settles an edgeless graph, not a pair
+    assert(Dedup.connectedComponents(edges.limit(0), nodes, "doc_id", maxIter = 1)
+      .count() == nodes.count())
+    intercept[IllegalStateException] {
+      Dedup.connectedComponents(edges, nodes, "doc_id", maxIter = 1)
+    }
+  }
+
+  test("connectedComponents reads its edge frame once") {
+    // The edge frame is usually the uncached pair pipeline (prefix join +
+    // verify); every extra read of it re-runs that whole pipeline.
+    val reads = spark.sparkContext.longAccumulator("cc_edge_reads")
+    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L))
+    val edges = pairs.toDS().map { p => reads.add(1); p }.toDF("a_id", "b_id")
+    val nodes = Seq(1L, 2L, 3L, 4L, 10L, 11L, 20L).toDF("doc_id")
+    val got = Dedup.connectedComponents(edges, nodes, "doc_id")
+      .as[(Long, Long)].collect().toMap
+    assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 10L -> 10L,
+      11L -> 10L, 20L -> 20L))
+    assert(reads.value == pairs.size.toLong,
+      s"edge rows read ${reads.value} times for ${pairs.size} edges")
   }
 
   test("connectedComponents: a 400-deep chain converges within default maxIter") {
@@ -260,12 +284,14 @@ class DedupSpec extends SparkSpec {
     val corpus = randomCorpus(seed = 31, nBase = 25)
     val df = corpus.toDF("doc_id", "text")
     val tag = "specs_" + java.util.UUID.randomUUID.toString.replace("-", "").take(12)
-    val t = graft.operators.JaccardIndex.build(df.filter(col("doc_id") % 5 =!= 0),
+    // Even ids are the delta, so planted near-duplicates span the split.
+    val t = graft.operators.JaccardIndex.build(df.filter(col("doc_id") % 2 =!= 0),
       "doc_id", "text", 3, 0.5, tag, s"/tmp/graft_jidx_spec/$tag", 4)
-    val delta = corpus.filter(_._1 % 5 == 0)
+    val delta = corpus.filter(_._1 % 2 == 0)
     val want = graft.operators.JaccardIndex.incrementalJoin(spark, t,
         delta.toDF("doc_id", "text"), "doc_id", "text", 3, 0.5)
       .select($"a_id", $"b_id", $"jaccard").as[(Long, Long, Double)].collect().toSet
+    assert(want.nonEmpty, "seed 31 corpus yields no (new, existing) pairs")
     val input =
       org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
     val got = scala.collection.mutable.Set.empty[(Long, Long, Double)]

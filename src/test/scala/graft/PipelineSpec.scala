@@ -148,6 +148,54 @@ class PipelineSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
   }
 
+  test("prepareTrainingData: each call adds exactly 3 Caches entries") {
+    // The per-doc hash projection, the Jaccard join's df-ordered doc sets
+    // and `kept`; nothing else may register per call.
+    def call(tag: String): Int = {
+      val docs = (1L to 12L).map(i =>
+        (i, s"$tag ${(0L until 6L + i).map(j => s"w${(i * j) % 17}").mkString(" ")}"))
+        .toDF("doc_id", "text")
+      val before = Caches.size
+      Pipeline.prepareTrainingData(docs, "doc_id", "text",
+        Pipeline.TrainingConfig(maxRepRatio = 1.0))
+      Caches.size - before
+    }
+    val tag = java.util.UUID.randomUUID.toString.replace("-", "")
+    assert(call(s"a$tag") == 3)
+    assert(call(s"b$tag") == 3)
+  }
+
+  test("prepareTrainingData: quality filter equals a local recompute at the gram-width edges") {
+    val cfg = Pipeline.TrainingConfig(minTokens = 2)
+    val n = cfg.gramN
+    val docs = Seq(
+      1L -> "alpha beta",                       // gramN - 1 tokens: no grams
+      2L -> "alpha beta gamma",                 // exactly gramN tokens: one gram
+      3L -> "spam spam spam",                   // gramN copies of one token
+      4L -> "spam spam spam spam spam spam",    // one token repeated: 4 grams, 1 distinct
+      5L -> "a b c d a b c",                    // 5 grams, 4 distinct: ratio 0.2
+      6L -> "a b c a b c a",                    // 5 grams, 3 distinct: ratio 0.4
+      7L -> "Spam spam",                        // case folds: below gramN
+      8L -> "solo",                             // below the token floor
+      9L -> "")
+    // The former definition: total grams from the token count, distinct
+    // grams counted over the gram strings.
+    val want = docs.flatMap { case (id, text) =>
+      val toks = text.toLowerCase.split("\\s+").filter(_.nonEmpty).toSeq
+      val ng = if (toks.size >= n) toks.size - (n - 1) else 0
+      val nd = toks.sliding(n).filter(_.size == n).toSet.size
+      val ratio = if (ng == 0) 0.0
+        else BigDecimal((ng - nd).toDouble / ng)
+          .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+      if (toks.size >= cfg.minTokens && ratio <= cfg.maxRepRatio)
+        Some(id -> toks.size.toLong) else None
+    }.toMap
+    val td = Pipeline.prepareTrainingData(docs.toDF("doc_id", "text"), "doc_id", "text", cfg)
+    val got = td.cleaned.select("doc_id", "n_tokens").as[(Long, Long)].collect().toMap
+    assert(want.keySet == Set(1L, 2L, 3L, 5L, 7L))
+    assert(got == want)
+  }
+
   test("index persists partitioned by list_id and searches from disk") {
     val base = java.nio.file.Files.createTempDirectory("pipeline2").toString
     val cfg = Config(dim = 32, k = 3, lists = 2, nProbe = 1)
