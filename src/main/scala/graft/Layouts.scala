@@ -1,6 +1,7 @@
 package graft
 
 import scala.collection.mutable.ArrayBuffer
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
 /** Once-per-(session, key) builder memo for DDL-ish layouts — bucketed
@@ -13,6 +14,10 @@ import org.apache.spark.sql.SparkSession
   * catalog. [[tag]] folds the process id into path/table identifiers so
   * concurrent JVMs (bench + verify over one sfDir) never race on shared
   * /tmp files.
+  *
+  * Also the one home of a stored layout's identity: the model fingerprint
+  * every appendable layout (catalog table or plain path) is stamped with,
+  * read, checked and carried across rewrites by location.
   */
 object Layouts {
 
@@ -74,44 +79,114 @@ object Layouts {
       !keys.exists { case (es, ek) => (es eq s) && ek == k } }
   }
 
-  private val FpKey = "graft.model.fingerprint"
-
   /** MD5 hex of a fingerprint payload — ONE digest implementation for
     * every stored-layout stamp, so the formats can't drift apart. */
   def md5Hex(payload: String): String =
     java.security.MessageDigest.getInstance("MD5")
       .digest(payload.getBytes("UTF-8")).map("%02x".format(_)).mkString
 
-  /** Stamp the model/parameter fingerprint a stored layout was built under
-    * as a table property — the append paths' compatibility witness. */
-  def stampFingerprint(s: SparkSession, tableName: String, fp: String): Unit =
-    s.sql(s"ALTER TABLE $tableName SET TBLPROPERTIES ('$FpKey' = '$fp')")
+  /** The storage location of a catalog table — the ONE `DESCRIBE
+    * FORMATTED … Location` lookup. None for a relation without one (a
+    * temp view). */
+  def location(s: SparkSession, table: String): Option[String] =
+    s.sql(s"DESCRIBE FORMATTED $table")
+      .filter(org.apache.spark.sql.functions.col("col_name") === "Location")
+      .select("data_type").collect().headOption.map(_.getString(0))
 
-  /** The stamped fingerprint of a table, if any — maintenance ops that
-    * REWRITE a layout (compaction) read it first and re-stamp after.
-    * Tolerant of non-catalog relations (temp views have no table
-    * properties and SHOW TBLPROPERTIES throws on them): no catalog entry
-    * simply means no stamp — the lenient legacy path. */
-  def readFingerprint(s: SparkSession, tableName: String): Option[String] =
-    scala.util.Try(
-      s.sql(s"SHOW TBLPROPERTIES $tableName")
-        .filter(org.apache.spark.sql.functions.col("key") === FpKey)
-        .collect().headOption.map(_.getString(1))
-    ).toOption.flatten
+  private def fs(s: SparkSession, p: Path) =
+    p.getFileSystem(s.sparkContext.hadoopConfiguration)
+
+  /** The contents of the small text marker file at `p`, if present. */
+  private[graft] def readMarker(s: SparkSession, p: Path): Option[String] =
+    if (!fs(s, p).exists(p)) None
+    else {
+      val in = fs(s, p).open(p)
+      Some(try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+        finally in.close())
+    }
+
+  /** Commit `content` as the marker at `p` by temp+rename: a write crashed
+    * midway leaves the previous marker (or none), never a torn one. */
+  private[graft] def writeMarker(s: SparkSession, p: Path,
+      content: String): Unit = {
+    val tmp = new Path(p.toString + ".tmp")
+    val out = fs(s, p).create(tmp, true)
+    try out.write(content.getBytes("UTF-8")) finally out.close()
+    deleteMarker(s, p)
+    if (!fs(s, p).rename(tmp, p))
+      sys.error(s"Layouts.writeMarker: rename $tmp -> $p failed")
+  }
+
+  private def deleteMarker(s: SparkSession, p: Path): Unit =
+    if (fs(s, p).exists(p)) fs(s, p).delete(p, false)
+
+  /** The stamp: a `_`-prefixed marker INSIDE the layout location (Spark's
+    * scans skip it; an overwrite of the location drops it with the data). */
+  private[graft] def fingerprintPath(loc: String) = new Path(loc, "_graft_model_fp")
+
+  /** The stamp's copy OUTSIDE the location while [[keepFingerprint]]'s
+    * rewrite runs — what survives a kill before the re-stamp. */
+  private[graft] def fingerprintBackupPath(loc: String) =
+    new Path(loc.stripSuffix("/") + "__fp_backup")
+
+  /** Stamp the model/parameter fingerprint the layout at `loc` was built
+    * under — the append paths' compatibility witness — and retire any
+    * backup a crashed earlier rewrite left. */
+  def stampFingerprintAt(s: SparkSession, loc: String, fp: String): Unit = {
+    writeMarker(s, fingerprintPath(loc), fp)
+    deleteMarker(s, fingerprintBackupPath(loc))
+  }
+
+  /** The layout's stamp, else the backup of a rewrite killed before it
+    * could re-stamp. */
+  def readFingerprintAt(s: SparkSession, loc: String): Option[String] =
+    readMarker(s, fingerprintPath(loc))
+      .orElse(readMarker(s, fingerprintBackupPath(loc)))
 
   /** Enforce that an O(delta) append runs under the SAME fingerprint the
     * base build stamped: a delta encoded against re-fitted models/params is
-    * a silently incompatible code space — fail loudly instead. Tables
-    * without a stamp (pre-fingerprint layouts) pass, preserving
-    * compatibility with externally-created tables. */
-  def checkFingerprint(s: SparkSession, tableName: String, fp: String,
-      what: String): Unit = {
-    val stored = readFingerprint(s, tableName)
-    stored.foreach(st => require(st == fp,
+    * a silently incompatible code space — fail loudly instead. Unstamped
+    * layouts pass (externally-created ones). */
+  def checkFingerprintAt(s: SparkSession, loc: String, fp: String,
+      what: String): Unit =
+    readFingerprintAt(s, loc).foreach(st => require(st == fp,
       s"$what: append models/params do not match the stored layout's build " +
         s"(stored fingerprint $st, append $fp) — re-fitting requires a " +
         "rebuild, not an append"))
+
+  /** Drop the stamp and any backup — an unstamped build's hook, so a stale
+    * backup cannot guard appends to the new layout. */
+  private[graft] def clearFingerprintAt(s: SparkSession, loc: String): Unit = {
+    deleteMarker(s, fingerprintPath(loc))
+    deleteMarker(s, fingerprintBackupPath(loc))
   }
+
+  /** Run `rewrite` — which truncates `loc`, stamp included — carrying the
+    * fingerprint across it crash-safely: back the stamp up, rewrite,
+    * re-stamp (retiring the backup). A kill in between leaves the backup,
+    * which [[readFingerprintAt]] falls back to and the next rewrite
+    * restores. Compaction changes layout, never identity. */
+  private[graft] def keepFingerprint[T](s: SparkSession, loc: String)(
+      rewrite: => T): T = {
+    val fp = readFingerprintAt(s, loc)
+    fp.foreach(writeMarker(s, fingerprintBackupPath(loc), _))
+    val r = rewrite
+    fp.foreach(stampFingerprintAt(s, loc, _))
+    r
+  }
+
+  /** The table-name forms: the `*At` forms at the table's [[location]]; a
+    * relation without one reads as unstamped and cannot be stamped. */
+  def stampFingerprint(s: SparkSession, tableName: String, fp: String): Unit =
+    stampFingerprintAt(s, location(s, tableName).getOrElse(
+      throw new IllegalArgumentException(s"$tableName has no location")), fp)
+
+  def readFingerprint(s: SparkSession, tableName: String): Option[String] =
+    location(s, tableName).flatMap(readFingerprintAt(s, _))
+
+  def checkFingerprint(s: SparkSession, tableName: String, fp: String,
+      what: String): Unit =
+    location(s, tableName).foreach(checkFingerprintAt(s, _, fp, what))
 
   /** Deterministic pid-suffixed identifier for `dir`-scoped table names and
     * paths (hex of the dir's name-UUID + this JVM's pid). */

@@ -88,79 +88,70 @@ object Bucketed {
     df.sparkSession.catalog.refreshTable(tableName)
   }
 
-  /** The shared compaction scaffold for appendable bucketed layouts:
-    * materialize `merge` of the live table OFF the table (a bucketed
-    * overwrite of its own scan would read-while-truncate), rewrite through
-    * the same bucketed layout at the same location, and carry the build's
-    * fingerprint across — compaction changes layout, never identity.
-    * "Identity" includes the layout's [[Tombstones]] side store: the
-    * rewrite deletes the location's contents, and silently dropping
-    * delete markers while their rows survive would RESURRECT deleted
-    * rows — so the markers are restored across the rewrite by default.
-    * Pass `purgeIdCol` to make the compaction a physical purge instead:
-    * tombstoned ids are anti-joined out of the merged rows and the
-    * markers die WITH the rewrite (cleared tombstones can never ship
-    * without the purge that justifies them — [[IvfIndex.compact]]'s
-    * invariant). One definition for the span-count, LSH-bucket,
-    * CDC-chunk, and graph-edge stores.
-    *
-    * SINGLE MAINTENANCE WRITER: like every maintenance face here, the
-    * rewrite assumes no concurrent mutation of the same layout — an
-    * append (bucketed rows) or a takedown ([[Tombstones.add]] /
-    * `addStream`) committed between this method's snapshot reads and its
-    * rewrite is lost with the files the rewrite replaces. Quiesce
-    * ingestion and takedown streams for the layout across a compaction
-    * window; crash-safety WITHIN the single writer is what
-    * [[Tombstones.preserveAcrossRewrite]] provides, not concurrency.
-    * Since r13 the TAKEDOWN half is fenced ([[Tombstones.fencedRewrite]]
-    * brackets this whole body, marker read included): a takedown racing
-    * the window raises instead of being silently destroyed. */
+  /** Compact an appendable bucketed table through [[compactWith]]:
+    * `merge` of its live rows rewritten through the same bucketed layout
+    * at the same location. One definition for the span-count, LSH-bucket,
+    * CDC-chunk, and graph-edge stores. */
   def compactTable(spark: SparkSession, tableName: String, keys: Seq[String],
       numBuckets: Int, purgeIdCol: Option[String] = None,
       partCols: Seq[String] = Nil)(
-      merge: DataFrame => DataFrame): Unit =
-    compactWith(spark, tableName, purgeIdCol, merge) { (merged, loc) =>
-      writeBucketedKeys(merged, tableName, loc, keys, numBuckets, partCols)
-    }
+      merge: DataFrame => DataFrame): Unit = {
+    val loc = graft.Layouts.location(spark, tableName).get
+    compactWith(spark, loc, spark.table(tableName), purgeIdCol, merge)(
+      writeBucketedKeys(_, tableName, loc, keys, numBuckets, partCols))
+  }
 
-  /** [[compactTable]]'s scaffold with the layout write as a function of
-    * (rows, location): the fingerprint carry, the location lookup, the
-    * fence, the optional purge, and the tombstone preserve or clear around
-    * `rewrite`. `merge` of the live rows is materialized off the table
-    * before `rewrite` runs. Shared with [[PqIndex.compactIvfIndex]], whose
-    * layout is list-partitioned instead of bucketed. */
-  private[operators] def compactWith(spark: SparkSession, tableName: String,
-      purgeIdCol: Option[String], merge: DataFrame => DataFrame)(
-      rewrite: (DataFrame, String) => Unit): Unit = {
-    val fp = graft.Layouts.readFingerprint(spark, tableName)
-    val loc = spark.sql(s"DESCRIBE FORMATTED $tableName")
-      .filter(org.apache.spark.sql.functions.col("col_name") === "Location")
-      .select("data_type").head().getString(0)
+  /** The ONE compaction scaffold for every stored layout at `loc` — the
+    * bucketed tables ([[compactTable]]), the IVF-PQ codes table
+    * ([[PqIndex.compactIvfIndex]]) and the plain IVF path layout
+    * ([[IvfIndex.compact]]): materialize `merge` of the rows `read`
+    * returns OFF the layout (an overwrite of its own scan would
+    * read-while-truncate), then `rewrite` the location from them, with
+    * the layout's identity carried across — its fingerprint
+    * ([[graft.Layouts.keepFingerprint]]'s crash net) and its
+    * [[Tombstones]] side store: the rewrite deletes the location's
+    * contents, and silently dropping delete markers while their rows
+    * survive would RESURRECT deleted rows — so the markers are restored
+    * across the rewrite by default. Pass `purgeIdCol` to make the
+    * compaction a physical purge instead: tombstoned ids are anti-joined
+    * out of the rows and the markers die WITH the rewrite (cleared
+    * tombstones can never ship without the purge that justifies them).
+    *
+    * SINGLE MAINTENANCE WRITER: like every maintenance face here, the
+    * rewrite assumes no concurrent mutation of the same layout — an
+    * append committed between this method's snapshot reads and its
+    * rewrite is lost with the files the rewrite replaces. Quiesce
+    * ingestion for the layout across a compaction window; the TAKEDOWN
+    * half is fenced ([[Tombstones.fencedRewrite]] brackets this whole
+    * body, marker read included): a takedown racing the window raises
+    * instead of being silently destroyed. */
+  private[operators] def compactWith(spark: SparkSession, loc: String,
+      read: => DataFrame, purgeIdCol: Option[String],
+      merge: DataFrame => DataFrame)(rewrite: DataFrame => Unit): Unit =
     Tombstones.fencedRewrite(spark, loc) {
       val tombs = Tombstones.read(spark, loc).map(_.localCheckpoint())
-      val base = spark.table(tableName)
+      val base = read
       val rows = purgeIdCol match {
         case Some(idCol) if tombs.nonEmpty =>
           Tombstones.excludeIds(base, base(idCol), tombs.get)
         case _ => base
       }
       val merged = merge(rows).localCheckpoint()
-      purgeIdCol match {
-        case None =>
-          // layout-only compaction: the markers ride the crash-safe
-          // backup/restore protocol — a kill at any point between the
-          // rewrite's commit and the restore must not resurrect rows
-          // (unfenced form: this body already holds the layout's fence)
-          Tombstones.preserveUnfenced(spark, loc)(rewrite(merged, loc))
-        case Some(_) =>
-          rewrite(merged, loc)
-          // purge: markers die WITH the rewrite; clear also removes any
-          // stale sibling backup a crashed earlier cycle left behind
-          Tombstones.clear(spark, loc)
+      graft.Layouts.keepFingerprint(spark, loc) {
+        purgeIdCol match {
+          case None =>
+            // layout-only compaction: the markers ride the crash-safe
+            // backup/restore protocol (unfenced form: this body already
+            // holds the layout's fence)
+            Tombstones.preserveUnfenced(spark, loc)(rewrite(merged))
+          case Some(_) =>
+            rewrite(merged)
+            // purge: markers die WITH the rewrite; clear also removes any
+            // stale sibling backup a crashed earlier cycle left behind
+            Tombstones.clear(spark, loc)
+        }
       }
-      fp.foreach(graft.Layouts.stampFingerprint(spark, tableName, _))
     }
-  }
 
   /** Equi-join two tables bucketed on `key` with the same bucket count:
     * both scans report the same HashPartitioning, so the join (and any

@@ -163,14 +163,6 @@ object CcLabels {
   private def appliedPath(layoutPath: String) =
     new org.apache.hadoop.fs.Path(layoutPath.stripSuffix("/") + "__cc_applied")
 
-  private def hfs(spark: SparkSession, p: org.apache.hadoop.fs.Path) =
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def tableLocation(spark: SparkSession, table: String): String =
-    spark.sql(s"DESCRIBE FORMATTED $table")
-      .filter(col("col_name") === "Location")
-      .select("data_type").head().getString(0)
-
   /** (last applied batchId, version watermark) from the sidecar. Absent
     * sidecar: a FRESH store (max __v == 0 — e.g. built through
     * [[Bucketed]] directly) safely starts at (-1, 0); a store that has
@@ -183,17 +175,11 @@ object CcLabels {
   private[graft] def readApplied(spark: SparkSession, table: String,
       loc: String): (Long, Long) = {
     val p = appliedPath(loc)
-    val f = hfs(spark, p)
-    if (f.exists(p)) {
-      val in = f.open(p)
-      val content = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      content.trim.split(" ") match {
-        case Array(b, v) => (b.toLong, v.toLong)
-        case other => throw new IllegalStateException(
-          s"malformed cc-applied marker at $p: '${other.mkString(" ")}'")
-      }
-    } else {
+    graft.Layouts.readMarker(spark, p).map(_.trim.split(" ") match {
+      case Array(b, v) => (b.toLong, v.toLong)
+      case other => throw new IllegalStateException(
+        s"malformed cc-applied marker at $p: '${other.mkString(" ")}'")
+    }).getOrElse {
       val maxVer = spark.table(table)
         .agg(coalesce(max(col(VerCol)), lit(0L))).head().getLong(0)
       if (maxVer > 0L) throw new IllegalStateException(
@@ -205,23 +191,14 @@ object CcLabels {
     }
   }
 
-  /** Temp+rename, like every other commit path here (the r14 ADVICE
-    * availability note): an in-place overwrite crashed mid-write leaves a
-    * torn marker that wedges every later batch on "malformed cc-applied
-    * marker" even though the true state was recoverable an instant
-    * earlier — with the rename the marker is always either the previous
-    * or the new (batchId, ver) pair. */
+  /** Temp+rename ([[graft.Layouts.writeMarker]]): an in-place overwrite
+    * crashed mid-write would leave a torn marker that wedges every later
+    * batch on "malformed cc-applied marker" even though the true state was
+    * recoverable an instant earlier — with the rename the marker is always
+    * either the previous or the new (batchId, ver) pair. */
   private[graft] def writeApplied(spark: SparkSession, loc: String,
-      batchId: Long, ver: Long): Unit = {
-    val p = appliedPath(loc)
-    val tmp = new org.apache.hadoop.fs.Path(p.toString + ".tmp")
-    val f = hfs(spark, p)
-    val out = f.create(tmp, true)
-    try out.write(s"$batchId $ver".getBytes("UTF-8")) finally out.close()
-    if (f.exists(p)) f.delete(p, false)
-    if (!f.rename(tmp, p))
-      sys.error(s"CcLabels.writeApplied: rename $tmp -> $p failed")
-  }
+      batchId: Long, ver: Long): Unit =
+    graft.Layouts.writeMarker(spark, appliedPath(loc), s"$batchId $ver")
 
   /** Create the maintained store from a full (idCol, cluster_id) labeling:
     * rows stamped version 0 in BOTH layouts — the primary
@@ -307,7 +284,7 @@ object CcLabels {
   def applyBatch(spark: SparkSession, labelTable: String, idCol: String,
       numBuckets: Int, batch: DataFrame, batchId: Long)(
       newPairsOf: DataFrame => DataFrame): Long = {
-    val loc = tableLocation(spark, labelTable)
+    val loc = graft.Layouts.location(spark, labelTable).get
     val (lastBatch, lastVer) = readApplied(spark, labelTable, loc)
     if (batchId <= lastBatch) 0L
     else {
@@ -369,7 +346,7 @@ object CcLabels {
           max(col(VerCol)).as(VerCol))
         .withColumn(PbCol, bucketOf(col(idCol), numBuckets))
     }
-    val mloc = tableLocation(spark, memberTable(table))
+    val mloc = graft.Layouts.location(spark, memberTable(table)).get
     val rows = spark.table(table)
       .select(col("cluster_id"), col(idCol), col(VerCol))
       .localCheckpoint() // materialize off the primary before the rewrite

@@ -27,6 +27,11 @@ import graft.functions.VectorFunctions.Metric
   *    Deterministic arithmetic end to end → DuckDB-oracle-replayable.
   *  - [[fitKMeans]]: MLlib KMeans (fixed seed) refines real centroids;
   *    recall is asserted in tests rather than hash-compared.
+  *
+  * Lifecycle: build ([[write]]), O(delta) [[append]], [[compact]]. The
+  * layout's model fingerprint lives where every stored layout's does
+  * ([[graft.Layouts]], keyed by the path), and compaction runs through the
+  * one scaffold the catalog tables use ([[Bucketed.compactWith]]).
   */
 object IvfIndex {
 
@@ -132,92 +137,48 @@ object IvfIndex {
       .sorted.mkString(";")
 
   /** Stable fingerprint of the (centroids, metric) pair a [[write]] layout
-    * was assigned under — the path-based sibling of
-    * [[PqIndex.modelFingerprint]] (no catalog table here, so the stamp is
-    * a `_`-prefixed sidecar file Spark's scans ignore). */
+    * was assigned under — stamped at the layout path like every stored
+    * layout's ([[graft.Layouts.stampFingerprintAt]]); the path-keyed
+    * sibling of [[PqIndex.modelFingerprint]]. */
   def modelFingerprint(model: Model, metric: Metric): String =
     graft.Layouts.md5Hex(s"${centroidsKey(model)}|$metric")
 
-  private def fpPath(path: String) =
-    new org.apache.hadoop.fs.Path(path, "_graft_model_fp")
-
-  /** Sibling crash net for the fingerprint across [[compact]]'s rewrite
-    * (the rewrite deletes the in-layout sidecar with the data files; a
-    * kill before the re-write would otherwise leave the layout intact but
-    * UNSTAMPED, silently disabling [[append]]'s stale-model guard). */
-  private def fpBackupPath(path: String) =
-    new org.apache.hadoop.fs.Path(path.stripSuffix("/") + "__fp_backup")
-
-  private def readFile(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): Option[String] =
-    if (fs.exists(p)) {
-      val in = fs.open(p)
-      Some(try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close())
-    } else None
-
-  private def readFpSidecar(fs: org.apache.hadoop.fs.FileSystem,
-      path: String): Option[String] =
-    readFile(fs, fpPath(path)).orElse(readFile(fs, fpBackupPath(path)))
-
-  private def writeFile(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path, content: String): Unit = {
-    val out = fs.create(p, true)
-    try out.write(content.getBytes("UTF-8")) finally out.close()
-  }
-
-  private def writeFpSidecar(fs: org.apache.hadoop.fs.FileSystem,
-      path: String, fp: String): Unit = {
-    writeFile(fs, fpPath(path), fp)
-    // the in-layout stamp is authoritative again — retire the crash net
-    if (fs.exists(fpBackupPath(path))) fs.delete(fpBackupPath(path), false)
-  }
-
   /** K3-style index materialization: overwrite, partitioned by list_id —
     * `spark.read.parquet(path)` + a `list_id` filter then prunes partitions
-    * exactly like ivfflat probes. */
+    * exactly like ivfflat probes. Unstamped: [[append]] checks nothing. */
   def write(indexed: DataFrame, path: String): Unit = {
-    // a fresh build supersedes the path's delete history — including a
-    // stale sibling backup from a CRASHED earlier compaction, which the
-    // overwrite below cannot reach (it sits outside the layout path) and
-    // which Tombstones.read would otherwise union in against the NEW
-    // build's live rows
+    // a fresh build supersedes the path's delete history and identity —
+    // including sibling backups from a CRASHED earlier compaction, which
+    // the overwrite below cannot reach (they sit outside the layout path):
+    // stale markers would be unioned in against the NEW build's live rows,
+    // a stale fingerprint would check appends against the OLD model
     Tombstones.clearForRebuild(indexed.sparkSession, path)
+    graft.Layouts.clearFingerprintAt(indexed.sparkSession, path)
     indexed.write.mode("overwrite").partitionBy("list_id").parquet(path)
   }
 
-  /** [[write]] with the assignment model's fingerprint stamped as a
-    * sidecar — the append-able form: [[append]] requires the stamp (when
-    * present) to match its model, closing the same silent-code-space hole
-    * the table-backed indexes close via table properties. */
+  /** [[write]] stamped with the assignment model's fingerprint — the
+    * append-able form: [[append]] requires its model to match. */
   def write(indexed: DataFrame, path: String, model: Model,
       metric: Metric): Unit = {
     write(indexed, path)
-    val fs = fpPath(path).getFileSystem(
-      indexed.sparkSession.sparkContext.hadoopConfiguration)
-    writeFpSidecar(fs, path, modelFingerprint(model, metric))
+    graft.Layouts.stampFingerprintAt(indexed.sparkSession, path,
+      modelFingerprint(model, metric))
   }
 
   /** O(delta) ingest for a [[write]] layout: assign ONLY the delta against
     * the STORED model and append into the partitioned files — the plain-IVF
     * face of [[PqIndex.appendToIvfIndex]], same invariant (the model must
     * be the build's; re-fit ⇒ rebuild, scheduled via [[assignmentDrift]]),
-    * ENFORCED against the sidecar fingerprint when the build stamped one
+    * ENFORCED against the layout's fingerprint when the build stamped one
     * (builds through the 2-arg [[write]] pass unchecked, preserving
     * compatibility with externally-created layouts). Assign is a pure
     * projection, so the append touches only the delta's list_id
     * partitions. */
   def append(delta: DataFrame, idCol: String, vecCol: String, model: Model,
       metric: Metric, path: String): Unit = {
-    val fs = fpPath(path).getFileSystem(
-      delta.sparkSession.sparkContext.hadoopConfiguration)
-    readFpSidecar(fs, path).foreach { stored =>
-      val fp = modelFingerprint(model, metric)
-      require(stored == fp,
-        s"IvfIndex.append: model does not match the stored layout's build " +
-          s"(stored fingerprint $stored, append $fp) — re-fitting requires " +
-          "a rebuild, not an append")
-    }
+    graft.Layouts.checkFingerprintAt(delta.sparkSession, path,
+      modelFingerprint(model, metric), "IvfIndex.append")
     // Tombstone-collision guard: exclusion is BY ID ([[Tombstones]]), so a
     // delta row re-using a tombstoned id would land in the files and then
     // be hidden by the very tombstone that killed its predecessor — a
@@ -240,49 +201,27 @@ object IvfIndex {
 
   /** Physically purge the layout's tombstoned rows ([[Tombstones]] — the
     * delete face: ids marked deleted, data files untouched) and clear the
-    * tombstone store, in one rewrite: read the layout, drop tombstoned
-    * ids, materialize OFF the layout (`localCheckpoint` — an overwrite of
-    * a path while scanning it would read-while-truncate, the
-    * [[Bucketed.compactTable]] pattern), rewrite through the same
-    * list-partitioned form, and carry the build's model fingerprint
-    * across — compaction changes layout, never identity. The overwrite
-    * deletes the old data files AND the tombstone side store together, so
-    * the cleared-tombstone state can never ship without the purge that
-    * justifies it. Searches before compact (anti-join exclusion) and
-    * after (purged files) answer identically — pinned by
-    * `pipeline_forget` and TombstonesSpec. */
+    * tombstone store, in one list-partitioned rewrite through
+    * [[Bucketed.compactWith]] — the scaffold every stored layout compacts
+    * through (fence, purge, fingerprint carried across). Searches before
+    * compact (anti-join exclusion) and after (purged files) answer
+    * identically — pinned by `pipeline_forget` and TombstonesSpec. */
   def compact(spark: SparkSession, path: String, idCol: String): Unit =
-    // fence the whole window, marker read included: a takedown racing the
-    // rewrite raises (Tombstones.add's check) instead of being destroyed
-    Tombstones.fencedRewrite(spark, path) {
-      val fs = fpPath(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val fp = readFpSidecar(fs, path)
-      val live = Tombstones.excludeDeleted(
-        spark.read.parquet(path), idCol, spark, path).localCheckpoint()
-      // an all-tombstoned layout would compact to an EMPTY partitioned
-      // write, which spark.read.parquet cannot infer a schema from — a
-      // stamped but unreadable layout. Fail loudly BEFORE touching any
-      // file (LayoutUntouched completes the fence: nothing changed, the
-      // layout keeps serving and accepting takedowns): deleting the last
-      // row is a rebuild/decommission decision, not a compaction.
-      if (live.limit(1).count() == 0)
-        throw new Tombstones.LayoutUntouched(
-          s"IvfIndex.compact: every row of $path is tombstoned — an empty " +
-            "rewrite would leave an unreadable layout; rebuild (or retire) " +
-            "the layout instead of compacting it")
-      // stamp the crash net BEFORE the rewrite deletes the in-layout
-      // sidecar: a kill in the window re-reads identity from the backup
-      // (readFpSidecar's fallback) instead of silently skipping append's
-      // stale-model guard
-      fp.foreach(writeFile(fs, fpBackupPath(path), _))
-      live.write.mode("overwrite").partitionBy("list_id").parquet(path)
-      // the purge IS the marker clear (the overwrite deleted the side
-      // store); clear() also removes any stale sibling backup a crashed
-      // earlier preserve cycle left, which would otherwise resurrect
-      // markers whose rows this purge just removed
-      Tombstones.clear(spark, path)
-      fp.foreach(writeFpSidecar(fs, path, _))
-    }
+    Bucketed.compactWith(spark, path, spark.read.parquet(path), Some(idCol),
+      { live =>
+        // an all-tombstoned layout would compact to an EMPTY partitioned
+        // write, which spark.read.parquet cannot infer a schema from — a
+        // stamped but unreadable layout. Fail loudly BEFORE touching any
+        // file (LayoutUntouched completes the fence: nothing changed, the
+        // layout keeps serving and accepting takedowns): deleting the last
+        // row is a rebuild/decommission decision, not a compaction.
+        if (live.isEmpty)
+          throw new Tombstones.LayoutUntouched(
+            s"IvfIndex.compact: every row of $path is tombstoned — an empty " +
+              "rewrite would leave an unreadable layout; rebuild (or retire) " +
+              "the layout instead of compacting it")
+        live
+      })(_.write.mode("overwrite").partitionBy("list_id").parquet(path))
 
   /** Quantizer-drift metric — the signal a deployment schedules index
     * rebuilds by (the append-ingest invariant: deltas encode against the

@@ -50,9 +50,6 @@ object NgramLm {
     * bigram counts, and the (total, V) normalizer addends. */
   final case class LmTables(uni: String, bi: String, stats: String)
 
-  // NOTE: must not contain the substring "token" — Spark's default
-  // property-value redaction regex ((?i)token|secret|...) would redact it
-  // in SHOW TBLPROPERTIES and the read-back check could never match.
   private def fp = "lm|ws-split|bigram"
 
   private def uniCounts(docs: DataFrame, textCol: String): DataFrame =

@@ -386,8 +386,8 @@ object PqIndex {
   }
 
   /** Stable fingerprint of the (coarse quantizer, codebooks, metric)
-    * triple an IVF-PQ layout was encoded under — stored as a table
-    * property by [[writeIvfIndex]] and REQUIRED to match by
+    * triple an IVF-PQ layout was encoded under — stamped at the table's
+    * location by [[writeIvfIndex]] ([[graft.Layouts]]) and REQUIRED to match by
     * [[appendToIvfIndex]], so a delta encoded against re-fitted models
     * (a silently incompatible code space) fails loudly instead of
     * corrupting the index. */
@@ -442,8 +442,8 @@ object PqIndex {
     * Append-mode invariant: `pqModel`/`ivfModel` MUST be the models the
     * base build used — encoding deltas against re-fitted models silently
     * mixes incompatible code spaces. ENFORCED: the build stamps
-    * [[modelFingerprint]] as a table property and this method requires a
-    * match. Re-fitting requires a rebuild; `ivf_drift_summary` is the
+    * [[modelFingerprint]] at the table's location and this method requires
+    * a match. Re-fitting requires a rebuild; `ivf_drift_summary` is the
     * metric a deployment schedules rebuilds by.
     * Rebuild equivalence (same models ⇒ appended table ≡ from-scratch
     * encode of the union) is exact because assign/encode are
@@ -465,8 +465,9 @@ object PqIndex {
 
   /** Compact an appended codes table: rewrite each list partition's files
     * in one pass off a checkpointed read, carrying the build's model
-    * fingerprint across the rewrite ([[Bucketed.compactTable]]'s
-    * scaffold with a list-partitioned write — every append adds a file
+    * fingerprint across the rewrite ([[Bucketed.compactWith]], the
+    * scaffold every stored layout compacts through, with a
+    * list-partitioned write — every append adds a file
     * per touched partition, and a long append history degrades probe scan
     * efficiency; compaction bounds it while changing nothing a reader
     * sees, gated by `pq_index_compact`).
@@ -478,12 +479,15 @@ object PqIndex {
     * the files and the markers die WITH the rewrite,
     * [[IvfIndex.compact]]'s compressed-tier sibling. */
   def compactIvfIndex(spark: org.apache.spark.sql.SparkSession,
-      tableName: String, purgeIdCol: Option[String] = None): Unit =
-    Bucketed.compactWith(spark, tableName, purgeIdCol, identity) { (rows, loc) =>
+      tableName: String, purgeIdCol: Option[String] = None): Unit = {
+    val loc = graft.Layouts.location(spark, tableName).get
+    Bucketed.compactWith(spark, loc, spark.table(tableName), purgeIdCol,
+        identity) { rows =>
       spark.sql(s"DROP TABLE IF EXISTS $tableName")
       rows.write.mode("overwrite").format("parquet")
         .partitionBy("list_id").option("path", loc).saveAsTable(tableName)
     }
+  }
 
   /** ADC + refine (the "IVFADC+R" production shape): [[search]] overfetches
     * k·`overfetch` candidates from the code scan, then ONLY those rows'

@@ -195,7 +195,7 @@ object IndexQueries extends graft.QueryModule {
   /** Stored plain-IVF layout for the filtered-search tier: the full
     * fixture corpus (vectors + the `label` metadata column the filter
     * reads) assigned under the seed quantizer and written partitioned by
-    * `list_id` with the model-fingerprint sidecar ([[IvfIndex.write]]) —
+    * `list_id`, stamped with the model fingerprint ([[IvfIndex.write]]) —
     * pgvector's `ivfflat` at rest. `ivf_index_build` pays the write as a
     * Bench producer; the filtered-search queries read the layout. */
   private object IvfLayout {

@@ -185,9 +185,7 @@ class CcLabelsSpec extends SparkSpec {
 
   test("a replayed batch no-ops; a crash between append and marker replays to identical labels") {
     val table = initStore()
-    val loc = spark.sql(s"DESCRIBE FORMATTED $table")
-      .filter(col("col_name") === "Location")
-      .select("data_type").head().getString(0)
+    val loc = Layouts.location(spark, table).get
     val b1 = Seq(100L, 101L).toDF("doc_id")
     val n1 = CcLabels.applyBatch(spark, table, "doc_id", 2, b1, 0L)(pairsOf)
     assert(n1 == 4L)
@@ -214,9 +212,7 @@ class CcLabelsSpec extends SparkSpec {
 
   test("a lost applied-marker is loud once batches exist, silent-safe on a fresh store") {
     val table = initStore()
-    val loc = spark.sql(s"DESCRIBE FORMATTED $table")
-      .filter(col("col_name") === "Location")
-      .select("data_type").head().getString(0)
+    val loc = Layouts.location(spark, table).get
     // fresh store, sidecar gone: safe fallback (nothing applied yet)
     val p = new org.apache.hadoop.fs.Path(loc.stripSuffix("/") + "__cc_applied")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)

@@ -133,6 +133,98 @@ class IndexAppendSpec extends SparkSpec {
     Seq(t, tl, tlc, ts.counts).foreach(n => spark.sql(s"DROP TABLE IF EXISTS $n"))
   }
 
+  test("a fingerprint value containing 'token' stamps and reads back equal") {
+    val t = "graft_test_fp_token"
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+    Seq(1L).toDF("id").write.mode("overwrite").format("parquet")
+      .option("path", s"/tmp/graft_test_fptoken/${ProcessHandle.current().pid()}")
+      .saveAsTable(t)
+    Layouts.stampFingerprint(spark, t, "lm|token-split|secret")
+    assert(Layouts.readFingerprint(spark, t).contains("lm|token-split|secret"))
+    Layouts.checkFingerprint(spark, t, "lm|token-split|secret", "token check")
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+  }
+
+  private def exists(p: org.apache.hadoop.fs.Path): Boolean =
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+
+  /** Run `rewrite` under the compaction's fingerprint crash net and kill
+    * it before the re-stamp: the backup stamp is left, the in-layout stamp
+    * (truncated by the rewrite) is gone. */
+  private def killBeforeRestamp(loc: String)(rewrite: => Unit): Unit = {
+    val e = intercept[IllegalStateException] {
+      Layouts.keepFingerprint(spark, loc) {
+        rewrite
+        throw new IllegalStateException("killed before re-stamp")
+      }
+    }
+    assert(e.getMessage == "killed before re-stamp")
+    assert(!exists(Layouts.fingerprintPath(loc)), "the rewrite keeps the stamp")
+    assert(exists(Layouts.fingerprintBackupPath(loc)), "no backup stamp")
+  }
+
+  private def assertRestamped(loc: String, fp: String): Unit = {
+    assert(exists(Layouts.fingerprintPath(loc)), "compaction did not re-stamp")
+    assert(!exists(Layouts.fingerprintBackupPath(loc)),
+      "compaction did not retire the backup")
+    assert(Layouts.readFingerprintAt(spark, loc).contains(fp))
+  }
+
+  test("IVF layout: a compaction killed before its re-stamp keeps the append guard; the next compaction restores the stamp") {
+    val (base, delta) = splitCorpus
+    val model = IvfIndex.fitSeeds(base, "id", "vec", 4)
+    val refit = IvfIndex.fitSeeds(corpus.filter(col("id") >= 2L), "id", "vec", 4)
+    val path = s"/tmp/graft_test_fpcrash/ivf_${ProcessHandle.current().pid()}"
+    IvfIndex.write(IvfIndex.assign(base, "id", "vec", model, Cosine), path,
+      model, Cosine)
+    killBeforeRestamp(path) {
+      spark.read.parquet(path).localCheckpoint()
+        .write.mode("overwrite").partitionBy("list_id").parquet(path)
+    }
+    intercept[IllegalArgumentException] {
+      IvfIndex.append(delta, "id", "vec", refit, Cosine, path)
+    }
+    IvfIndex.compact(spark, path, "id")
+    assertRestamped(path, IvfIndex.modelFingerprint(model, Cosine))
+    intercept[IllegalArgumentException] {
+      IvfIndex.append(delta, "id", "vec", refit, Cosine, path)
+    }
+    IvfIndex.append(delta, "id", "vec", model, Cosine, path)
+    assert(spark.read.parquet(path).count() == 150L)
+    // An unstamped rebuild over a crashed compaction's backup retires it:
+    // the new layout must not be guarded by the OLD model's stamp.
+    killBeforeRestamp(path) {
+      spark.read.parquet(path).localCheckpoint()
+        .write.mode("overwrite").partitionBy("list_id").parquet(path)
+    }
+    IvfIndex.write(IvfIndex.assign(base, "id", "vec", refit, Cosine), path)
+    assert(Layouts.readFingerprintAt(spark, path).isEmpty)
+    IvfIndex.append(delta, "id", "vec", refit, Cosine, path)
+  }
+
+  test("bucketed store: a compaction killed before its re-stamp keeps the append guard; the next compaction restores the stamp") {
+    val pid = ProcessHandle.current().pid()
+    val docs = Seq((1L, "a b c d e f g h"), (2L, "b c d e f g h i")).toDF("id", "text")
+    val ts = graft.operators.SpanDedup.buildIndex(docs, "id", "text", 5,
+      s"fpcrash_$pid", s"/tmp/graft_test_fpcrash/span_$pid", 2)
+    val loc = Layouts.location(spark, ts.counts).get
+    killBeforeRestamp(loc) {
+      graft.operators.Bucketed.writeBucketed(
+        spark.table(ts.counts).localCheckpoint(), ts.counts, loc, "__gh", 2)
+    }
+    val more = Seq((3L, "c d e f g h i j")).toDF("id", "text")
+    intercept[IllegalArgumentException] { // a different window width
+      graft.operators.SpanDedup.appendToIndex(ts, more, "id", "text", 6, 2)
+    }
+    graft.operators.SpanDedup.compactIndex(spark, ts, 2)
+    assertRestamped(loc, "span|5")
+    intercept[IllegalArgumentException] {
+      graft.operators.SpanDedup.appendToIndex(ts, more, "id", "text", 6, 2)
+    }
+    graft.operators.SpanDedup.appendToIndex(ts, more, "id", "text", 5, 2)
+    spark.sql(s"DROP TABLE IF EXISTS ${ts.counts}")
+  }
+
   test("assignment drift: zero for identical and for relabeled centroids, counted for a moved set") {
     val model = IvfIndex.fitSeeds(corpus, "id", "vec", 4)
     val same = IvfIndex.assignmentDrift(corpus, "id", "vec", model, model, Cosine)
