@@ -22,8 +22,11 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   *
   * Entries key on the ANALYZED plan via `sameResult` (canonicalized
   * comparison — alias ids and case differences don't defeat the lookup). The
-  * registry stays tiny (a handful of operator-internal frames), so the linear
-  * scan is free next to the job it guards.
+  * lookup is a linear scan, and the registry is NOT bounded: entries live
+  * until [[clear]], and [[Pipeline]] registers 3 new frames per
+  * `skillsForJobs` / `prepareTrainingData` call, so a closed loop over
+  * batches grows the scan and the executor storage it pins with every call
+  * (ROADMAP direction 3 owns scoping these lifetimes).
   */
 object Caches {
 
@@ -59,8 +62,9 @@ object Caches {
     * runs once per key per session; `clear` forgets these too. The session
     * is compared by REFERENCE (`eq`, like [[cached]]'s session check) — an
     * identity-hash key could alias two live sessions on a collision and
-    * hand one a plan bound to the other. Linear scan: the registry holds a
-    * handful of entries. */
+    * hand one a plan bound to the other. Linear scan, over entries that
+    * live until [[clear]] (see the object doc: the registry is not
+    * bounded). */
   def memo(s: org.apache.spark.sql.SparkSession, key: String)(
       build: => DataFrame): DataFrame = synchronized {
     keyed.find { case (sess, k, _) => (sess eq s) && k == key } match {

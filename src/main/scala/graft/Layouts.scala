@@ -17,7 +17,8 @@ import org.apache.spark.sql.SparkSession
   *
   * Also the one home of a stored layout's identity: the model fingerprint
   * every appendable layout (catalog table or plain path) is stamped with,
-  * read, checked and carried across rewrites by location.
+  * read and checked by location, in the layout's [[sidecar]] — where a
+  * compaction's rewrite never reaches it.
   */
 object Layouts {
 
@@ -106,42 +107,47 @@ object Layouts {
     }
 
   /** Commit `content` as the marker at `p` by temp+rename: a write crashed
-    * midway leaves the previous marker (or none), never a torn one. */
+    * midway leaves the previous marker, never a torn one. Where the store
+    * renames onto an existing file (POSIX) the swap is one step; a store
+    * that refuses gets delete-then-rename, where a kill in between leaves
+    * no marker. */
   private[graft] def writeMarker(s: SparkSession, p: Path,
       content: String): Unit = {
     val tmp = new Path(p.toString + ".tmp")
     val out = fs(s, p).create(tmp, true)
     try out.write(content.getBytes("UTF-8")) finally out.close()
-    deleteMarker(s, p)
-    if (!fs(s, p).rename(tmp, p))
-      sys.error(s"Layouts.writeMarker: rename $tmp -> $p failed")
+    if (!fs(s, p).rename(tmp, p)) {
+      deleteMarker(s, p)
+      if (!fs(s, p).rename(tmp, p))
+        sys.error(s"Layouts.writeMarker: rename $tmp -> $p failed")
+    }
   }
 
   private def deleteMarker(s: SparkSession, p: Path): Unit =
     if (fs(s, p).exists(p)) fs(s, p).delete(p, false)
 
-  /** The stamp: a `_`-prefixed marker INSIDE the layout location (Spark's
-    * scans skip it; an overwrite of the location drops it with the data). */
-  private[graft] def fingerprintPath(loc: String) = new Path(loc, "_graft_model_fp")
+  /** The layout's sidecar entry `entry`: every stored layout at `loc` has
+    * ONE sidecar directory beside it, `<loc>__graft/`, holding its state
+    * besides the data — the model fingerprint, the
+    * [[graft.operators.Tombstones]] store and writer fence, and
+    * [[graft.operators.CcLabels]]' applied marker. Beside, not inside: a
+    * data rewrite of `loc` (a compaction, a build's overwrite) truncates
+    * the layout directory and never touches the sidecar, so no marker
+    * needs a backup across a rewrite. A fresh build drops what it
+    * supersedes through its build face (the tombstones; an unstamped
+    * build's fingerprint). The ONE place a sidecar path is built. */
+  private[graft] def sidecar(loc: String, entry: String): Path =
+    new Path(loc.stripSuffix("/") + "__graft", entry)
 
-  /** The stamp's copy OUTSIDE the location while [[keepFingerprint]]'s
-    * rewrite runs — what survives a kill before the re-stamp. */
-  private[graft] def fingerprintBackupPath(loc: String) =
-    new Path(loc.stripSuffix("/") + "__fp_backup")
+  private def fingerprintPath(loc: String) = sidecar(loc, "model_fp")
 
   /** Stamp the model/parameter fingerprint the layout at `loc` was built
-    * under — the append paths' compatibility witness — and retire any
-    * backup a crashed earlier rewrite left. */
-  def stampFingerprintAt(s: SparkSession, loc: String, fp: String): Unit = {
+    * under — the append paths' compatibility witness. */
+  def stampFingerprintAt(s: SparkSession, loc: String, fp: String): Unit =
     writeMarker(s, fingerprintPath(loc), fp)
-    deleteMarker(s, fingerprintBackupPath(loc))
-  }
 
-  /** The layout's stamp, else the backup of a rewrite killed before it
-    * could re-stamp. */
   def readFingerprintAt(s: SparkSession, loc: String): Option[String] =
     readMarker(s, fingerprintPath(loc))
-      .orElse(readMarker(s, fingerprintBackupPath(loc)))
 
   /** Enforce that an O(delta) append runs under the SAME fingerprint the
     * base build stamped: a delta encoded against re-fitted models/params is
@@ -154,26 +160,10 @@ object Layouts {
         s"(stored fingerprint $st, append $fp) — re-fitting requires a " +
         "rebuild, not an append"))
 
-  /** Drop the stamp and any backup — an unstamped build's hook, so a stale
-    * backup cannot guard appends to the new layout. */
-  private[graft] def clearFingerprintAt(s: SparkSession, loc: String): Unit = {
+  /** Drop the stamp — an unstamped build's hook, so the previous build's
+    * stamp cannot guard appends to the new layout. */
+  private[graft] def clearFingerprintAt(s: SparkSession, loc: String): Unit =
     deleteMarker(s, fingerprintPath(loc))
-    deleteMarker(s, fingerprintBackupPath(loc))
-  }
-
-  /** Run `rewrite` — which truncates `loc`, stamp included — carrying the
-    * fingerprint across it crash-safely: back the stamp up, rewrite,
-    * re-stamp (retiring the backup). A kill in between leaves the backup,
-    * which [[readFingerprintAt]] falls back to and the next rewrite
-    * restores. Compaction changes layout, never identity. */
-  private[graft] def keepFingerprint[T](s: SparkSession, loc: String)(
-      rewrite: => T): T = {
-    val fp = readFingerprintAt(s, loc)
-    fp.foreach(writeMarker(s, fingerprintBackupPath(loc), _))
-    val r = rewrite
-    fp.foreach(stampFingerprintAt(s, loc, _))
-    r
-  }
 
   /** The table-name forms: the `*At` forms at the table's [[location]]; a
     * relation without one reads as unstamped and cannot be stamped. */

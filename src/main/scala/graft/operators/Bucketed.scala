@@ -106,16 +106,15 @@ object Bucketed {
     * ([[PqIndex.compactIvfIndex]]) and the plain IVF path layout
     * ([[IvfIndex.compact]]): materialize `merge` of the rows `read`
     * returns OFF the layout (an overwrite of its own scan would
-    * read-while-truncate), then `rewrite` the location from them, with
-    * the layout's identity carried across — its fingerprint
-    * ([[graft.Layouts.keepFingerprint]]'s crash net) and its
-    * [[Tombstones]] side store: the rewrite deletes the location's
-    * contents, and silently dropping delete markers while their rows
-    * survive would RESURRECT deleted rows — so the markers are restored
-    * across the rewrite by default. Pass `purgeIdCol` to make the
-    * compaction a physical purge instead: tombstoned ids are anti-joined
-    * out of the rows and the markers die WITH the rewrite (cleared
-    * tombstones can never ship without the purge that justifies them).
+    * read-while-truncate), then `rewrite` the location from them. The
+    * layout's identity and delete markers live in its sidecar
+    * ([[graft.Layouts.sidecar]]), which the rewrite never touches, so a
+    * compaction is layout-only by default: fingerprint and [[Tombstones]]
+    * stay as they are. Pass `purgeIdCol` to make it a physical purge
+    * instead: tombstoned ids are anti-joined out of the rows, and the
+    * markers are cleared AFTER the rewrite lands (a purge killed in
+    * between serves the same answer from the purged files; its re-run
+    * clears them).
     *
     * SINGLE MAINTENANCE WRITER: like every maintenance face here, the
     * rewrite assumes no concurrent mutation of the same layout — an
@@ -129,28 +128,14 @@ object Bucketed {
       read: => DataFrame, purgeIdCol: Option[String],
       merge: DataFrame => DataFrame)(rewrite: DataFrame => Unit): Unit =
     Tombstones.fencedRewrite(spark, loc) {
-      val tombs = Tombstones.read(spark, loc).map(_.localCheckpoint())
       val base = read
       val rows = purgeIdCol match {
-        case Some(idCol) if tombs.nonEmpty =>
-          Tombstones.excludeIds(base, base(idCol), tombs.get)
-        case _ => base
+        case Some(idCol) => Tombstones.read(spark, loc)
+          .fold(base)(Tombstones.excludeIds(base, base(idCol), _))
+        case None => base
       }
-      val merged = merge(rows).localCheckpoint()
-      graft.Layouts.keepFingerprint(spark, loc) {
-        purgeIdCol match {
-          case None =>
-            // layout-only compaction: the markers ride the crash-safe
-            // backup/restore protocol (unfenced form: this body already
-            // holds the layout's fence)
-            Tombstones.preserveUnfenced(spark, loc)(rewrite(merged))
-          case Some(_) =>
-            rewrite(merged)
-            // purge: markers die WITH the rewrite; clear also removes any
-            // stale sibling backup a crashed earlier cycle left behind
-            Tombstones.clear(spark, loc)
-        }
-      }
+      rewrite(merge(rows).localCheckpoint())
+      if (purgeIdCol.nonEmpty) Tombstones.clear(spark, loc)
     }
 
   /** Equi-join two tables bucketed on `key` with the same bucket count:

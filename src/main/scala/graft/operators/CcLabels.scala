@@ -128,7 +128,8 @@ object CcLabels {
   // bucketed layout inside each partition directory coalesces same-bucket
   // files across directories into one read partition.
   //
-  // A sibling `__cc_applied` file carries (last applied batchId, version
+  // An applied marker in the store's layout sidecar
+  // ([[graft.Layouts.sidecar]]) carries (last applied batchId, version
   // watermark), making [[applyBatch]] idempotent under foreachBatch's
   // at-least-once replay — a replayed batch is a no-op instead of
   // tripping the re-ingest clash guard forever (the r13 ADVICE
@@ -160,16 +161,16 @@ object CcLabels {
     if (vals.isEmpty) lit(false) else col(partCol).isin(vals: _*)
   }
 
-  private def appliedPath(layoutPath: String) =
-    new org.apache.hadoop.fs.Path(layoutPath.stripSuffix("/") + "__cc_applied")
+  private[graft] def appliedPath(layoutPath: String) =
+    graft.Layouts.sidecar(layoutPath, "cc_applied")
 
-  /** (last applied batchId, version watermark) from the sidecar. Absent
-    * sidecar: a FRESH store (max __v == 0 — e.g. built through
+  /** (last applied batchId, version watermark) from the applied marker.
+    * Absent marker: a FRESH store (max __v == 0 — e.g. built through
     * [[Bucketed]] directly) safely starts at (-1, 0); a store that has
     * already absorbed batches RAISES instead — guessing lastBatch = -1
     * there would let an at-least-once REPLAY of an applied batch past the
     * no-op check and into the re-ingest clash guard, wedging the stream
-    * permanently (the exact availability trap the sidecar exists to
+    * permanently (the exact availability trap the marker exists to
     * prevent). The error names the repair: restore the marker via
     * [[writeApplied]] with the true last batch id, or compact + rebase. */
   private[graft] def readApplied(spark: SparkSession, table: String,
@@ -203,7 +204,7 @@ object CcLabels {
   /** Create the maintained store from a full (idCol, cluster_id) labeling:
     * rows stamped version 0 in BOTH layouts — the primary
     * (partitioned on __pb, bucketed on idCol) and the member sidecar
-    * (partitioned on __cb, bucketed on cluster_id) — sidecar marker reset
+    * (partitioned on __cb, bucketed on cluster_id) — applied marker reset
     * to "nothing applied". */
   def initLabelStore(labels: DataFrame, table: String, path: String,
       idCol: String, numBuckets: Int): Unit = {
@@ -273,7 +274,7 @@ object CcLabels {
     * partition-pruned point probes ([[storeProbes]]): the as-of view is
     * never materialized corpus-wide. Replay-safe under at-least-once
     * delivery:
-    *  - `batchId` ≤ the sidecar's last applied id ⇒ no-op (the crash
+    *  - `batchId` ≤ the marker's last applied id ⇒ no-op (the crash
     *    landed after the marker advanced);
     *  - a crash anywhere between the first append and the marker leaves
     *    the watermark pointing BELOW the torn rows, so the replay
@@ -331,7 +332,7 @@ object CcLabels {
   }
 
   /** Collapse version history to one latest-wins row per key (keeping each
-    * survivor's own version, so the sidecar watermark stays an upper
+    * survivor's own version, so the marker's watermark stays an upper
     * bound) — the periodic counterpart that keeps a long-maintained store
     * from accreting one row per (key, touch). The member sidecar is
     * rewritten FROM the compacted primary: that both collapses its
@@ -364,7 +365,7 @@ object CcLabels {
     * caller's. After ANY prefix of batches [[readLabels]] equals the
     * one-shot CC over base ∪ those batches (spec-pinned) — batches see
     * every earlier batch's merges through the store. Replayed batches
-    * no-op via the sidecar marker. SINGLE MAINTENANCE WRITER: the
+    * no-op via the applied marker. SINGLE MAINTENANCE WRITER: the
     * per-batch append assumes no concurrent mutation of the label
     * table (the [[Bucketed.compactTable]] contract). */
   def ingestStream(spark: SparkSession, labelTable: String, idCol: String,

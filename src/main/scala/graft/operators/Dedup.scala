@@ -106,10 +106,16 @@ object Dedup {
     * through `element_at`, and HOF lambdas don't CSE (see [[shingles]]). */
   def gramHashArray(ht: Column, n: Int): Column =
     when(size(ht) >= n, array_distinct(
-      transform(sequence(lit(1), size(ht) - (n - 1)),
-        i => (0 until n).map(o => element_at(ht, i + o))
-          .foldLeft(lit(0L): Column)((acc, h) => (acc * 31L + h) % ShingleP))))
+      transform(sequence(lit(1), size(ht) - (n - 1)), gramHashAt(ht, _, n))))
       .otherwise(array().cast("array<long>"))
+
+  /** The rolling hash of the n-gram at 1-based token position `i` of the
+    * token-hash array `ht`: the fold (acc·31 + h) mod [[ShingleP]] over its
+    * n token hashes — the ONE gram hash of [[gramHashArray]] and
+    * [[SpanDedup]]'s positioned windows. */
+  def gramHashAt(ht: Column, i: Column, n: Int): Column =
+    (0 until n).map(o => element_at(ht, i + o))
+      .foldLeft(lit(0L): Column)((acc, h) => (acc * 31L + h) % ShingleP)
 
   /** Per-token md5 hash array: (idCol, __ht array<long>) — the expensive half
     * of every gram index (one md5 per token; the gram fold on top is integer

@@ -327,8 +327,8 @@ object GraphSearch {
   def writeIndexIvf(corpus: DataFrame, idCol: String, vecCol: String,
       k: Int, model: IvfIndex.Model, nProbe: Int, tableName: String,
       path: String, numBuckets: Int, metric: Metric = Cosine): Unit = {
-    // a fresh build supersedes the path's delete history — including a
-    // stale sibling backup from a CRASHED earlier compaction
+    // a fresh build supersedes the path's delete history (its sidecar
+    // markers, which the overwrite below does not reach)
     Tombstones.clearForRebuild(corpus.sparkSession, path)
     Bucketed.writeBucketedKeys(
       ivfCandidateEdges(corpus, idCol, vecCol, k, model, nProbe, metric),

@@ -147,11 +147,10 @@ object IvfIndex {
     * `spark.read.parquet(path)` + a `list_id` filter then prunes partitions
     * exactly like ivfflat probes. Unstamped: [[append]] checks nothing. */
   def write(indexed: DataFrame, path: String): Unit = {
-    // a fresh build supersedes the path's delete history and identity —
-    // including sibling backups from a CRASHED earlier compaction, which
-    // the overwrite below cannot reach (they sit outside the layout path):
-    // stale markers would be unioned in against the NEW build's live rows,
-    // a stale fingerprint would check appends against the OLD model
+    // a fresh build supersedes the path's delete history and identity,
+    // which sit in its sidecar where the overwrite below cannot reach them:
+    // stale markers would hide the NEW build's live rows, a stale
+    // fingerprint would check appends against the OLD model
     Tombstones.clearForRebuild(indexed.sparkSession, path)
     graft.Layouts.clearFingerprintAt(indexed.sparkSession, path)
     indexed.write.mode("overwrite").partitionBy("list_id").parquet(path)
@@ -203,7 +202,8 @@ object IvfIndex {
     * delete face: ids marked deleted, data files untouched) and clear the
     * tombstone store, in one list-partitioned rewrite through
     * [[Bucketed.compactWith]] — the scaffold every stored layout compacts
-    * through (fence, purge, fingerprint carried across). Searches before
+    * through (fence, purge, then clear; the fingerprint stays in the
+    * sidecar). Searches before
     * compact (anti-join exclusion) and after (purged files) answer
     * identically — pinned by `pipeline_forget` and TombstonesSpec. */
   def compact(spark: SparkSession, path: String, idCol: String): Unit =

@@ -67,8 +67,8 @@ object JaccardIndex {
     val prefix = Dedup.prefixGrams(docSets, idCol, minJaccard)
     val t = IndexTables(s"graft_jidx_docsets_$tag", s"graft_jidx_prefix_$tag",
       s"graft_jidx_df_$tag")
-    // a fresh build supersedes basePath's delete history — including a
-    // stale sibling backup from a CRASHED earlier purge cycle
+    // a fresh build supersedes basePath's delete history (its sidecar
+    // markers, which the table overwrites below do not reach)
     Tombstones.clearForRebuild(corpus.sparkSession, basePath)
     Bucketed.writeBucketed(dfc, t.dfc, s"$basePath/df", "__gh", numBuckets)
     Bucketed.writeBucketed(prefix, t.prefix, s"$basePath/prefix", "__gh", numBuckets)
@@ -140,7 +140,7 @@ object JaccardIndex {
     // Tombstones.add racing the purge raises instead of being cleared
     // below while its doc's entries survive the rewrites. The inner
     // compactTable calls fence their own TABLE locations — different
-    // sibling files, no nesting on one fence.
+    // sidecars, no nesting on one fence.
     Tombstones.fencedRewrite(spark, basePath) {
       Tombstones.read(spark, basePath).foreach { t0 =>
         val t = t0.localCheckpoint()

@@ -57,9 +57,9 @@ object LshIndex {
       bucketLength: Double, numTables: Int, numPlanes: Int,
       tableName: String, path: String, numBuckets: Int,
       maxBucket: Long = Dedup.DefaultMaxBucket): Unit = {
-    // a fresh build supersedes the path's delete history — including a
-    // stale sibling backup from a CRASHED earlier compaction, which would
-    // otherwise resurrect markers against the new build's live rows
+    // a fresh build supersedes the path's delete history: its sidecar
+    // markers, which the overwrite below does not reach, would otherwise
+    // hide the new build's live rows
     Tombstones.clearForRebuild(corpus.sparkSession, path)
     Bucketed.writeBucketedKeys(
       Salt.capBuckets(
@@ -158,8 +158,8 @@ object LshIndex {
   }
 
   /** Compact an appended bucket table: re-write the same entries through
-    * the bucketed layout in one pass, carrying the build stamp across the
-    * rewrite (the [[SpanDedup.compactIndex]] pattern). Each append adds a
+    * the bucketed layout in one pass (the [[SpanDedup.compactIndex]]
+    * pattern; the build stamp stays in the layout's sidecar). Each append adds a
     * file per bucket, so a long append history degrades probe scan
     * efficiency; compaction bounds it while changing nothing a probe sees
     * (gated by `lsh_index_compact`, which shares the append oracle). */
@@ -169,8 +169,8 @@ object LshIndex {
       numBuckets)(identity)
 
   /** Physical purge of tombstoned ids ([[Tombstones]] — the delete face):
-    * drop the deleted ids' bucket entries and clear the markers in one
-    * rewrite, [[IvfIndex.compact]]'s hash-table sibling. Until this runs,
+    * drop the deleted ids' bucket entries in one rewrite, then clear the
+    * markers, [[IvfIndex.compact]]'s hash-table sibling. Until this runs,
     * delete-aware serving passes the live (anti-joined) corpus as
     * [[annTopKStored]]'s vector side — markers now, purge at compaction,
     * the Lucene delete model. */

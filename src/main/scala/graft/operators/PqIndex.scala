@@ -415,8 +415,8 @@ object PqIndex {
       metric: graft.functions.VectorFunctions.Metric,
       tableName: String, path: String, metaCols: Seq[String] = Nil): Unit = {
     val spark = corpus.sparkSession
-    // a fresh build supersedes the path's delete history — including a
-    // stale sibling backup from a CRASHED earlier compaction
+    // a fresh build supersedes the path's delete history (its sidecar
+    // markers, which the overwrite below does not reach)
     graft.operators.Tombstones.clearForRebuild(spark, path)
     spark.sql(s"DROP TABLE IF EXISTS $tableName")
     IvfIndex.assign(corpus, idCol, vecCol, ivfModel, metric)
@@ -464,20 +464,19 @@ object PqIndex {
   }
 
   /** Compact an appended codes table: rewrite each list partition's files
-    * in one pass off a checkpointed read, carrying the build's model
-    * fingerprint across the rewrite ([[Bucketed.compactWith]], the
+    * in one pass off a checkpointed read ([[Bucketed.compactWith]], the
     * scaffold every stored layout compacts through, with a
     * list-partitioned write — every append adds a file
     * per touched partition, and a long append history degrades probe scan
     * efficiency; compaction bounds it while changing nothing a reader
     * sees, gated by `pq_index_compact`).
-    * "Nothing a reader sees" includes the layout's [[Tombstones]]: the
-    * rewrite deletes the location's contents, so delete markers are
-    * restored across it by default (dropping them while their rows
-    * survive would resurrect deleted rows); `purgeIdCol` turns the
-    * compaction into the physical purge instead — tombstoned rows leave
-    * the files and the markers die WITH the rewrite,
-    * [[IvfIndex.compact]]'s compressed-tier sibling. */
+    * "Nothing a reader sees" includes the build's model fingerprint and
+    * the layout's [[Tombstones]]: both live in the layout's sidecar,
+    * which the rewrite never touches, so delete markers keep hiding their
+    * rows by default; `purgeIdCol` turns the compaction into the physical
+    * purge instead — tombstoned rows leave the files and the markers are
+    * cleared after the rewrite, [[IvfIndex.compact]]'s compressed-tier
+    * sibling. */
   def compactIvfIndex(spark: org.apache.spark.sql.SparkSession,
       tableName: String, purgeIdCol: Option[String] = None): Unit = {
     val loc = graft.Layouts.location(spark, tableName).get

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions
@@ -63,10 +63,7 @@ object SpanDedup {
     val ht = col("__ht")
     val entries = when(size(ht) >= k,
       transform(sequence(lit(1), size(ht) - (k - 1)),
-        i => struct(i.cast("long").as("p"),
-          (0 until k).map(o => element_at(ht, i + o))
-            .foldLeft(lit(0L): Column)((acc, h) => (acc * 31L + h) % Dedup.ShingleP)
-            .as("g"))))
+        i => struct(i.cast("long").as("p"), Dedup.gramHashAt(ht, i, k).as("g"))))
       .otherwise(array().cast("array<struct<p:long,g:long>>"))
     withHt.select(col(idCol), explode(entries).as("__e"))
       .select(col(idCol), col("__e.p").as("__pos"), col("__e.g").as("__gh"))

@@ -17,19 +17,27 @@ import org.apache.spark.sql.functions._
   * multi-TB layouts, so [[add]] appends the ids to a tiny side store and
   * the DATA FILES ARE NEVER TOUCHED. Readers drop deleted rows with an
   * anti-join ([[excludeDeleted]] / the search faces' `excludeIds`);
-  * compaction ([[IvfIndex.compact]]) physically purges them and clears the
-  * side store in one rewrite. Between delete and compact the tombstone set
-  * is O(deletes since last compact) — small by the same argument as any
-  * LSM delete marker — so the anti-join's build side broadcasts under AQE
-  * and exclusion costs no extra shuffle.
+  * compaction ([[IvfIndex.compact]]) physically purges them in one
+  * rewrite, then clears the side store. Between delete and compact the
+  * tombstone set is O(deletes since last compact) — small by the same
+  * argument as any LSM delete marker — so the anti-join's build side
+  * broadcasts under AQE and exclusion costs no extra shuffle.
   *
-  * The side store is a parquet directory named [[SideDir]] INSIDE the
-  * layout path. The underscore prefix makes it invisible to every
-  * pre-existing reader of the layout (Spark's file index skips `_`/`.`
-  * paths), so stamping tombstones onto a live layout changes nothing for
-  * consumers that don't opt in — and a layout rebuild/overwrite deletes
-  * the directory with the stale data files, which is exactly the right
-  * lifetime (tombstones against a layout die with the layout).
+  * The side store is a parquet directory named [[SideDir]] in the
+  * layout's sidecar ([[graft.Layouts.sidecar]], `<layout>__graft/`),
+  * beside the layout path, never inside it: readers of the layout never
+  * see it, so stamping tombstones onto a live layout changes nothing for
+  * consumers that don't opt in, and a data rewrite of the layout (every
+  * compaction) leaves the markers and the writer fence where they are.
+  * Their lifetime is set by the verbs instead: a purge [[clear]]s the
+  * markers after its rewrite lands, and every build face drops them
+  * ([[clearForRebuild]]), since a fresh build supersedes the delete
+  * history. The trade: a raw `mode("overwrite")` of a layout path that
+  * bypasses its build face KEEPS the old markers (they would hide the
+  * new data's rows with those ids). Every in-repo writer
+  * of a tombstoned layout goes through its build face (`IvfIndex.write`,
+  * `LshIndex.writeIndex`, `GraphSearch.writeIndexIvf`,
+  * `PqIndex.writeIvfIndex`, `JaccardIndex.build`); a new writer must too.
   *
   * Contract: a tombstoned id stays dead until compaction physically purges
   * it. Id-level markers cannot express "resurrect" — clearing a marker
@@ -42,49 +50,35 @@ import org.apache.spark.sql.functions._
   */
 object Tombstones {
 
-  /** The tombstone store's directory name under the layout path. */
-  val SideDir = "_graft_tombstones"
+  /** The tombstone store's directory name in the layout's sidecar. */
+  val SideDir = "tombstones"
 
   private def sidePath(layoutPath: String) =
-    new org.apache.hadoop.fs.Path(layoutPath, SideDir)
+    graft.Layouts.sidecar(layoutPath, SideDir)
 
-  /** Sibling backup dir OUTSIDE the layout path — the crash-safety net of
-    * [[preserveAcrossRewrite]] (a layout rewrite truncates the location,
-    * side store included; the backup is what survives a crash between the
-    * rewrite's commit and the marker restore). */
-  private def backupPath(layoutPath: String) =
-    new org.apache.hadoop.fs.Path(layoutPath.stripSuffix("/") + "__tombs_backup")
-
-  /** Sibling writer-fence file — the loud half of the single-maintenance-
+  /** The writer-fence marker — the loud half of the single-maintenance-
     * writer contract (r12 verdict "what's missing" #2: every other
     * documented hazard here has a guard; the takedown-vs-compaction race
     * was the last bare contract). Holds `<epoch> <inprogress|done>`:
     * [[fencedRewrite]] bumps the epoch and marks `inprogress` BEFORE a
     * maintenance rewrite's first read and `done` after its last write;
     * [[add]] reads the fence before and after its append and RAISES on
-    * any overlap — a takedown committed inside a rewrite window would be
-    * destroyed with the replaced files while its row survives (purge
-    * mode) or silently dropped from the restored set (layout-only mode).
-    * Sibling like the backup: it must survive the rewrite's truncation of
-    * the layout location. */
+    * any overlap — a takedown committed inside a purge window would be
+    * cleared with the markers while its row survives the rewrite.
+    * Sidecar like the store: no rewrite of the layout touches it, and a
+    * rebuild carries its epoch forward. Written by temp+rename
+    * ([[graft.Layouts.writeMarker]]): a kill mid-write leaves the
+    * previous fence, never a torn one. */
   private def fencePath(layoutPath: String) =
-    new org.apache.hadoop.fs.Path(layoutPath.stripSuffix("/") + "__writer_fence")
+    graft.Layouts.sidecar(layoutPath, "writer_fence")
 
-  private[operators] final case class Fence(epoch: Long, inProgress: Boolean)
+  private[graft] final case class Fence(epoch: Long, inProgress: Boolean)
 
-  private def fs(spark: SparkSession, p: org.apache.hadoop.fs.Path) =
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private[operators] def readFence(spark: SparkSession,
+  private[graft] def readFence(spark: SparkSession,
       layoutPath: String): Fence = {
     val p = fencePath(layoutPath)
-    val f = fs(spark, p)
-    if (!f.exists(p)) Fence(0L, inProgress = false)
-    else {
-      val in = f.open(p)
-      val content = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      content.trim.split(" ") match {
+    graft.Layouts.readMarker(spark, p).fold(Fence(0L, inProgress = false)) {
+      _.trim.split(" ") match {
         case Array(e, state) => Fence(e.toLong, state == "inprogress")
         case other => throw new IllegalStateException(
           s"malformed writer fence at $p: '${other.mkString(" ")}'")
@@ -93,13 +87,9 @@ object Tombstones {
   }
 
   private def writeFence(spark: SparkSession, layoutPath: String,
-      fence: Fence): Unit = {
-    val p = fencePath(layoutPath)
-    val out = fs(spark, p).create(p, true)
-    val state = if (fence.inProgress) "inprogress" else "done"
-    try out.write(s"${fence.epoch} $state".getBytes("UTF-8"))
-    finally out.close()
-  }
+      fence: Fence): Unit =
+    graft.Layouts.writeMarker(spark, fencePath(layoutPath),
+      s"${fence.epoch} ${if (fence.inProgress) "inprogress" else "done"}")
 
   /** Thrown by a maintenance face that refuses to proceed BEFORE touching
     * any file (a pre-rewrite guard like [[IvfIndex.compact]]'s empty-live
@@ -151,6 +141,15 @@ object Tombstones {
         "files; quiesce and retry after the rewrite completes")
     ids.select(col(idCol).as("id"))
       .write.mode("append").parquet(sidePath(layoutPath).toString)
+    requireFenceAt(spark, layoutPath, before)
+  }
+
+  /** [[add]]'s closing check: raise unless the fence still reads `before`
+    * — any maintenance rewrite that started since then bumped its epoch,
+    * however many rebuilds ran in between ([[clearForRebuild]] never
+    * restarts the epoch). */
+  private[graft] def requireFenceAt(spark: SparkSession, layoutPath: String,
+      before: Fence): Unit = {
     val after = readFence(spark, layoutPath)
     require(after == before,
       s"Tombstones.add: the append raced a maintenance rewrite of " +
@@ -159,20 +158,15 @@ object Tombstones {
   }
 
   /** The layout's current tombstone set as (id), or None if nothing was
-    * ever deleted. The read is the UNION of the side store and the
-    * sibling backup ([[preserveAcrossRewrite]] — after a crash
-    * mid-restore the backup is the only copy, and when both exist they
-    * hold the same set, so duplicate rows are harmless under anti-join
-    * semantics). Each store's part files are enumerated and passed
-    * explicitly: the side dir's underscore prefix is what hides it from
-    * LAYOUT readers, and Spark's hidden-path filter must not be given the
-    * chance to hide it from THIS reader too (an ignored store would
-    * silently serve deleted rows as live). */
+    * ever deleted. The store's part files are enumerated and passed
+    * explicitly: a marker-only directory (an empty-frame add) then reads
+    * as None, and extensionless data files fail loudly below. */
   def read(spark: SparkSession, layoutPath: String): Option[DataFrame] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val files = Seq(sidePath(layoutPath), backupPath(layoutPath)).flatMap { p =>
-      val fs = p.getFileSystem(conf)
-      if (fs.exists(p)) {
+    val p = sidePath(layoutPath)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val files =
+      if (!fs.exists(p)) IndexedSeq.empty[org.apache.hadoop.fs.Path]
+      else {
         val all = fs.listStatus(p).map(_.getPath).toIndexedSeq
         val parquet = all.filter(_.getName.endsWith(".parquet"))
         // Cheap insurance on a correctness-critical read (r12 verdict
@@ -189,8 +183,6 @@ object Tombstones {
             "refusing to silently drop delete markers")
         parquet
       }
-      else IndexedSeq.empty[org.apache.hadoop.fs.Path]
-    }
     if (files.isEmpty) None
     else Some(spark.read.parquet(files.map(_.toString): _*))
   }
@@ -209,9 +201,9 @@ object Tombstones {
     *
     * Quiesce this stream across a compaction/purge of the same layout
     * (the single-maintenance-writer contract — see
-    * [[Bucketed.compactTable]]): a takedown committed between the
-    * compaction's marker snapshot and its rewrite would be destroyed
-    * with the replaced files while its row survives. ENFORCED since r13:
+    * [[Bucketed.compactWith]]): a takedown committed between a purge's
+    * marker read and its [[clear]] would be cleared while its row
+    * survives the rewrite. ENFORCED since r13:
     * each batch rides [[add]]'s writer-fence check, so a violating batch
     * fails the streaming query loudly instead of losing the takedown. */
   def addStream(idStream: DataFrame, idCol: String, layoutPath: String):
@@ -220,72 +212,31 @@ object Tombstones {
       add(batch, idCol, layoutPath)
     }
 
-  /** Drop the side store AND the sibling backup — called by the purge
-    * rewrites AFTER they land (a purge that cleared markers first would
-    * serve deleted rows if the rewrite failed midway; a stale backup left
-    * behind would resurrect markers whose rows the purge just removed). */
+  /** Drop the tombstone store — called by the purge rewrites AFTER they
+    * land (a purge that cleared markers first would serve deleted rows if
+    * the rewrite failed midway; one killed between its rewrite and this
+    * call serves the same answer from the purged files, and its re-run
+    * clears the markers). The fence stays. */
   def clear(spark: SparkSession, layoutPath: String): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    Seq(sidePath(layoutPath), backupPath(layoutPath)).foreach { p =>
-      val fs = p.getFileSystem(conf)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
+    val p = sidePath(layoutPath)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(p)) fs.delete(p, true)
   }
 
-  /** The BUILD/overwrite faces' pre-write hook: a fresh build of a layout
-    * path supersedes its whole delete history, so drop the markers AND the
-    * sibling backup — without this, a backup left by a CRASHED earlier
-    * layout-only compaction (snapshot written, restore never ran) would
-    * survive the rebuild's truncation (it sits outside the layout path),
-    * be unioned in by [[read]], and silently drop live rows of the NEW
-    * build while the append guard rejects valid deltas. Also completes a
-    * crashed maintenance fence: the rebuild IS the repair, so takedowns
-    * against the fresh layout stop raising. */
+  /** The BUILD faces' pre-write hook: a fresh build of a layout path
+    * supersedes its whole delete history, so drop the markers — they sit
+    * in the sidecar, which the build's overwrite of the layout never
+    * reaches, and would otherwise hide live rows of the NEW build. Also
+    * completes a crashed maintenance fence: the rebuild IS the repair, so
+    * takedowns against the fresh layout stop raising. The fence itself is
+    * never deleted and its epoch never restarts: a takedown whose fence
+    * reads straddle a rebuild and one compaction must still see the epoch
+    * move (a restarted epoch could read equal before and after). */
   def clearForRebuild(spark: SparkSession, layoutPath: String): Unit = {
     clear(spark, layoutPath)
     val f = readFence(spark, layoutPath)
     if (f.inProgress)
       writeFence(spark, layoutPath, Fence(f.epoch + 1, inProgress = false))
-  }
-
-  /** Run `rewrite` — an operation that truncates the layout location,
-    * side store included (a compaction, or any `mode("overwrite")` of the
-    * path) — with the delete markers crash-safe at EVERY point:
-    * (1) snapshot the current marker set to the sibling backup (outside
-    * the layout, untouchable by the rewrite); (2) rewrite; (3) re-add the
-    * markers into the fresh layout; (4) drop the backup. [[read]] unions
-    * the backup with the main store, so a crash after (2) still serves
-    * every marker from the backup, and a crash during (1) or after (3)
-    * leaves at worst duplicate rows (reader no-ops); the next cycle's
-    * snapshot re-converges the copies. Without this protocol a crash
-    * between the rewrite's commit and the restore silently RESURRECTS
-    * every deleted row — the failure mode the side-store design must
-    * never allow. FENCED ([[fencedRewrite]]): a takedown batch overlapping
-    * the window raises instead of being lost with the replaced files. */
-  def preserveAcrossRewrite[T](spark: SparkSession, layoutPath: String)(
-      rewrite: => T): T =
-    fencedRewrite(spark, layoutPath)(
-      preserveUnfenced(spark, layoutPath)(rewrite))
-
-  /** [[preserveAcrossRewrite]] WITHOUT the fence bracket — for maintenance
-    * faces that already hold the layout's fence around a wider window
-    * (e.g. [[Bucketed.compactTable]], whose marker READ precedes this
-    * protocol and must sit inside the same fence; nesting would double-bump
-    * the epoch and land `done` out of order). */
-  private[operators] def preserveUnfenced[T](spark: SparkSession,
-      layoutPath: String)(rewrite: => T): T = {
-    val markers = read(spark, layoutPath).map(_.localCheckpoint())
-    markers.foreach(_.select(col("id"))
-      .write.mode("overwrite").parquet(backupPath(layoutPath).toString))
-    val r = rewrite
-    // restore bypasses add()'s fence check (the enclosing bracket is
-    // legitimately in progress — this IS the maintenance writer)
-    markers.foreach(_.select(col("id"))
-      .write.mode("append").parquet(sidePath(layoutPath).toString))
-    val bp = backupPath(layoutPath)
-    val fs = bp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(bp)) fs.delete(bp, true)
-    r
   }
 
   /** 1-row tombstone-debt census — the compaction-SCHEDULING signal the

@@ -40,12 +40,13 @@ private[queries] object Fixtures {
   }
 
   /** Stamp `ids` as tombstones at `layoutPath` once per (session, key) and
-    * return the stored set. Resilient to sibling layout rewrites: a
-    * compaction or cross-session re-ensure legitimately deletes the side
-    * store with the files it replaces — the deterministic fixture set is
-    * re-stamped instead of serving an unfiltered search as "deleted". The
-    * layout's own ensure MUST have run first (ensure overwrites the layout
-    * directory, side store included — the correct lifetime). */
+    * return the stored set. Resilient to other rows' maintenance of the
+    * same layout: a purge or a cross-session re-ensure (its build face)
+    * legitimately clears the markers in the layout's sidecar — the
+    * deterministic fixture set is re-stamped instead of serving an
+    * unfiltered search as "deleted". The layout's own ensure MUST have
+    * run first (its build face clears the layout's markers — the correct
+    * lifetime). */
   def tombsAt(s: SparkSession, key: String, layoutPath: String,
       idCol: String)(ids: => DataFrame): DataFrame = {
     def stamp(): String = {

@@ -241,8 +241,8 @@ object IndexQueries extends graft.QueryModule {
 
   /** Stamp the delete fixture's tombstones onto `layoutPath`, once per
     * (session, family, dir), and return the stored tombstone set. The
-    * family layout's `ensure` MUST have run first (ensure overwrites the
-    * layout directory, side store included — the correct lifetime: stale
+    * family layout's `ensure` MUST have run first (its build face clears
+    * the layout's markers with the rebuild — the correct lifetime: stale
     * tombstones die with stale data files; every call site ensures then
     * stamps). */
   private def tombsFor(s: SparkSession, dir: String, family: String,
@@ -1152,14 +1152,14 @@ object IndexQueries extends graft.QueryModule {
     // the takedown set (tombstones only — data files untouched) → SERVE
     // immediately with tombstone exclusion (the result is materialized
     // before the purge, so it genuinely reads the tombstoned state) →
-    // compact (the purge rewrite: tombstoned rows leave the files, the
-    // side store clears with them, the model fingerprint carries across)
+    // compact (the purge rewrite: tombstoned rows leave the files, then
+    // the markers clear; the model fingerprint stays in the sidecar)
     // → re-serve from the purged files → census. The pin is the forget
     // invariant itself, in-plan: tombstone-serving ≡ purged-serving
     // (serve_match raise_errors on any divergence), zero deleted rows
-    // resident (a compact that missed rows), zero tombstones left (a
-    // clear without purge can't happen — the overwrite deletes both
-    // together — but a failed clear still reddens), and n_vectors +
+    // resident (a compact that missed rows), zero tombstones left (the
+    // clear runs only after the purge rewrite lands; a skipped or failed
+    // clear reddens), and n_vectors +
     // search_checksum recounted from scratch by the oracle's live-corpus
     // replay (a compact that dropped LIVE rows breaks both).
     "pipeline_forget" -> ((s, dir) => {

@@ -214,7 +214,7 @@ class CcLabelsSpec extends SparkSpec {
     val table = initStore()
     val loc = Layouts.location(spark, table).get
     // fresh store, sidecar gone: safe fallback (nothing applied yet)
-    val p = new org.apache.hadoop.fs.Path(loc.stripSuffix("/") + "__cc_applied")
+    val p = CcLabels.appliedPath(loc)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(p, false)
     assert(CcLabels.applyBatch(spark, table, "doc_id", 2,

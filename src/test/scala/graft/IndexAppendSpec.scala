@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.operators.{IvfIndex, LshIndex, PqIndex, RpLsh}
+import graft.operators.{CompactionKill, IvfIndex, LshIndex, PqIndex, RpLsh}
 import graft.functions.VectorFunctions.Cosine
 
 /** O(delta) append-ingest for the stored ANN layouts: the appended table
@@ -145,79 +145,51 @@ class IndexAppendSpec extends SparkSpec {
     spark.sql(s"DROP TABLE IF EXISTS $t")
   }
 
-  private def exists(p: org.apache.hadoop.fs.Path): Boolean =
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-
-  /** Run `rewrite` under the compaction's fingerprint crash net and kill
-    * it before the re-stamp: the backup stamp is left, the in-layout stamp
-    * (truncated by the rewrite) is gone. */
-  private def killBeforeRestamp(loc: String)(rewrite: => Unit): Unit = {
-    val e = intercept[IllegalStateException] {
-      Layouts.keepFingerprint(spark, loc) {
-        rewrite
-        throw new IllegalStateException("killed before re-stamp")
-      }
-    }
-    assert(e.getMessage == "killed before re-stamp")
-    assert(!exists(Layouts.fingerprintPath(loc)), "the rewrite keeps the stamp")
-    assert(exists(Layouts.fingerprintBackupPath(loc)), "no backup stamp")
-  }
-
-  private def assertRestamped(loc: String, fp: String): Unit = {
-    assert(exists(Layouts.fingerprintPath(loc)), "compaction did not re-stamp")
-    assert(!exists(Layouts.fingerprintBackupPath(loc)),
-      "compaction did not retire the backup")
-    assert(Layouts.readFingerprintAt(spark, loc).contains(fp))
-  }
-
-  test("IVF layout: a compaction killed before its re-stamp keeps the append guard; the next compaction restores the stamp") {
+  test("IVF layout: a compaction killed after its rewrite keeps the stamp and the append guard") {
     val (base, delta) = splitCorpus
     val model = IvfIndex.fitSeeds(base, "id", "vec", 4)
     val refit = IvfIndex.fitSeeds(corpus.filter(col("id") >= 2L), "id", "vec", 4)
+    val fp = IvfIndex.modelFingerprint(model, Cosine)
     val path = s"/tmp/graft_test_fpcrash/ivf_${ProcessHandle.current().pid()}"
     IvfIndex.write(IvfIndex.assign(base, "id", "vec", model, Cosine), path,
       model, Cosine)
-    killBeforeRestamp(path) {
-      spark.read.parquet(path).localCheckpoint()
-        .write.mode("overwrite").partitionBy("list_id").parquet(path)
-    }
+    // the stamp sits in the layout's sidecar: the rewrite cannot drop it
+    CompactionKill.ivfAfterRewrite(spark, path, Some("id"))
+    assert(Layouts.readFingerprintAt(spark, path).contains(fp))
     intercept[IllegalArgumentException] {
       IvfIndex.append(delta, "id", "vec", refit, Cosine, path)
     }
+    // the re-run completes and changes nothing about the identity
     IvfIndex.compact(spark, path, "id")
-    assertRestamped(path, IvfIndex.modelFingerprint(model, Cosine))
+    assert(Layouts.readFingerprintAt(spark, path).contains(fp))
     intercept[IllegalArgumentException] {
       IvfIndex.append(delta, "id", "vec", refit, Cosine, path)
     }
     IvfIndex.append(delta, "id", "vec", model, Cosine, path)
     assert(spark.read.parquet(path).count() == 150L)
-    // An unstamped rebuild over a crashed compaction's backup retires it:
-    // the new layout must not be guarded by the OLD model's stamp.
-    killBeforeRestamp(path) {
-      spark.read.parquet(path).localCheckpoint()
-        .write.mode("overwrite").partitionBy("list_id").parquet(path)
-    }
+    // An unstamped rebuild drops the stamp, crashed compaction or not: the
+    // new layout must not be guarded by the OLD model's stamp.
+    CompactionKill.ivfAfterRewrite(spark, path, Some("id"))
     IvfIndex.write(IvfIndex.assign(base, "id", "vec", refit, Cosine), path)
     assert(Layouts.readFingerprintAt(spark, path).isEmpty)
     IvfIndex.append(delta, "id", "vec", refit, Cosine, path)
   }
 
-  test("bucketed store: a compaction killed before its re-stamp keeps the append guard; the next compaction restores the stamp") {
+  test("bucketed store: a compaction killed after its rewrite keeps the stamp and the append guard") {
     val pid = ProcessHandle.current().pid()
     val docs = Seq((1L, "a b c d e f g h"), (2L, "b c d e f g h i")).toDF("id", "text")
     val ts = graft.operators.SpanDedup.buildIndex(docs, "id", "text", 5,
       s"fpcrash_$pid", s"/tmp/graft_test_fpcrash/span_$pid", 2)
     val loc = Layouts.location(spark, ts.counts).get
-    killBeforeRestamp(loc) {
-      graft.operators.Bucketed.writeBucketed(
-        spark.table(ts.counts).localCheckpoint(), ts.counts, loc, "__gh", 2)
-    }
+    CompactionKill.afterRewrite(spark, loc, spark.table(ts.counts), None)(
+      graft.operators.Bucketed.writeBucketed(_, ts.counts, loc, "__gh", 2))
+    assert(Layouts.readFingerprint(spark, ts.counts).contains("span|5"))
     val more = Seq((3L, "c d e f g h i j")).toDF("id", "text")
     intercept[IllegalArgumentException] { // a different window width
       graft.operators.SpanDedup.appendToIndex(ts, more, "id", "text", 6, 2)
     }
     graft.operators.SpanDedup.compactIndex(spark, ts, 2)
-    assertRestamped(loc, "span|5")
+    assert(Layouts.readFingerprint(spark, ts.counts).contains("span|5"))
     intercept[IllegalArgumentException] {
       graft.operators.SpanDedup.appendToIndex(ts, more, "id", "text", 6, 2)
     }

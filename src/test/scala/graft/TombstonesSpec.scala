@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.functions.VectorFunctions.Cosine
-import graft.operators.{IvfIndex, LshIndex, PqIndex, Tombstones}
+import graft.operators.{CompactionKill, IvfIndex, LshIndex, PqIndex, Tombstones}
 
 /** The delete lifecycle over stored layouts: tombstone add/read/clear,
   * reader exclusion, the search faces' `excludeIds`, and the compact purge
@@ -294,27 +294,63 @@ class TombstonesSpec extends SparkSpec {
     } finally query.stop()
   }
 
-  test("a crashed compaction's sibling backup still serves every marker; clear retires both") {
-    val (path, _) = freshLayout("crashwin")
+  test("a compaction killed after its rewrite keeps every marker; serving still excludes every deleted id") {
+    val (path, model) = freshLayout("crashwin")
     Tombstones.add(corpus.filter(deleted), "cid", path)
     val n = corpus.filter(deleted).count()
-    // simulate the crash window preserveAcrossRewrite protects: markers
-    // snapshotted to the sibling backup, the rewrite committed (the
-    // in-layout side store destroyed with the old files), restore never ran
-    Tombstones.read(spark, path).get.select($"id")
-      .write.mode("overwrite").parquet(path + "__tombs_backup")
-    val sp = new org.apache.hadoop.fs.Path(path, Tombstones.SideDir)
-    val fs = sp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(sp, true)
-    // the union read finds the backup — no marker is lost, serving still
-    // excludes every deleted id
+    // layout-only rewrite landed, then the kill: the markers sit in the
+    // layout's sidecar, which the rewrite never touches
+    CompactionKill.ivfAfterRewrite(spark, path, None)
     val t = Tombstones.read(spark, path)
     assert(t.nonEmpty && t.get.select($"id").distinct().count() == n)
     assert(Tombstones.excludeDeleted(spark.read.parquet(path), "cid",
       spark, path).filter(deleted).count() == 0)
-    // a purge's clear retires the backup too — no stale resurrection
-    Tombstones.clear(spark, path)
+    assert(IvfIndex.search(queries, "qid", "qvec", spark.read.parquet(path),
+      "cid", "cvec", model, K, Probes, Cosine,
+      excludeIds = Tombstones.read(spark, path)).filter(deleted).count() == 0)
+    // the fence stays raised until the re-run completes
+    intercept[IllegalArgumentException] {
+      Tombstones.add(corpus.filter(deleted), "cid", path)
+    }
+    IvfIndex.compact(spark, path, "cid")
     assert(Tombstones.read(spark, path).isEmpty)
+    assert(spark.read.parquet(path).filter(deleted).count() == 0)
+    Tombstones.add(corpus.filter(deleted), "cid", path)
+  }
+
+  test("a purge killed before its marker clear serves the same answer; the re-run clears the markers") {
+    val (path, model) = freshLayout("purgekill")
+    Tombstones.add(corpus.filter(deleted), "cid", path)
+    def served(excl: Option[org.apache.spark.sql.DataFrame]) =
+      rows(IvfIndex.search(queries, "qid", "qvec", spark.read.parquet(path),
+        "cid", "cvec", model, K, Probes, Cosine, excludeIds = excl))
+    val before = served(Tombstones.read(spark, path))
+    CompactionKill.ivfAfterRewrite(spark, path, Some("cid"))
+    // the purged files landed; the markers are still in place
+    assert(spark.read.parquet(path).filter(deleted).count() == 0)
+    assert(Tombstones.read(spark, path).nonEmpty)
+    assert(served(Tombstones.read(spark, path)) == before)
+    assert(served(None) == before)
+    IvfIndex.compact(spark, path, "cid")
+    assert(Tombstones.read(spark, path).isEmpty)
+    assert(served(None) == before)
+  }
+
+  test("a rebuild carries the fence epoch forward: a takedown straddling a rebuild and a compaction raises") {
+    val (path, _) = freshLayout("fencecarry")
+    IvfIndex.compact(spark, path, "cid")
+    val before = Tombstones.readFence(spark, path)
+    assert(before.epoch > 0 && !before.inProgress)
+    // a takedown that read `before`, then a rebuild plus one compaction:
+    // had the rebuild restarted the epoch, the compaction would bring it
+    // back to `before` and the takedown would land unfenced
+    freshLayout("fencecarry")
+    assert(Tombstones.readFence(spark, path) == before)
+    IvfIndex.compact(spark, path, "cid")
+    val e = intercept[IllegalArgumentException] {
+      Tombstones.requireFenceAt(spark, path, before)
+    }
+    assert(e.getMessage.contains("raced"))
   }
 
   test("a takedown racing a maintenance rewrite raises instead of being silently destroyed") {
@@ -372,23 +408,17 @@ class TombstonesSpec extends SparkSpec {
       excludeIds = Tombstones.read(spark, path)).count() == 0)
   }
 
-  test("a stale backup from a crashed layout-only compaction dies with a fresh rebuild") {
-    // r12 advice (medium): backup written, restore never ran, then a FULL
-    // REBUILD at the same path — without the build-face clear the stale
-    // backup would survive (it sits outside the layout), be unioned in by
-    // read(), and kill live rows of the NEW build
+  test("a fresh rebuild drops a crashed compaction's markers and heals its fence") {
+    // markers in place, a compaction killed after its rewrite, then a FULL
+    // REBUILD at the same path: the sidecar outlives the rebuild's
+    // overwrite, so without the build-face clear the old markers would
+    // kill live rows of the NEW build
     val (path, _) = freshLayout("stalebak")
     Tombstones.add(corpus.filter(deleted), "cid", path)
-    intercept[RuntimeException] {
-      Tombstones.preserveAcrossRewrite(spark, path) {
-        throw new RuntimeException("simulated crash after the backup snapshot")
-      }
-    }
-    // rebuild at the same path: clearForRebuild retires markers, the
-    // stale backup AND the crashed fence
+    CompactionKill.ivfAfterRewrite(spark, path, None)
     val (_, model) = freshLayout("stalebak")
     assert(Tombstones.read(spark, path).isEmpty,
-      "a fresh build must not inherit the crashed cycle's markers/backup")
+      "a fresh build must not inherit the crashed cycle's markers")
     assert(Tombstones.excludeDeleted(spark.read.parquet(path), "cid",
       spark, path).count() == corpus.count())
     // the healed fence accepts takedowns again
