@@ -86,13 +86,15 @@ object Layouts {
     java.security.MessageDigest.getInstance("MD5")
       .digest(payload.getBytes("UTF-8")).map("%02x".format(_)).mkString
 
-  /** The storage location of a catalog table — the ONE `DESCRIBE
-    * FORMATTED … Location` lookup. None for a relation without one (a
-    * temp view). */
+  /** The storage location of a catalog table, read off its catalog entry
+    * — the string `DESCRIBE FORMATTED … Location` prints, without planning
+    * and running that query on every fingerprint check. None for a
+    * relation without one (a temp view). */
   def location(s: SparkSession, table: String): Option[String] =
-    s.sql(s"DESCRIBE FORMATTED $table")
-      .filter(org.apache.spark.sql.functions.col("col_name") === "Location")
-      .select("data_type").collect().headOption.map(_.getString(0))
+    s.sessionState.catalog.getTempViewOrPermanentTableMetadata(
+        s.sessionState.sqlParser.parseTableIdentifier(table))
+      .storage.locationUri
+      .map(org.apache.spark.sql.catalyst.catalog.CatalogUtils.URIToString)
 
   private def fs(s: SparkSession, p: Path) =
     p.getFileSystem(s.sparkContext.hadoopConfiguration)

@@ -69,8 +69,8 @@ object Bucketed {
     * hash into the same bucket files as the base build, so every downstream
     * co-located join/probe keeps its exchange-free plan — the O(delta)
     * ingest half of the write-once trade above. Each append adds at most
-    * one file per bucket; periodic compaction (re-running the overwrite
-    * form) bounds file counts in a long-lived deployment. */
+    * one file per bucket; periodic compaction ([[compactTable]]) bounds
+    * file counts in a long-lived deployment. */
   def appendBucketedKeys(df: DataFrame, tableName: String,
       keys: Seq[String], numBuckets: Int, partCols: Seq[String] = Nil): Unit = {
     val w = clusterByBucket(df, keys, numBuckets)
@@ -90,8 +90,8 @@ object Bucketed {
 
   /** Compact an appendable bucketed table through [[compactWith]]:
     * `merge` of its live rows rewritten through the same bucketed layout
-    * at the same location. One definition for the span-count, LSH-bucket,
-    * CDC-chunk, and graph-edge stores. */
+    * at the same location. One definition for the [[CountStore]]s, the
+    * LSH-bucket and graph-edge stores and the Jaccard and label tables. */
   def compactTable(spark: SparkSession, tableName: String, keys: Seq[String],
       numBuckets: Int, purgeIdCol: Option[String] = None,
       partCols: Seq[String] = Nil)(

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions
@@ -61,106 +61,61 @@ object Cdc {
 
   final case class StoreTable(chunks: String)
 
+  /** The store as a [[CountStore]] keyed on `chunk_hash` (split counts,
+    * negated delete, net presence, compact as the purge); the modulus is
+    * its identity. */
+  private def store(t: StoreTable) = CountStore(t.chunks, Seq("chunk_hash"))
+  private def fp(modulus: Int) = s"cdc|$modulus"
+
+  private def chunkCounts(docs: DataFrame, idCol: String, textCol: String,
+      modulus: Int): DataFrame =
+    chunks(docs, idCol, textCol, modulus)
+      .groupBy(col("chunk_hash")).agg(count(lit(1)).as("__c"))
+
   /** Build + persist the corpus chunk census as ONE bucketed table
-    * `graft_cdcstore_<tag>`(chunk_hash, __c, __nt), bucketed on
-    * `chunk_hash` — the column every ingest probe joins on, so per-batch
-    * joins reuse the stored HashPartitioning. Counts only (no positions):
-    * the store answers "is this chunk already held, and how long is it" —
-    * |store| = distinct chunks, far below the corpus. */
+    * `graft_cdcstore_<tag>`(chunk_hash, __c), bucketed on `chunk_hash` —
+    * the column every ingest probe joins on, so per-batch joins reuse the
+    * stored HashPartitioning. Counts only (no positions): the store
+    * answers "is this chunk already held" — |store| = distinct chunks, far
+    * below the corpus. */
   def buildStore(corpus: DataFrame, idCol: String, textCol: String,
       modulus: Int, tag: String, basePath: String,
       numBuckets: Int): StoreTable = {
-    val census = chunks(corpus, idCol, textCol, modulus)
-      .groupBy(col("chunk_hash"))
-      .agg(count(lit(1)).as("__c"), min(col("n_tokens")).as("__nt"))
     val t = StoreTable(s"graft_cdcstore_$tag")
-    Bucketed.writeBucketed(census, t.chunks, s"$basePath/chunks",
-      "chunk_hash", numBuckets)
-    graft.Layouts.stampFingerprint(corpus.sparkSession, t.chunks,
-      s"cdc|$modulus")
+    store(t).build(chunkCounts(corpus, idCol, textCol, modulus), fp(modulus),
+      s"$basePath/chunks", numBuckets)
     t
   }
 
-  /** O(delta) ingest: chunk ONLY the delta, count per hash, append into the
-    * bucketed store — the base corpus is never re-read. The table then
-    * holds SPLIT counts (one row per (hash, batch)), semantics-preserving
-    * for every consumer: probes test existence, and the recount invariants
-    * `count(DISTINCT chunk_hash)` / `sum(__c)` equal a from-scratch build
-    * (the SpanDedup.appendToIndex argument, applied to chunk storage). */
+  /** O(delta) ingest: chunk ONLY the delta and add its counts — the base
+    * corpus is never re-read. */
   def appendToStore(table: StoreTable, delta: DataFrame, idCol: String,
-      textCol: String, modulus: Int, numBuckets: Int): Unit = {
-    graft.Layouts.checkFingerprint(delta.sparkSession, table.chunks,
-      s"cdc|$modulus", "Cdc.appendToStore")
-    Bucketed.appendBucketedKeys(
-      chunks(delta, idCol, textCol, modulus)
-        .groupBy(col("chunk_hash"))
-        .agg(count(lit(1)).as("__c"), min(col("n_tokens")).as("__nt")),
-      table.chunks, Seq("chunk_hash"), numBuckets)
-  }
+      textCol: String, modulus: Int, numBuckets: Int): Unit =
+    store(table).add(chunkCounts(delta, idCol, textCol, modulus), 1L,
+      fp(modulus), numBuckets)
 
-  /** Compact an appended chunk store back to one row per hash: re-aggregate
-    * the split counts (min(__nt) is append-invariant — copies of one chunk
-    * share a length) and rewrite through the same bucketed layout, carrying
-    * the build fingerprint across (compaction changes layout, never
-    * identity — the SpanDedup.compactIndex contract). Bounds the file and
-    * row growth of a long append history; reads only the store, never the
-    * corpus. Hashes whose net count fell to zero ([[deleteFromStore]]
-    * decrements) are physically purged here. */
-  def compactStore(spark: org.apache.spark.sql.SparkSession,
+  /** Compact an appended chunk store back to one row per hash with the
+    * net-zero hashes purged; reads only the store, never the corpus. */
+  def compactStore(spark: SparkSession,
       table: StoreTable, numBuckets: Int): Unit =
-    Bucketed.compactTable(spark, table.chunks, Seq("chunk_hash"), numBuckets)(
-      _.groupBy(col("chunk_hash"))
-        .agg(sum(col("__c")).cast("long").as("__c"),
-          min(col("__nt")).as("__nt"))
-        .filter(col("__c") > 0L))
+    store(table).compact(spark, numBuckets)
 
-  /** Delete documents from the chunk store by EXACT DECREMENT —
-    * [[SpanDedup.deleteFromIndex]]'s CDC sibling (the store aggregates
-    * counts, so a takedown's contribution is an addend, not a row to
-    * tombstone): re-chunk ONLY the deleted docs and append their counts
-    * NEGATED. `__nt` rides along non-negated (copies of one chunk share a
-    * length, so the min stays append-invariant whether the row adds or
-    * removes copies). Probes read net presence ([[probeStore]]), so a
-    * chunk whose every copy was deleted stops counting as known
-    * immediately; [[compactStore]] purges net-zero rows. O(|deleted
-    * docs|), the store never rebuilt; delete ∘ append ≡ id
-    * (spec-pinned). Decrement exactly once per ingested doc — the
-    * [[SpanDedup.deleteFromIndex]] contract. */
+  /** Delete documents from the chunk store by exact decrement: re-chunk
+    * ONLY the deleted docs and add their counts negated. */
   def deleteFromStore(table: StoreTable, docs: DataFrame, idCol: String,
-      textCol: String, modulus: Int, numBuckets: Int): Unit = {
-    graft.Layouts.checkFingerprint(docs.sparkSession, table.chunks,
-      s"cdc|$modulus", "Cdc.deleteFromStore")
-    Bucketed.appendBucketedKeys(
-      chunks(docs, idCol, textCol, modulus)
-        .groupBy(col("chunk_hash"))
-        .agg((-count(lit(1))).as("__c"), min(col("n_tokens")).as("__nt")),
-      table.chunks, Seq("chunk_hash"), numBuckets)
-  }
+      textCol: String, modulus: Int, numBuckets: Int): Unit =
+    store(table).add(chunkCounts(docs, idCol, textCol, modulus), -1L,
+      fp(modulus), numBuckets)
 
   /** Ingest-batch dedup hit rate: per delta document, how many of its
     * chunks (and tokens) the store already holds — the number that decides
     * whether a crawl batch is worth storing. Chunking is O(|delta|); the
-    * store appears only through a bucketed left-semi probe. */
-  def probeStore(spark: org.apache.spark.sql.SparkSession, table: StoreTable,
+    * store appears only through its net-presence probe. */
+  def probeStore(spark: SparkSession, table: StoreTable,
       delta: DataFrame, idCol: String, textCol: String,
       modulus: Int): DataFrame = {
-    graft.Layouts.checkFingerprint(spark, table.chunks,
-      s"cdc|$modulus", "Cdc.probeStore")
     val dch = chunks(delta, idCol, textCol, modulus).localCheckpoint()
-    // Presence = NET count > 0 (the SpanDedup.incrementalSpans argument):
-    // split positive counts preserve existence, and deleteFromStore's
-    // negative decrements must make a fully-deleted chunk stop matching.
-    // Semi-join the store to the DELTA's hashes FIRST, then net only the
-    // matched groups (r12 advice): without the restriction every probe
-    // batch paid a full-store aggregation — per-batch cost growing with
-    // total distinct hashes instead of delta-matched hashes. The semi-join
-    // preserves the store scan's bucketed HashPartitioning (left side of a
-    // broadcast semi), so the aggregation still runs exchange-free on the
-    // store side.
-    val present = spark.table(table.chunks)
-      .join(dch.select("chunk_hash").distinct(), Seq("chunk_hash"), "left_semi")
-      .groupBy(col("chunk_hash")).agg(sum(col("__c")).as("__net"))
-      .filter(col("__net") > 0L).select("chunk_hash")
+    val present = store(table).net(spark, dch.select("chunk_hash"), fp(modulus))
     val known = dch.join(present, Seq("chunk_hash"), "left_semi")
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("__nk"), sum(col("n_tokens")).as("__kt"))
@@ -182,7 +137,7 @@ object Cdc {
     * O(|batch|); the store is never rebuilt. Probe-then-append per batch
     * means an intra-batch duplicate still counts as new (matching the
     * batch probe), while later batches see every earlier batch's chunks. */
-  def ingestStream(spark: org.apache.spark.sql.SparkSession, table: StoreTable,
+  def ingestStream(spark: SparkSession, table: StoreTable,
       deltaStream: DataFrame, idCol: String, textCol: String, modulus: Int,
       numBuckets: Int)(
       sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =

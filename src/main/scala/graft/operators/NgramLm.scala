@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions.tokens
 
@@ -17,14 +17,11 @@ import graft.functions.TextFunctions.tokens
   *     persisted as BUCKETED tables keyed on the columns scoring probes
   *     (`t` for unigrams, `(p, t)` for bigrams), so per-batch probes reuse
   *     the stored HashPartitioning and never reshuffle the model side.
-  *  2. '''[[appendToStore]]''' (per ingest batch): counts are addends, so
-  *     O(delta) ingest is a negated-free bucketed count append — split
-  *     counts sum at read time ([[SpanDedup]]'s count-store mechanic).
-  *  3. '''[[deleteFromStore]]''' (takedowns): the deleted docs' counts
-  *     appended NEGATED — the exact inverse of append (delete ∘ append ≡
-  *     id, spec-pinned); probes read NET counts, so a fully-deleted gram
-  *     stops contributing immediately; [[compactStore]] purges net-zero.
-  *  4. '''[[scoreDocs]]''' (per batch): per-document mean interpolated
+  *  2. '''[[appendToStore]]''' / '''[[deleteFromStore]]''' (per ingest batch /
+  *     takedown): both tables are [[CountStore]]s, so ingest adds the
+  *     batch's counts, a takedown adds them negated, probes read net
+  *     counts and [[compactStore]] purges net-zero grams.
+  *  3. '''[[scoreDocs]]''' (per batch): per-document mean interpolated
   *     log-probability of the DELTA against the STORED model —
   *     O(|delta| × probe), the model appears only through bucketed joins
   *     restricted to the delta's own grams.
@@ -51,19 +48,48 @@ object NgramLm {
   final case class LmTables(uni: String, bi: String, stats: String)
 
   private def fp = "lm|ws-split|bigram"
+  private def uniStore(t: LmTables) = CountStore(t.uni, Seq("t"))
+  private def biStore(t: LmTables) = CountStore(t.bi, Seq("p", "t"))
 
   private def uniCounts(docs: DataFrame, textCol: String): DataFrame =
     docs.select(explode(tokens(col(textCol))).as("t"))
       .groupBy("t").agg(count(lit(1)).as("__c"))
 
-  private def biCounts(docs: DataFrame, textCol: String): DataFrame =
-    docs.select(tokens(col(textCol)).as("__ts"))
+  /** (carry…, p, t): one row per adjacent token pair of every doc with
+    * ≥ 2 tokens — the one bigram stream the counts and scorers share. */
+  private def bigrams(docs: DataFrame, textCol: String,
+      carry: String*): DataFrame =
+    docs.select(carry.map(col) :+ tokens(col(textCol)).as("__ts"): _*)
       .filter(size(col("__ts")) >= 2)
-      .select(explode(transform(sequence(lit(2), size(col("__ts"))),
-        i => struct(element_at(col("__ts"), i - 1).as("p"),
-          element_at(col("__ts"), i).as("t")))).as("__bg"))
-      .select(col("__bg.p").as("p"), col("__bg.t").as("t"))
-      .groupBy("p", "t").agg(count(lit(1)).as("__c"))
+      .select(carry.map(col) :+
+        explode(transform(sequence(lit(2), size(col("__ts"))),
+          i => struct(element_at(col("__ts"), i - 1).as("p"),
+            element_at(col("__ts"), i).as("t")))).as("__bg"): _*)
+      .select(carry.map(col) :+ col("__bg.p").as("p") :+ col("__bg.t").as("t"): _*)
+
+  private def biCounts(docs: DataFrame, textCol: String): DataFrame =
+    bigrams(docs, textCol).groupBy("p", "t").agg(count(lit(1)).as("__c"))
+
+  /** Σ of the normalizer addends: one row (__tot, __nv, __nb) off the
+    * maintained stats table — O(#maintenance ops) rows, not O(vocab). */
+  private def normalizer(spark: SparkSession, tables: LmTables): DataFrame =
+    spark.table(tables.stats)
+      .agg(coalesce(sum(col("__tot")), lit(0L)).cast("long").as("__tot"),
+        coalesce(sum(col("__nv")), lit(0L)).cast("long").as("__nv"),
+        coalesce(sum(col("__nb")), lit(0L)).cast("long").as("__nb"))
+
+  /** (idCol, n_bigrams, avg_logprob) from per-bigram probabilities `p`:
+    * the exact-integer micro-pinned mean of round(ln(p), 8). */
+  private def meanLogprob(scored: DataFrame, idCol: String,
+      p: Column): DataFrame = {
+    import graft.functions.ExactRound
+    scored.select(col(idCol), round(log(p), 8).as("__lp"))
+      .groupBy(col(idCol))
+      .agg(count(lit(1)).as("n_bigrams"),
+        ExactRound.ratioRound6Int(
+          sum(ExactRound.eScaled(col("__lp"), 8).cast("decimal(38,0)")), 8,
+          count(lit(1))).as("avg_logprob"))
+  }
 
   /** Train + persist the model over `corpus` as two bucketed count tables
     * plus the normalizer-addend table under `basePath`, tagged `tag`:
@@ -78,9 +104,8 @@ object NgramLm {
       s"graft_lm_stats_$tag")
     val uc = uniCounts(corpus, textCol).localCheckpoint() // counts + seed
     val bc = biCounts(corpus, textCol).localCheckpoint()
-    Bucketed.writeBucketed(uc, t.uni, s"$basePath/uni", "t", numBuckets)
-    Bucketed.writeBucketedKeys(bc, t.bi, s"$basePath/bi", Seq("p", "t"),
-      numBuckets)
+    uniStore(t).build(uc, fp, s"$basePath/uni", numBuckets)
+    biStore(t).build(bc, fp, s"$basePath/bi", numBuckets)
     val s = corpus.sparkSession
     s.sql(s"DROP TABLE IF EXISTS ${t.stats}")
     uc.agg(coalesce(sum(col("__c")), lit(0L)).cast("long").as("__tot"),
@@ -88,87 +113,73 @@ object NgramLm {
       .crossJoin(bc.agg(count(lit(1)).as("__nb")))
       .write.mode("overwrite").format("parquet")
       .option("path", s"$basePath/stats").saveAsTable(t.stats)
-    graft.Layouts.stampFingerprint(s, t.uni, fp)
-    graft.Layouts.stampFingerprint(s, t.bi, fp)
     t
   }
 
   /** One (Δtotal, ΔV, ΔN1+) addend row for a batch about to be APPLIED to
-    * the store: Δtotal = ±the batch's token mass; ΔV / ΔN1+ = how many of
-    * the batch's DISTINCT tokens / bigrams cross zero net (enter the
-    * model on append, leave it on delete). The store appears only through
-    * semi-joins restricted to the batch's own grams — delta-bounded,
-    * never a vocab scan — and the row is MATERIALIZED before the caller
-    * mutates the count tables (the probes must see pre-apply nets). */
+    * the store with `sign`: Δtotal = sign × the batch's token mass; ΔV /
+    * ΔN1+ = sign × how many of the batch's DISTINCT tokens / bigrams cross
+    * zero net (enter the model on append, leave it on delete). The store
+    * appears only through [[CountStore.net]] probes restricted to the
+    * batch's own grams — delta-bounded, never a vocab scan — and the row
+    * is MATERIALIZED before the caller mutates the count tables (the
+    * probes must see pre-apply nets). */
   private def statsDelta(spark: SparkSession, tables: LmTables,
-      batchUni: DataFrame, batchBi: DataFrame, negate: Boolean): DataFrame = {
-    val sign = if (negate) -1L else 1L
-    def crossing(store: String, batch: DataFrame, keys: Seq[String]): DataFrame = {
-      val net = spark.table(store)
-        .join(batch.select(keys.map(col): _*), keys, "left_semi")
-        .groupBy(keys.map(col): _*)
-        .agg(sum(col("__c")).cast("long").as("__net"))
-      if (negate)
+      batchUni: DataFrame, batchBi: DataFrame, sign: Long): DataFrame = {
+    def crossing(store: CountStore, batch: DataFrame): DataFrame = {
+      val net = store.net(spark, batch.select(store.keys.map(col): _*), fp)
+        .withColumnRenamed("__c", "__net")
+      if (sign < 0)
         // grams whose net hits zero when this batch's counts come out
-        batch.join(net, keys).filter(col("__net") === col("__c"))
+        batch.join(net, store.keys).filter(col("__net") === col("__c"))
       else
         // grams absent (or net-zero after an earlier delete) before this
         // batch lands
-        batch.join(net.filter(col("__net") > 0L), keys, "left_anti")
+        batch.join(net, store.keys, "left_anti")
     }
     batchUni.agg(
         (lit(sign) * coalesce(sum(col("__c")), lit(0L))).cast("long").as("__tot"))
-      .crossJoin(crossing(tables.uni, batchUni, Seq("t"))
+      .crossJoin(crossing(uniStore(tables), batchUni)
         .agg((lit(sign) * count(lit(1))).as("__nv")))
-      .crossJoin(crossing(tables.bi, batchBi, Seq("p", "t"))
+      .crossJoin(crossing(biStore(tables), batchBi)
         .agg((lit(sign) * count(lit(1))).as("__nb")))
       .localCheckpoint()
   }
 
-  /** O(delta) ingest: append the batch's counts (split counts sum at read
-    * time) and the batch's normalizer addend. The fingerprint gate refuses
-    * a tokenizer/model-shape drift. CRASH WINDOW (single maintenance
-    * writer, like every append face here): a failure between the count
-    * appends and the stats append leaves the normalizer excluding a batch
-    * the counts include — scoring would silently use stale (total, V,
-    * N1+) until repaired; [[recountStats]] is the explicit repair (and
-    * the recovery step a deployment runs after any crashed maintenance
-    * op, the [[Bucketed.compactTable]]-contract analog). */
-  def appendToStore(tables: LmTables, docs: DataFrame, textCol: String,
-      numBuckets: Int): Unit = {
+  /** Apply a batch's counts with `sign` (+1 ingest, −1 takedown) to both
+    * count tables, and its normalizer addend to the stats table. The
+    * fingerprint gate refuses a tokenizer/model-shape drift. CRASH WINDOW
+    * (single maintenance writer, like every append face here): a failure
+    * between the count appends and the stats append leaves the normalizer
+    * excluding a batch the counts include — scoring would silently use
+    * stale (total, V, N1+) until repaired; [[recountStats]] is the
+    * explicit repair (and the recovery step a deployment runs after any
+    * crashed maintenance op, the [[Bucketed.compactWith]]-contract
+    * analog). */
+  private def applySigned(tables: LmTables, docs: DataFrame, textCol: String,
+      numBuckets: Int, sign: Long): Unit = {
     val s = docs.sparkSession
-    graft.Layouts.checkFingerprint(s, tables.uni, fp, "NgramLm.appendToStore")
     val du = uniCounts(docs, textCol).localCheckpoint()
     val db = biCounts(docs, textCol).localCheckpoint()
-    val sd = statsDelta(s, tables, du, db, negate = false) // pre-apply probe
-    Bucketed.appendBucketedKeys(du, tables.uni, Seq("t"), numBuckets)
-    Bucketed.appendBucketedKeys(db, tables.bi, Seq("p", "t"), numBuckets)
+    val sd = statsDelta(s, tables, du, db, sign) // pre-apply probe
+    uniStore(tables).add(du, sign, fp, numBuckets)
+    biStore(tables).add(db, sign, fp, numBuckets)
     sd.write.mode("append").format("parquet").saveAsTable(tables.stats)
     s.catalog.refreshTable(tables.stats)
   }
 
-  /** Takedown by EXACT DECREMENT: re-count ONLY the deleted docs and append
-    * their counts negated — the [[SpanDedup.deleteFromIndex]] contract
-    * (decrement exactly once per ingested doc; probes read net counts).
-    * The normalizer addend records the leaving mass and vocabulary; the
-    * [[appendToStore]] crash-window note (and [[recountStats]] repair)
-    * applies here identically. */
+  /** O(delta) ingest: the batch's counts and normalizer addend appended
+    * ([[applySigned]]). */
+  def appendToStore(tables: LmTables, docs: DataFrame, textCol: String,
+      numBuckets: Int): Unit =
+    applySigned(tables, docs, textCol, numBuckets, 1L)
+
+  /** Takedown by exact decrement: the deleted docs' counts appended
+    * negated, and the normalizer addend records the leaving mass and
+    * vocabulary ([[applySigned]]; its crash-window note applies). */
   def deleteFromStore(tables: LmTables, docs: DataFrame, textCol: String,
-      numBuckets: Int): Unit = {
-    val s = docs.sparkSession
-    graft.Layouts.checkFingerprint(s, tables.uni, fp, "NgramLm.deleteFromStore")
-    val du = uniCounts(docs, textCol).localCheckpoint()
-    val db = biCounts(docs, textCol).localCheckpoint()
-    val sd = statsDelta(s, tables, du, db, negate = true) // pre-apply probe
-    Bucketed.appendBucketedKeys(
-      du.select(col("t"), (-col("__c")).as("__c")),
-      tables.uni, Seq("t"), numBuckets)
-    Bucketed.appendBucketedKeys(
-      db.select(col("p"), col("t"), (-col("__c")).as("__c")),
-      tables.bi, Seq("p", "t"), numBuckets)
-    sd.write.mode("append").format("parquet").saveAsTable(tables.stats)
-    s.catalog.refreshTable(tables.stats)
-  }
+      numBuckets: Int): Unit =
+    applySigned(tables, docs, textCol, numBuckets, -1L)
 
   /** Rebuild the normalizer from the COUNT TABLES — the repair verb for a
     * crash between a maintenance op's count appends and its stats append
@@ -191,22 +202,13 @@ object NgramLm {
   }
 
   /** Merge split/negated count rows and purge net-zero grams — one
-    * bucketed rewrite per table ([[Bucketed.compactTable]]'s scaffold) —
-    * and collapse the normalizer addends to a single row. */
+    * [[CountStore.compact]] per table — and collapse the normalizer
+    * addends to a single row. */
   def compactStore(spark: SparkSession, tables: LmTables,
       numBuckets: Int): Unit = {
-    def merge(df: DataFrame, keys: Seq[String]) =
-      df.groupBy(keys.map(col): _*)
-        .agg(sum(col("__c")).cast("long").as("__c"))
-        .filter(col("__c") > 0L)
-    Bucketed.compactTable(spark, tables.uni, Seq("t"), numBuckets)(
-      merge(_, Seq("t")))
-    Bucketed.compactTable(spark, tables.bi, Seq("p", "t"), numBuckets)(
-      merge(_, Seq("p", "t")))
-    val one = spark.table(tables.stats)
-      .agg(coalesce(sum(col("__tot")), lit(0L)).cast("long").as("__tot"),
-        coalesce(sum(col("__nv")), lit(0L)).cast("long").as("__nv"),
-        coalesce(sum(col("__nb")), lit(0L)).cast("long").as("__nb"))
+    uniStore(tables).compact(spark, numBuckets)
+    biStore(tables).compact(spark, numBuckets)
+    val one = normalizer(spark, tables)
       .localCheckpoint() // off the table before the overwrite reads it
     // insertInto keeps the table's identity (external location included);
     // overwrite truncates the old addend rows
@@ -235,8 +237,7 @@ object NgramLm {
   /** Per-document mean interpolated log-probability of `delta` against the
     * STORED model: (idCol, n_bigrams, avg_logprob) for every delta doc
     * with ≥ 2 tokens. The store appears only through net-count probes
-    * restricted to the delta's own grams (bucketed semi-joins — the
-    * [[SpanDedup.incrementalSpans]] bounding discipline); the (total, V)
+    * restricted to the delta's own grams ([[CountStore.net]]); the (total, V)
     * normalizer comes off the maintained stats table — a few addend
     * rows, no vocab-wide aggregation anywhere in the scoring plan
     * (PlanSpec-pinned). `avg_logprob` is the
@@ -291,102 +292,47 @@ object NgramLm {
     * hash-for-hash. */
   def scoreDocsKneserNey(spark: SparkSession, tables: LmTables,
       delta: DataFrame, idCol: String, textCol: String): DataFrame = {
-    graft.Layouts.checkFingerprint(spark, tables.uni, fp, "NgramLm.scoreDocsKneserNey")
-    import graft.functions.ExactRound
-    val pos = delta.select(col(idCol), tokens(col(textCol)).as("__ts"))
-      .filter(size(col("__ts")) >= 2)
-      .select(col(idCol),
-        explode(transform(sequence(lit(2), size(col("__ts"))),
-          i => struct(element_at(col("__ts"), i - 1).as("p"),
-            element_at(col("__ts"), i).as("t")))).as("__bg"))
-      .select(col(idCol), col("__bg.p").as("p"), col("__bg.t").as("t"))
-      .localCheckpoint()
-    val biStore = spark.table(tables.bi)
+    val pos = bigrams(delta, textCol, idCol).localCheckpoint()
     // one context-restricted net probe feeds BOTH the pair lookup and the
     // per-context aggregates (c(p), N1+(p·))
-    val ctxNets = biStore
-      .join(pos.select("p").distinct(), Seq("p"), "left_semi")
-      .groupBy(col("p"), col("t"))
-      .agg(sum(col("__c")).cast("long").as("__n"))
-      .filter(col("__n") > 0L)
+    val ctxNets = biStore(tables).net(spark, pos.select("p"), fp)
       .localCheckpoint()
     val pairNet = ctxNets
       .join(pos.select("p", "t").distinct(), Seq("p", "t"), "left_semi")
-      .select(col("p"), col("t"), col("__n").as("__c2"))
+      .select(col("p"), col("t"), col("__c").as("__c2"))
     val ctx = ctxNets.groupBy(col("p"))
-      .agg(sum(col("__n")).cast("long").as("__c1"), count(lit(1)).as("__n1p"))
-    val cont = biStore
-      .join(pos.select("t").distinct(), Seq("t"), "left_semi")
-      .groupBy(col("p"), col("t"))
-      .agg(sum(col("__c")).cast("long").as("__n"))
-      .filter(col("__n") > 0L)
+      .agg(sum(col("__c")).cast("long").as("__c1"), count(lit(1)).as("__n1p"))
+    val cont = biStore(tables).net(spark, pos.select("t"), fp)
       .groupBy(col("t")).agg(count(lit(1)).as("__n1t"))
-    val sc = spark.table(tables.stats)
-      .agg(coalesce(sum(col("__nb")), lit(0L)).cast("long").as("__nb"),
-        coalesce(sum(col("__nv")), lit(0L)).cast("long").as("__v"))
     val d = lit(0.75d)
     def pcont = (coalesce(col("__n1t"), lit(0L)).cast("double") + lit(1.0d)) /
-      (col("__nb").cast("double") + col("__v") + lit(1.0d))
-    pos.join(pairNet, Seq("p", "t"), "left")
+      (col("__nb").cast("double") + col("__nv") + lit(1.0d))
+    meanLogprob(pos.join(pairNet, Seq("p", "t"), "left")
       .join(ctx, Seq("p"), "left")
       .join(cont, Seq("t"), "left")
-      .crossJoin(broadcast(sc))
-      .select(col(idCol), round(log(
-        when(col("__c1").isNotNull,
-          (greatest(coalesce(col("__c2"), lit(0L)).cast("double") - d,
-            lit(0.0d)) + d * col("__n1p") * pcont) / col("__c1"))
-          .otherwise(pcont)), 8).as("__lp"))
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_bigrams"),
-        ExactRound.ratioRound6Int(
-          sum(ExactRound.eScaled(col("__lp"), 8).cast("decimal(38,0)")), 8,
-          count(lit(1))).as("avg_logprob"))
+      .crossJoin(broadcast(normalizer(spark, tables))), idCol,
+      when(col("__c1").isNotNull,
+        (greatest(coalesce(col("__c2"), lit(0L)).cast("double") - d,
+          lit(0.0d)) + d * col("__n1p") * pcont) / col("__c1"))
+        .otherwise(pcont))
   }
 
   private def scoredAgainstStore(spark: SparkSession, tables: LmTables,
       delta: DataFrame, idCol: String, textCol: String)(
-      prob: (org.apache.spark.sql.Column, org.apache.spark.sql.Column,
-        org.apache.spark.sql.Column, org.apache.spark.sql.Column,
-        org.apache.spark.sql.Column) => org.apache.spark.sql.Column): DataFrame = {
-    graft.Layouts.checkFingerprint(spark, tables.uni, fp, "NgramLm.scoreDocs")
-    import graft.functions.ExactRound
-    val pos = delta.select(col(idCol), tokens(col(textCol)).as("__ts"))
-      .filter(size(col("__ts")) >= 2)
-      .select(col(idCol),
-        explode(transform(sequence(lit(2), size(col("__ts"))),
-          i => struct(element_at(col("__ts"), i - 1).as("p"),
-            element_at(col("__ts"), i).as("t")))).as("__bg"))
-      .select(col(idCol), col("__bg.p").as("p"), col("__bg.t").as("t"))
+      prob: (Column, Column, Column, Column, Column) => Column): DataFrame = {
+    val pos = bigrams(delta, textCol, idCol)
       .localCheckpoint() // two probes + the final join read it
-    val deltaToks = pos.select(col("p").as("t"))
-      .unionAll(pos.select(col("t"))).distinct()
+    val deltaToks = pos.select(col("p").as("t")).unionAll(pos.select(col("t")))
     // net counts, delta-restricted: the semi keeps the bucketed scan's
     // partitioning, the aggregation is bounded by delta-matched grams
-    val uniNet = spark.table(tables.uni)
-      .join(deltaToks, Seq("t"), "left_semi")
-      .groupBy(col("t")).agg(sum(col("__c")).as("__cu"))
-      .filter(col("__cu") > 0L)
-    val biNet = spark.table(tables.bi)
-      .join(pos.select("p", "t").distinct(), Seq("p", "t"), "left_semi")
-      .groupBy(col("p"), col("t")).agg(sum(col("__c")).as("__c2"))
-      .filter(col("__c2") > 0L)
-    // model scalars: the maintained normalizer addends sum to (total, V) —
-    // O(#maintenance ops) rows, not O(vocab)
-    val vt = spark.table(tables.stats)
-      .agg(coalesce(sum(col("__tot")), lit(0L)).cast("long").as("__tot"),
-        coalesce(sum(col("__nv")), lit(0L)).cast("long").as("__v"))
-    pos.join(biNet, Seq("p", "t"), "left")
-      .join(uniNet.select(col("t").as("p"), col("__cu").as("__cp")),
+    val uniNet = uniStore(tables).net(spark, deltaToks, fp)
+    val biNet = biStore(tables).net(spark, pos.select("p", "t"), fp)
+      .withColumnRenamed("__c", "__c2")
+    meanLogprob(pos.join(biNet, Seq("p", "t"), "left")
+      .join(uniNet.select(col("t").as("p"), col("__c").as("__cp")),
         Seq("p"), "left")
-      .join(uniNet.select(col("t"), col("__cu").as("__cn")), Seq("t"), "left")
-      .crossJoin(broadcast(vt))
-      .select(col(idCol), round(log(
-          prob(col("__c2"), col("__cp"), col("__cn"), col("__tot"),
-            col("__v"))), 8).as("__lp"))
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_bigrams"),
-        ExactRound.ratioRound6Int(
-          sum(ExactRound.eScaled(col("__lp"), 8).cast("decimal(38,0)")), 8,
-          count(lit(1))).as("avg_logprob"))
+      .join(uniNet.select(col("t"), col("__c").as("__cn")), Seq("t"), "left")
+      .crossJoin(broadcast(normalizer(spark, tables))), idCol,
+      prob(col("__c2"), col("__cp"), col("__cn"), col("__tot"), col("__nv")))
   }
 }

@@ -69,6 +69,10 @@ object SpanDedup {
       .select(col(idCol), col("__e.p").as("__pos"), col("__e.g").as("__gh"))
   }
 
+  /** (__gh, __c): occurrences per window hash of a positional stream. */
+  private def windowCounts(pos: DataFrame): DataFrame =
+    pos.groupBy(col("__gh")).agg(count(lit(1)).as("__c"))
+
   /** Maximal duplicated spans per document: (idCol, span_start, span_end),
     * token positions 1-based inclusive. A window is duplicated when its
     * hash occurs ≥ `minCount` times corpus-wide; marked start positions
@@ -77,8 +81,7 @@ object SpanDedup {
   def duplicateSpans(df: DataFrame, idCol: String, textCol: String, k: Int,
       minCount: Long = 2L): DataFrame = {
     val pos = gramPositions(df, idCol, textCol, k)
-    val dup = pos.groupBy(col("__gh")).agg(count(lit(1)).as("__c"))
-      .filter(col("__c") >= minCount).select("__gh")
+    val dup = windowCounts(pos).filter(col("__c") >= minCount).select("__gh")
     mergeIslands(pos.join(dup, Seq("__gh")).select(col(idCol), col("__pos")),
       idCol, k)
   }
@@ -104,6 +107,12 @@ object SpanDedup {
   /** Name of the one persisted table of a span index. */
   final case class IndexTable(counts: String)
 
+  /** The index as a [[CountStore]] (split counts, negated delete, net
+    * presence, compact as the purge) keyed on `__gh`; window width is its
+    * identity — hashes at another k would poison the counts silently. */
+  private def store(t: IndexTable) = CountStore(t.counts, Seq("__gh"))
+  private def fp(k: Int) = s"span|$k"
+
   /** Build + persist the corpus window-hash counts as ONE bucketed table
     * `graft_spanidx_<tag>`(__gh, __c), bucketed on `__gh` — the column
     * every per-batch probe joins on, so ingest joins reuse the stored
@@ -113,83 +122,37 @@ object SpanDedup {
     * hashes, far below the positional stream it summarizes. */
   def buildIndex(corpus: DataFrame, idCol: String, textCol: String, k: Int,
       tag: String, basePath: String, numBuckets: Int): IndexTable = {
-    val counts = gramPositions(corpus, idCol, textCol, k)
-      .groupBy(col("__gh")).agg(count(lit(1)).as("__c"))
     val t = IndexTable(s"graft_spanidx_$tag")
-    Bucketed.writeBucketed(counts, t.counts, s"$basePath/counts", "__gh",
-      numBuckets)
-    graft.Layouts.stampFingerprint(corpus.sparkSession, t.counts, s"span|$k")
+    store(t).build(windowCounts(gramPositions(corpus, idCol, textCol, k)),
+      fp(k), s"$basePath/counts", numBuckets)
     t
   }
 
-  /** O(delta) ingest for the stored count index (the daily-crawl path,
-    * completing the maintenance story [[buildIndex]] starts): hash ONLY
-    * the delta's windows, count them per hash, and append the rows into
-    * the bucketed counts table — the base corpus is never re-read. The
-    * table then holds SPLIT counts (one row per (hash, ingest batch)),
-    * which is semantics-preserving by construction: [[incrementalSpans]]
-    * probes existence (`left_semi`, corpus count ≥ 1), and existence is
-    * invariant under splitting a count into positive parts; the recount
-    * invariants `count(DISTINCT __gh)` and `sum(__c)` equal the
-    * from-scratch rebuild exactly (gated by `dedup_span_index_append`).
-    * Appends go through the same bucket spec, so probe joins keep the
-    * stored HashPartitioning; periodic compaction = re-running
-    * [[buildIndex]] over the union. */
+  /** O(delta) ingest (the daily-crawl path): hash ONLY the delta's windows
+    * and add their counts — the base corpus is never re-read; the recount
+    * invariants are gated by `dedup_span_index_append`. */
   def appendToIndex(table: IndexTable, delta: DataFrame, idCol: String,
-      textCol: String, k: Int, numBuckets: Int): Unit = {
-    // Window width is the index's identity: delta windows hashed at a
-    // different k would poison the counts silently — the build stamps it,
-    // the append requires a match.
-    graft.Layouts.checkFingerprint(delta.sparkSession, table.counts,
-      s"span|$k", "SpanDedup.appendToIndex")
-    Bucketed.appendBucketedKeys(
-      gramPositionsUncached(delta, idCol, textCol, k)
-        .groupBy(col("__gh")).agg(count(lit(1)).as("__c")),
-      table.counts, Seq("__gh"), numBuckets)
-  }
+      textCol: String, k: Int, numBuckets: Int): Unit =
+    store(table).add(
+      windowCounts(gramPositionsUncached(delta, idCol, textCol, k)), 1L,
+      fp(k), numBuckets)
 
-  /** Compact an appended count index back to one row per hash: re-aggregate
-    * the split counts and rewrite the bucketed layout (K3
-    * truncate-then-load applied to index maintenance). Bounds the file and
-    * row growth a long append history accumulates — each append adds a file
-    * per bucket and a row per (hash, batch) — while changing nothing a
-    * probe sees: existence and the recount invariants are preserved by
-    * construction (`dedup_span_index_compact` pins both plus the
-    * one-row-per-hash property). The rewrite reads only the index (≪ the
-    * corpus), never the documents. */
+  /** Compact an appended count index back to one row per hash with the
+    * net-zero hashes purged (`dedup_span_index_compact` pins the recount
+    * invariants plus the one-row-per-hash property). */
   def compactIndex(spark: SparkSession, table: IndexTable,
       numBuckets: Int): Unit =
-    Bucketed.compactTable(spark, table.counts, Seq("__gh"), numBuckets)(
-      _.groupBy(col("__gh")).agg(sum(col("__c")).as("__c"))
-        // hashes whose net count fell to zero ([[deleteFromIndex]]
-        // decrements) are dead — the compact IS their physical purge
-        .filter(col("__c") > 0L))
+    store(table).compact(spark, numBuckets)
 
-  /** Delete documents from the count index by EXACT DECREMENT — the
-    * count-store's delete mechanic (the tombstone anti-join of the row
-    * stores has nothing to anti-join here: counts are aggregated, a doc's
-    * contribution is not a row but an addend). Re-hash ONLY the deleted
-    * docs' windows and append their counts NEGATED; probes read net
-    * presence (sum > 0 — [[incrementalSpans]]), so a hash whose every
-    * occurrence was deleted stops matching immediately, and
-    * [[compactIndex]] physically purges net-zero rows. O(|deleted docs|)
-    * per takedown, the base corpus never re-read — the same O(delta)
-    * contract as [[appendToIndex]], which this is the exact inverse of
-    * (delete ∘ append ≡ id, spec-pinned). The caller passes the documents
-    * being taken down (a takedown request carries them by definition);
-    * decrementing docs never indexed leaves net-negative rows, which
-    * presence reads as absent and compact drops — harmless, but it means
-    * "delete twice" is NOT idempotent here the way tombstones are:
-    * decrement exactly once per indexed doc. */
+  /** Delete documents from the count index by exact decrement: re-hash
+    * ONLY the deleted docs' windows and add their counts negated. The
+    * caller passes the documents being taken down (a takedown request
+    * carries them by definition). */
   def deleteFromIndex(table: IndexTable, docs: DataFrame, idCol: String,
-      textCol: String, k: Int, numBuckets: Int): Unit = {
-    graft.Layouts.checkFingerprint(docs.sparkSession, table.counts,
-      s"span|$k", "SpanDedup.deleteFromIndex")
-    Bucketed.appendBucketedKeys(
-      gramPositionsUncached(docs, idCol, textCol, k)
-        .groupBy(col("__gh")).agg((-count(lit(1))).as("__c")),
-      table.counts, Seq("__gh"), numBuckets)
-  }
+      textCol: String, k: Int, numBuckets: Int): Unit =
+    store(table).add(
+      windowCounts(gramPositionsUncached(docs, idCol, textCol, k)), -1L,
+      fp(k), numBuckets)
 
   /** Duplicated spans of DELTA documents against corpus ∪ delta, with the
     * corpus appearing ONLY through index probes: a delta window is
@@ -198,33 +161,18 @@ object SpanDedup {
     * run marks in these documents (corpus ≥ 1 ∨ delta ≥ 2 ⟺ total ≥ 2
     * for a position that itself counts once), so the one-shot oracle
     * restricted to the delta pins this path. Per-batch work is
-    * O(|delta windows|): one semi-join against the bucketed index + one
-    * keyed self-count. */
+    * O(|delta windows|): one net-presence probe of the bucketed index +
+    * one keyed self-count. */
   def incrementalSpans(spark: SparkSession, table: IndexTable,
       delta: DataFrame, idCol: String, textCol: String, k: Int): DataFrame = {
     // Uncached positional stream: the checkpoint below materializes it once
     // for the two probes, and its blocks free with the batch — unlike a
     // Caches entry, which a stream would accumulate per micro-batch.
     val pos = gramPositionsUncached(delta, idCol, textCol, k).localCheckpoint()
-    // Presence = NET count > 0, not row existence: the stored counts are
-    // split across ingest batches (positive parts — splitting preserves
-    // existence) AND may carry [[deleteFromIndex]]'s negative decrements
-    // (a hash whose occurrences were all deleted nets to ≤ 0 and must stop
-    // matching). Semi-join the store to the DELTA's hashes FIRST, then net
-    // only the matched groups (r12 advice): without the restriction every
-    // probe batch paid a full-store aggregation — per-batch cost growing
-    // with total distinct hashes instead of delta-matched hashes. The
-    // semi-join preserves the store scan's bucketed HashPartitioning (left
-    // side of a broadcast semi), so the aggregation still reuses it — no
-    // exchange touches the index side.
-    val present = spark.table(table.counts)
-      .join(pos.select("__gh").distinct(), Seq("__gh"), "left_semi")
-      .groupBy(col("__gh")).agg(sum(col("__c")).as("__net"))
-      .filter(col("__net") > 0L).select("__gh")
+    val present = store(table).net(spark, pos.select("__gh"), fp(k))
     val inCorpus = pos.join(present, Seq("__gh"), "left_semi")
     val inDelta = pos.join(
-      pos.groupBy(col("__gh")).agg(count(lit(1)).as("__c"))
-        .filter(col("__c") >= 2L).select("__gh"), Seq("__gh"))
+      windowCounts(pos).filter(col("__c") >= 2L).select("__gh"), Seq("__gh"))
     mergeIslands(
       inCorpus.unionAll(inDelta).select(col(idCol), col("__pos")).distinct(),
       idCol, k)
@@ -247,17 +195,9 @@ object SpanDedup {
   /** Per-delta-document span accounting over [[incrementalSpans]] — the
     * ingest-batch report: (idCol, n_tokens, n_spans, dup_tokens). */
   def incrementalSpanStats(spark: SparkSession, table: IndexTable,
-      delta: DataFrame, idCol: String, textCol: String, k: Int): DataFrame = {
-    val st = incrementalSpans(spark, table, delta, idCol, textCol, k)
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_spans"),
-        sum(col("span_end") - col("span_start") + 1).as("dup_tokens"))
-    delta.select(col(idCol), TextFunctions.tokenCount(col(textCol)).as("n_tokens"))
-      .join(st, Seq(idCol), "left")
-      .select(col(idCol), col("n_tokens"),
-        coalesce(col("n_spans"), lit(0L)).as("n_spans"),
-        coalesce(col("dup_tokens"), lit(0L)).as("dup_tokens"))
-  }
+      delta: DataFrame, idCol: String, textCol: String, k: Int): DataFrame =
+    spanStatsFrom(incrementalSpans(spark, table, delta, idCol, textCol, k),
+      delta, idCol, textCol)
 
   /** Per-document span accounting — the report a pipeline reads to decide
     * how aggressive the cut is: (idCol, n_tokens, n_spans, dup_tokens),

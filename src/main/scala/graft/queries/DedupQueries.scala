@@ -125,8 +125,7 @@ object DedupQueries extends graft.QueryModule {
     * keep its full counts — its recount gates would turn red): built over
     * the non-delta corpus, then the even-id docs are deleted by EXACT
     * DECREMENT ([[graft.operators.SpanDedup.deleteFromIndex]] — the
-    * count-store's delete mechanic; nothing to tombstone, a doc's
-    * contribution is an addend, not a row) and compacted, so the store
+    * [[graft.operators.CountStore]] delete) and compacted, so the store
     * physically holds the live corpus's net counts. */
   private object SpidxDeleteLayout {
     def ensure(s: SparkSession, dir: String): graft.operators.SpanDedup.IndexTable =

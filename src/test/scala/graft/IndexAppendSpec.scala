@@ -188,6 +188,9 @@ class IndexAppendSpec extends SparkSpec {
     intercept[IllegalArgumentException] { // a different window width
       graft.operators.SpanDedup.appendToIndex(ts, more, "id", "text", 6, 2)
     }
+    intercept[IllegalArgumentException] { // a probe at another width
+      graft.operators.SpanDedup.incrementalSpans(spark, ts, more, "id", "text", 6)
+    }
     graft.operators.SpanDedup.compactIndex(spark, ts, 2)
     assert(Layouts.readFingerprint(spark, ts.counts).contains("span|5"))
     intercept[IllegalArgumentException] {
